@@ -142,16 +142,11 @@ def build_ivf_index(
     asignados = _assign_cells(enteros, cent, keep_ev=True).select(
         "vec_id", "celda", "ev"
     )
-    # the two commits are independent (the centroid VALUES relation
-    # shares nothing with the posting frame, and enteros' checkpoint is
-    # already materialized by the scalar agg above) — overlap them
-    # (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_cent = pool.submit(lambda: cent_tx.overwrite(cent_df))
-        v = vec_tx.overwrite(asignados)
-        f_cent.result()
+    # centroids commit BEFORE postings: an in-place rebuild must never
+    # expose new postings against the old centroids to a live reader
+    # (the centroid write is k rows, so ordering costs nothing)
+    cent_tx.overwrite(cent_df)
+    v = vec_tx.overwrite(asignados)
     # vec_basis: the build corpus's id basis (max vec_id + 1), the
     # EXPLICIT doc-count basis for per-doc serve policies (ADVICE r10 —
     # 'n' grows with adds of arbitrary vec_ids, so ceil(n/G) silently
@@ -655,14 +650,9 @@ def make_serve_context(
       instead of a posting-table-adjacent scan subtree in every plan.
     * ``nprobe`` — resolved once (explicit > calibrated > default).
     * ``lex_n`` / ``lex_avgdl_mili`` — the lexical corpus constants
-      from the index metadata (one read, not one per batch).
-    * ``longitudes`` — the lengths table localCheckpoint'ed (lazily —
-      it materializes inside the first batch's job and is reused from
-      then on): the same static-side discipline run_hybrid_serve
-      already applies to inline corpus stats; bounded by corpus DOC
-      COUNT (doc_id, dl — two bigints per doc), it is the one
-      corpus-sized piece of serve state, paid once per stream instead
-      of re-planned per batch.
+      from the index metadata (one read, not one per batch). Document
+      lengths ride the posting rows, so no corpus-sized lexical state
+      is held.
 
     The context is advisory: every consumer accepts ``ctx=None`` and
     falls back to its self-contained form (the batch/one-shot paths)."""
@@ -680,19 +670,12 @@ def make_serve_context(
     ]
     if lex_path is not None:
         from etl_python_airflow_bigquery_spark.operators.lex_index import (
-            _tables as _lex_tables,
-        )
-        from etl_python_airflow_bigquery_spark.operators.lex_index import (
             lex_meta_current,
         )
 
         meta = lex_meta_current(spark, lex_path)
         ctx["lex_n"] = int(meta["n"])
         ctx["lex_avgdl_mili"] = int(meta["avgdl_mili"])
-        _, dl_tx = _lex_tables(lex_path)
-        # lazy checkpoint: materializes inside the FIRST batch's job and
-        # is reused by every later batch — no upfront stream-start job
-        ctx["longitudes"] = dl_tx.read(spark).localCheckpoint(eager=False)
     return ctx
 
 

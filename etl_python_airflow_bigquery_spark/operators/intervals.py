@@ -211,9 +211,19 @@ def interval_overlap_join(
 
     ``extra_on`` adds equi keys (e.g. a brand column) to the bucket key.
     Left columns win on name collision; callers should pre-alias.
+
+    A zero-length interval [s, s) explodes into its start bucket: the
+    exact predicate still admits it when s falls strictly inside the
+    other side, and the refine + overlap-start filter below decide
+    membership exactly.
     """
-    lb = explode_to_buckets(left, F.col(l_start), F.col(l_end), bucket_us, "__bkt")
-    rb = explode_to_buckets(right, F.col(r_start), F.col(r_end), bucket_us, "__bkt")
+
+    def buckets(df: DataFrame, s: str, e: str) -> DataFrame:
+        fin = F.greatest(F.col(e), F.col(s) + 1)
+        return explode_to_buckets(df, F.col(s), fin, bucket_us, "__bkt")
+
+    lb = buckets(left, l_start, l_end)
+    rb = buckets(right, r_start, r_end)
     if broadcast_right:
         rb = F.broadcast(rb)
     on = ["__bkt"] + (extra_on or [])

@@ -6,23 +6,30 @@ hybrid's lexical leg) rebuilds tf/dl from the documents table inline so
 the DuckDB oracle can replay the whole computation. Production does
 not: an inverted index is built offline, STORED, and served per query —
 the scan cost of a search is the QUERY TERMS' posting lists, not the
-corpus. This module is that lifecycle over the engine's own txlog
-tables:
+corpus. This module is that lifecycle over ONE txlog table plus a
+metadata file:
 
-* ``build_lex_index`` — one token explode → ``postings`` (token,
-  doc_id, tf; range-clustered on token so per-file token min/max stats
-  stay tight) + ``longitudes`` (doc_id, dl) + index metadata
-  (n docs, avgdl in milli-units).
-* ``add_to_lex_index`` — incremental growth: new documents' postings
-  and lengths append as one manifest flip each; n/avgdl maintained in
-  the metadata read-modify-write with the ann_index version-stamp
-  self-heal discipline.
+* ``postings`` (token, doc_id, tf, dl) — range-clustered on token so
+  per-file token min/max stats stay tight. The document length rides
+  every posting row, so a serve reads tf AND dl from the already-pruned
+  posting files with no per-serve join.
+* ``lex_meta.json`` — the corpus constants (n docs, Σ dl) of each live
+  postings version. A missing entry (a crash between a flip and the
+  meta write, a compaction run elsewhere, a pinned version whose entry
+  was pruned) is recomputed from that snapshot's distinct (doc_id, dl)
+  rows: one path serves current reads, pinned reads and crash recovery.
+
+* ``build_lex_index`` — one token explode → one postings overwrite.
+* ``add_to_lex_index`` — incremental growth: the new documents'
+  postings append as ONE manifest flip (atomic: there is no second
+  table to fall out of step with), then compact past the shared
+  ann_index file gate so stats pruning survives streamed ingest.
 * ``search_bm25_lex_index`` — the serve: reads ONLY the query terms'
   posting files (``TxTable.read_in`` stats pruning on token), derives
   idf from those postings, scores with the engine's integer BM25
-  (exactly busqueda_bm25's milli algebra — the index is EXACT, not
-  approximate: served output equals the brute query row for row), and
-  returns top-k via TakeOrderedAndProject.
+  (``queries.text.bm25_scorer`` — the index is EXACT, not approximate:
+  served output equals the brute query row for row), and returns top-k
+  via TakeOrderedAndProject.
 
 * ``pin_lex_version`` / ``vacuum_lex_index`` / ``maybe_auto_vacuum_lex``
   — the same operational lifecycle as the ANN index (one shared
@@ -32,9 +39,13 @@ tables:
   is the continuous face: batch-only tokenize per micro-batch, flip,
   compact past the gate, vacuum past the horizon.
 
+A postings snapshot without ``dl`` is refused (``build_lex_index``
+rebuilds it): appending dl-carrying rows onto it would read the old
+files' dl as NULL.
+
 At 100 TB: postings are token-clustered so a 3-term query touches the
-files covering 3 token ranges; ``longitudes`` joins doc-keyed on the
-candidate set; the only corpus-scale work happened once, at build.
+files covering 3 token ranges; the only corpus-scale work happened
+once, at build.
 """
 
 from __future__ import annotations
@@ -59,11 +70,8 @@ from etl_python_airflow_bigquery_spark.operators.txlog import TxTable
 _LEX_FILES = 16
 
 
-def _tables(path: str) -> tuple[TxTable, TxTable]:
-    return (
-        TxTable(f"{path}/postings", stats_cols=["token"]),
-        TxTable(f"{path}/longitudes"),
-    )
+def _postings(path: str) -> TxTable:
+    return TxTable(f"{path}/postings", stats_cols=["token"])
 
 
 def _meta_path(path: str) -> str:
@@ -79,74 +87,103 @@ def _write_meta(path: str, meta: dict) -> None:
     os.replace(tmp, _meta_path(path))
 
 
-def read_lex_meta(path: str) -> dict:
-    """{'n': doc count, 'dl_total': Σ doc lengths, 'avgdl_mili':
-    (dl_total*1000) div n, 'version': postings version the counts were
-    computed at}. Serve paths read corpus constants from HERE, never by
-    recounting the source (the ann_index read_index_meta contract)."""
-    with open(_meta_path(path)) as fh:
-        return json.load(fh)
+def _read_counts(path: str) -> dict[str, list[int]]:
+    """The metadata map {postings version: [n, dl_total]}; {} when the
+    file does not exist yet."""
+    try:
+        with open(_meta_path(path)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return {}
 
 
-def lex_meta_current(spark: SparkSession, path: str) -> dict:
-    """``read_lex_meta`` with the version-stamp self-heal (ADVICE r10
-    discipline): on version mismatch, n/dl_total recount from the
-    CURRENT longitudes snapshot and the cache heals."""
-    post_tx, dl_tx = _tables(path)
-    v = post_tx.version()
-    meta = read_lex_meta(path)
-    if meta.get("version") == v:
-        return meta
-    fila = dl_tx.read(spark).agg(
+def _record(path: str, post_tx: TxTable, counts: dict) -> None:
+    """Persist ``counts`` pruned to the versions whose manifest still
+    exists, so the map stays bounded by the (vacuumed) history. A lost
+    concurrent update only drops entries, and a dropped entry is
+    recomputed on demand."""
+    vivos = {str(v) for v in post_tx._versions()}
+    _write_meta(path, {k: x for k, x in counts.items() if k in vivos})
+
+
+def _checked_version(path: str, post_tx: TxTable, version: int | None) -> int:
+    """Resolve ``version`` (default: current) and refuse a postings
+    snapshot that predates the ``dl`` column."""
+    v = post_tx.version() if version is None else version
+    if v >= 0:
+        campos = json.loads(post_tx._manifest(v)["schema"])["fields"]
+        if not any(c["name"] == "dl" for c in campos):
+            raise ValueError(
+                f"lex index {path!r}: postings version {v} has no dl "
+                "column; rebuild the index with build_lex_index"
+            )
+    return v
+
+
+def _counts(lengths: DataFrame) -> list[int]:
+    """[n, dl_total] of a (doc_id, dl) frame with one row per document."""
+    fila = lengths.agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t")
     ).first()
-    meta["n"] = int(fila["n"])
-    meta["dl_total"] = int(fila["t"] or 0)
-    meta["avgdl_mili"] = (
-        (meta["dl_total"] * 1000) // meta["n"] if meta["n"] else 1
-    ) or 1
-    meta["version"] = v
-    _write_meta(path, meta)
-    return meta
+    return [int(fila["n"]), int(fila["t"] or 0)]
 
 
-def _resolve_dl_version(path: str, postings_version: int, dl_tx: TxTable) -> int:
-    """Map a POSTINGS version to the LENGTHS version that was current
-    when it committed. The two tables' version counters desync the
-    moment a postings-only compaction runs (``add_to_lex_index`` past
-    the file gate compacts postings but not lengths), so a pinned serve
-    or a pin tag must NOT reuse the postings version number against the
-    lengths table — it would read a lengths manifest that never existed
-    or one the vacuum is free to reclaim. The authoritative mapping is
-    persisted in the index metadata (``dl_por_version``, maintained by
-    every commit path); for pre-mapping indexes the counters were in
-    lockstep, so fall back to the same number clamped to the lengths
-    table's current version."""
-    try:
-        mapa = read_lex_meta(path).get("dl_por_version") or {}
-    except FileNotFoundError:
-        mapa = {}
-    v = mapa.get(str(postings_version))
-    if v is not None:
-        return int(v)
-    return min(postings_version, dl_tx.version())
+def _constants(v: int, n: int, dl_total: int) -> dict:
+    return {
+        "n": n,
+        "dl_total": dl_total,
+        "avgdl_mili": ((dl_total * 1000) // n if n else 1) or 1,
+        "version": v,
+    }
+
+
+def lex_meta_current(
+    spark: SparkSession, path: str, version: int | None = None
+) -> dict:
+    """Corpus constants of one postings version (default: current):
+    {'n': doc count, 'dl_total': Σ doc lengths, 'avgdl_mili':
+    (dl_total*1000) div n, 'version'}. Serve paths read them from the
+    metadata, never by recounting the source (the ann_index
+    read_index_meta contract); a version without an entry recounts
+    from its own postings snapshot — the distinct (doc_id, dl) rows —
+    and the entry is written back."""
+    post_tx = _postings(path)
+    v = _checked_version(path, post_tx, version)
+    counts = _read_counts(path)
+    if str(v) not in counts:
+        counts[str(v)] = _counts(
+            post_tx.read(spark, version=v).select("doc_id", "dl").distinct()
+        )
+        _record(path, post_tx, counts)
+    return _constants(v, *counts[str(v)])
+
+
+def _inherit(
+    path: str, post_tx: TxTable, v: int, n: int, dl_total: int
+) -> None:
+    """Record version ``v``'s counts as its manifest parent's plus
+    (n, dl_total). The parent comes from the manifest, not from a read
+    taken before the commit, so an interleaved writer cannot skew it;
+    an unknown parent leaves ``v`` unrecorded (recounted on demand)."""
+    counts = _read_counts(path)
+    base = counts.get(str(post_tx._manifest(v)["parent"]))
+    if base is not None:
+        counts[str(v)] = [base[0] + n, base[1] + dl_total]
+    _record(path, post_tx, counts)
 
 
 def _postings_frame(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(postings, longitudes) from a documents frame — the one token
+    """(postings, lengths) from a documents frame — the one token
     explode; identical algebra to the inline BM25 queries
     (queries/text.py busqueda_bm25, similarity.hibrida_corpus_stats).
 
     The postings rows carry the document length DENORMALIZED
     (token, doc_id, tf, dl): BM25's per-row score needs dl, and storing
     it next to tf means every serve reads it from the already-pruned
-    posting files instead of joining the corpus-sized ``longitudes``
-    table per call (guide §6/§3 — at 100 TB that join is a full scan of
-    one row per corpus document on every query). ``longitudes`` still
-    persists as the authority for the corpus constants (n, avgdl) and
-    for pre-denormalization readers. tf is checkpointed because BOTH
-    the dl aggregate and the postings join consume it — the old shape
-    re-tokenized the corpus once per output table anyway."""
+    posting files (guide §6/§3 — a separate lengths table would be a
+    corpus-sized join on every query). The (doc_id, dl) frame is
+    returned for the corpus-constant aggregate only. tf is checkpointed
+    because BOTH the dl aggregate and the postings join consume it."""
     tok = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("token")
     ).where(F.col("token") != "")
@@ -160,92 +197,57 @@ def _postings_frame(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def build_lex_index(spark: SparkSession, docs: DataFrame, path: str) -> dict:
-    """Tokenize + invert + persist. Returns {'n', 'avgdl_mili',
-    'version'}.
+    """Tokenize + invert + persist. Returns the new version's corpus
+    constants (the ``lex_meta_current`` dict).
 
-    The lengths write and the corpus-constant aggregate run overlapped
-    with the postings write (guide §2.6): dl materializes eagerly first
-    (its job also finalizes the shared tf checkpoint, so neither lane
-    re-tokenizes), then the two table commits and the n/avgdl scalar
-    are independent. The constants aggregate reads the dl FRAME (the
-    exact rows both writes persist) instead of re-reading the table
-    just written."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    The corpus-constant aggregate runs FIRST: its job finalizes the
+    shared tf and dl checkpoints, so the postings write reads blocks
+    instead of re-tokenizing the corpus."""
     postings, dl = _postings_frame(docs)
-    post_tx, dl_tx = _tables(path)
-    # the constants aggregate runs FIRST: its job finalizes the shared
-    # tf and dl checkpoints, so the two write lanes below read blocks
-    # instead of re-tokenizing the corpus concurrently
-    fila = dl.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t")
-    ).first()
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_post = pool.submit(
-            lambda: post_tx.overwrite(
-                postings.repartitionByRange(_LEX_FILES, "token", "doc_id")
-            )
-        )
-        dl_v = dl_tx.overwrite(dl)
-        v = f_post.result()
-    n = int(fila["n"])
-    dl_total = int(fila["t"] or 0)
-    meta = {
-        "n": n,
-        "dl_total": dl_total,
-        "avgdl_mili": ((dl_total * 1000) // n if n else 1) or 1,
-        "version": v,
-        "dl_por_version": {str(v): dl_v},
-    }
-    _write_meta(path, meta)
-    return {"n": n, "avgdl_mili": meta["avgdl_mili"], "version": v}
-
-
-def add_to_lex_index(spark: SparkSession, docs_new: DataFrame, path: str) -> int:
-    """Incremental growth: the new documents' postings and lengths
-    append — one manifest flip per table, no corpus retokenize. The
-    postings table compacts (token-range-clustered) past the shared
-    ann_index file gate so stats pruning survives streamed ingest;
-    corpus constants maintain via the version-stamped metadata RMW
-    (crash / lost-increment healed by ``lex_meta_current``)."""
-    from etl_python_airflow_bigquery_spark.operators.ann_index import (
-        _COMPACT_FILE_GATE,
+    post_tx = _postings(path)
+    n, dl_total = _counts(dl)
+    v = post_tx.overwrite(
+        postings.repartitionByRange(_LEX_FILES, "token", "doc_id")
     )
+    _record(path, post_tx, {**_read_counts(path), str(v): [n, dl_total]})
+    return _constants(v, n, dl_total)
 
+
+def compact_lex_index(spark: SparkSession, path: str) -> int:
+    """Token-range compaction of the postings once the current manifest
+    holds the shared ann_index file gate's worth of files; the
+    compacted version inherits its parent's counts (same rows). Returns
+    the current version."""
+    from etl_python_airflow_bigquery_spark.operators import ann_index as _ai
+
+    post_tx = _postings(path)
+    v = post_tx.version()
+    if len(post_tx._manifest(v)["files"]) < _ai._COMPACT_FILE_GATE:
+        return v
+    v_c = post_tx.optimize_compact(
+        spark, n_files=_LEX_FILES, cluster_col="token"
+    )
+    if v_c != v:
+        _inherit(path, post_tx, v_c, 0, 0)
+    return v_c
+
+
+def add_to_lex_index(
+    spark: SparkSession, docs_new: DataFrame, path: str
+) -> int:
+    """Incremental growth: the new documents' postings append as ONE
+    manifest flip — no corpus retokenize — and their counts land in the
+    metadata against the new version. The postings table then compacts
+    (token-range-clustered) past the shared ann_index file gate so stats
+    pruning survives streamed ingest. A crash between the flip and the
+    metadata write leaves the new version unrecorded; the next
+    ``lex_meta_current`` recounts it from the snapshot."""
+    post_tx = _postings(path)
+    _checked_version(path, post_tx, None)
     postings, dl = _postings_frame(docs_new)
-    post_tx, dl_tx = _tables(path)
-    fila = dl.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t")
-    ).first()
-    v_append = post_tx.append(postings)
-    dl_v = dl_tx.append(dl)
-    v = v_append
-    if len(post_tx._manifest(v)["files"]) >= _COMPACT_FILE_GATE:
-        v = post_tx.optimize_compact(
-            spark, n_files=_LEX_FILES, cluster_col="token"
-        )
-    try:
-        meta = read_lex_meta(path)
-        meta["n"] = meta.get("n", 0) + int(fila["n"])
-        meta["dl_total"] = meta.get("dl_total", 0) + int(fila["t"] or 0)
-        meta["avgdl_mili"] = (
-            (meta["dl_total"] * 1000) // meta["n"] if meta["n"] else 1
-        ) or 1
-        meta["version"] = v
-        # postings→lengths version map: the append AND the compacted
-        # postings version both read lengths at dl_v (compaction touches
-        # only the postings table). Prune entries whose postings
-        # manifest is gone so the map stays bounded by version history.
-        mapa = meta.get("dl_por_version") or {}
-        mapa[str(v_append)] = dl_v
-        mapa[str(v)] = dl_v
-        vivos = {str(x) for x in post_tx._versions()}
-        meta["dl_por_version"] = {
-            k: x for k, x in mapa.items() if k in vivos
-        }
-        _write_meta(path, meta)
-    except FileNotFoundError:
-        pass  # pre-meta index — serve heals via lex_meta_current
+    n, dl_total = _counts(dl)
+    _inherit(path, post_tx, post_tx.append(postings), n, dl_total)
+    v = compact_lex_index(spark, path)
     maybe_auto_vacuum_lex(path)
     return v
 
@@ -261,70 +263,31 @@ def search_bm25_lex_index(
     whose token stats admit a query term (``read_in`` — on the
     token-range-clustered table that is ~|terms|/|ranges| of the
     files), derives per-term df from those postings, scores candidates
-    with the engine's integer BM25 (same k1/b/log2-idf ladder as
-    busqueda_bm25 — the served ranking equals the brute query row for
-    row, test-pinned), and ranks via TakeOrderedAndProject. ``version``
-    pins the postings snapshot (time-travel serving)."""
-    from etl_python_airflow_bigquery_spark.queries.text import (
-        _BM25_B,
-        _BM25_K1,
-        _floor_log2_sql,
-    )
+    with the engine's integer BM25 (``bm25_scorer`` — the served
+    ranking equals the brute query row for row, test-pinned), and
+    ranks via TakeOrderedAndProject. ``version`` pins the postings
+    snapshot (time-travel serving) together with its corpus constants:
+    idf and length normalization must not leak post-pin growth."""
+    from pyspark.sql import Window as _W
 
-    post_tx, dl_tx = _tables(path)
-    if version is None:
-        meta = lex_meta_current(spark, path)
-        n, avgdl_mili = meta["n"], meta["avgdl_mili"]
-        longitudes = dl_tx.read(spark)
-    else:
-        # a pinned serve pins the WHOLE snapshot: postings, lengths,
-        # and the corpus constants (n/avgdl recomputed from the pinned
-        # longitudes — idf and length normalization must not leak
-        # post-pin growth into a time-travel read). The lengths version
-        # is RESOLVED from the postings→lengths map, never reused
-        # verbatim: postings-only compaction advances one counter and
-        # not the other.
-        longitudes = dl_tx.read(
-            spark, version=_resolve_dl_version(path, version, dl_tx)
-        )
-        fila = longitudes.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t")
-        ).first()
-        n = int(fila["n"])
-        avgdl_mili = ((int(fila["t"] or 0) * 1000) // n if n else 1) or 1
-    postings = post_tx.read_in(spark, "token", terms, version=version)
+    from etl_python_airflow_bigquery_spark.queries.text import bm25_scorer
+
+    meta = lex_meta_current(spark, path, version)
+    idf_q, score = bm25_scorer(meta["n"], meta["avgdl_mili"])
+    postings = _postings(path).read_in(
+        spark, "token", terms, version=meta["version"]
+    )
     # df via a token-partitioned window over the same pruned posting
     # rows the scoring consumes (one read of the pruned files instead
     # of two — posting lists are unique per (token, doc), so the window
-    # count equals the old groupBy df exactly); idf computes inline
-    from pyspark.sql import Window as _W
-
-    con_df = postings.withColumn(
-        "df", F.count(F.lit(1)).over(_W.partitionBy("token"))
-    ).withColumn(
-        "idf_q",
-        F.expr(
-            _floor_log2_sql(
-                f"greatest(1L, ({n}L * 1000) div (df * 1000 + 500))"
-            )
-        ).cast("bigint"),
-    )
-    tf_comp = (
-        f"(tf * {_BM25_K1 + 1000}L * 1000) div (tf * 1000 + "
-        f"({_BM25_K1} * (1000 - {_BM25_B} + "
-        f"(({_BM25_B} * dl * 1000) div {avgdl_mili}L))) div 1000)"
-    )
-    # dl rides the posting row (denormalized at build) — no corpus-sized
-    # lengths join per serve; pre-denormalization snapshots fall back
-    if "dl" not in con_df.columns:
-        con_df = con_df.join(longitudes, "doc_id")
+    # count equals a groupBy df exactly); idf computes inline
     scored = (
-        con_df
-        .groupBy("doc_id")
-        .agg(
-            F.sum(F.expr(f"({tf_comp}) * idf_q")).cast("bigint")
-            .alias("score_mili")
+        postings.withColumn(
+            "df", F.count(F.lit(1)).over(_W.partitionBy("token"))
         )
+        .withColumn("idf_q", idf_q)
+        .groupBy("doc_id")
+        .agg(score.alias("score_mili"))
     )
     return ranked_topk(
         scored, topk, [F.desc("score_mili"), F.col("doc_id")], "pos"
@@ -357,21 +320,14 @@ def hibrida_lexical_top_multi_indexada(
     (exact index ⇒ row-identical output, test-pinned)."""
     from pyspark.sql import Window
 
-    from etl_python_airflow_bigquery_spark.queries.text import (
-        _BM25_B,
-        _BM25_K1,
-        _floor_log2_sql,
-    )
+    from etl_python_airflow_bigquery_spark.queries.text import bm25_scorer
     from etl_python_airflow_bigquery_spark.tables import load_table
 
-    post_tx, dl_tx = _tables(path)
     if ctx is not None and "lex_n" in ctx:
         n, avgdl_mili = ctx["lex_n"], ctx["lex_avgdl_mili"]
-        longitudes = ctx["longitudes"]
     else:
         meta = lex_meta_current(spark, path)
         n, avgdl_mili = meta["n"], meta["avgdl_mili"]
-        longitudes = dl_tx.read(spark)
 
     docs = load_table(spark, sf_dir, "documents")
     consulta = (
@@ -402,7 +358,7 @@ def hibrida_lexical_top_multi_indexada(
         terms = [
             r["token"] for r in consulta.select("token").distinct().collect()
         ]
-    postings = post_tx.read_in(spark, "token", terms)
+    postings = _postings(path).read_in(spark, "token", terms)
     # df via a token-partitioned window over the SAME pruned posting
     # rows the scoring consumes (guide §2.4: the old groupBy-df subtree
     # re-read every pruned posting file a second time; posting lists are
@@ -416,33 +372,16 @@ def hibrida_lexical_top_multi_indexada(
     # profiling ever shows it, pre-aggregate df per (token, doc-bucket)
     # and sum, or salt; at current scales the pruned per-term lists are
     # far below task size.
-    w_df = Window.partitionBy("token")
-    con_df = postings.withColumn(
-        "df", F.count(F.lit(1)).over(w_df)
-    ).withColumn(
-        "idf_q",
-        F.expr(
-            _floor_log2_sql(
-                f"greatest(1L, ({n}L * 1000) div (df * 1000 + 500))"
-            )
-        ).cast("bigint"),
-    )
-    tf_comp = (
-        f"(tf * {_BM25_K1 + 1000}L * 1000) div (tf * 1000 + "
-        f"({_BM25_K1} * (1000 - {_BM25_B} + "
-        f"(({_BM25_B} * dl * 1000) div {avgdl_mili}L))) div 1000)"
-    )
-    # dl rides the posting row (denormalized at build) — no corpus-sized
-    # lengths join per serve; pre-denormalization snapshots fall back
-    puntuable = con_df.join(F.broadcast(consulta), "token").where(
-        F.col("doc_id") != F.col("query_id")
-    )
-    if "dl" not in con_df.columns:
-        puntuable = puntuable.join(longitudes, "doc_id")
+    idf_q, score = bm25_scorer(n, avgdl_mili)
     scored = (
-        puntuable
+        postings.withColumn(
+            "df", F.count(F.lit(1)).over(Window.partitionBy("token"))
+        )
+        .withColumn("idf_q", idf_q)
+        .join(F.broadcast(consulta), "token")
+        .where(F.col("doc_id") != F.col("query_id"))
         .groupBy("query_id", "doc_id")
-        .agg(F.sum(F.expr(f"({tf_comp}) * idf_q")).alias("score"))
+        .agg(score.alias("score"))
     )
     w_lex = Window.partitionBy("query_id").orderBy(F.desc("score"), "doc_id")
     return (
@@ -453,49 +392,37 @@ def hibrida_lexical_top_multi_indexada(
 
 
 def pin_lex_version(path: str, name: str, version: int | None = None) -> int:
-    """PIN a postings/lengths snapshot against vacuum — the lexical twin
-    of ``ann_index.pin_index_version``: tags are GC roots at the table
+    """PIN a postings snapshot against vacuum — the lexical twin of
+    ``ann_index.pin_index_version``: tags are GC roots at the table
     layer, so a pinned version's manifest and data files survive ANY
     vacuum horizon until ``unpin_lex_version``. This is the survival
     contract for time-travel serving (``search_bm25_lex_index(version=)``
-    pins idf/avgdl/postings to one snapshot). Pins the POSTINGS version
-    given (default: current) and the lengths version the pinned serve
-    will actually read — resolved through the metadata's
-    postings→lengths version map, because a postings-only compaction
-    desyncs the two tables' counters — under the same name; returns the
-    pinned postings version."""
-    post_tx, dl_tx = _tables(path)
+    pins idf/avgdl/postings to one snapshot). Pins the postings version
+    given (default: current); returns it."""
+    post_tx = _postings(path)
     v = post_tx.version() if version is None else version
     post_tx.create_tag(name, v)
-    dl_tx.create_tag(name, _resolve_dl_version(path, v, dl_tx))
     return v
 
 
 def unpin_lex_version(path: str, name: str) -> None:
     """Release a ``pin_lex_version`` pin; the next vacuum may reclaim
     the snapshot once it falls outside the keep horizon."""
-    post_tx, dl_tx = _tables(path)
-    post_tx.delete_tag(name)
-    dl_tx.delete_tag(name)
+    _postings(path).delete_tag(name)
 
 
 def vacuum_lex_index(
     path: str, keep_versions: int = 8, retention_s: float = 3600.0
-) -> dict:
-    """Reclaim posting/length files no surviving version references —
-    same lifecycle stage and same generous default horizon as
+) -> int:
+    """Reclaim posting files no surviving version references — same
+    lifecycle stage and same generous default horizon as
     ``ann_index.vacuum_index`` (version-pinned serving is first-class;
     tag a snapshot via ``pin_lex_version`` to exempt it from any
-    horizon). Returns {'postings': n_removed, 'longitudes': n_removed}.
-    """
-    post_tx, dl_tx = _tables(path)
-    return {
-        "postings": post_tx.vacuum(keep_versions, retention_s),
-        "longitudes": dl_tx.vacuum(keep_versions, retention_s),
-    }
+    horizon). Returns the number of files removed."""
+    return _postings(path).vacuum(keep_versions, retention_s)
 
 
-def maybe_auto_vacuum_lex(path: str) -> dict | None:
+def maybe_auto_vacuum_lex(path: str) -> int | None:
     """Run ``vacuum_lex_index`` iff the postings table's manifest count
     exceeds the SHARED keep+slack gate (one policy governs both index
     families — the knobs live on ``operators.ann_index``). Called from
@@ -503,8 +430,8 @@ def maybe_auto_vacuum_lex(path: str) -> dict | None:
     the lexical index also bounds its on-disk footprint."""
     from etl_python_airflow_bigquery_spark.operators import ann_index as _ai
 
-    post_tx, _ = _tables(path)
-    if len(post_tx._versions()) < _ai._AUTO_VACUUM_KEEP + _ai._AUTO_VACUUM_SLACK:
+    versiones = len(_postings(path)._versions())
+    if versiones < _ai._AUTO_VACUUM_KEEP + _ai._AUTO_VACUUM_SLACK:
         return None
     return vacuum_lex_index(
         path,

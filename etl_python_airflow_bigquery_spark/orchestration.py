@@ -203,20 +203,11 @@ def maintenance_pipeline(
         )
 
     def _lex_compact() -> None:
-        from etl_python_airflow_bigquery_spark.operators.ann_index import (
-            _COMPACT_FILE_GATE,
-        )
         from etl_python_airflow_bigquery_spark.operators.lex_index import (
-            _LEX_FILES,
-            _tables,
+            compact_lex_index,
         )
 
-        post_tx, _ = _tables(lex_path)
-        v = post_tx.version()
-        if len(post_tx._manifest(v)["files"]) >= _COMPACT_FILE_GATE:
-            post_tx.optimize_compact(
-                spark, n_files=_LEX_FILES, cluster_col="token"
-            )
+        compact_lex_index(spark, lex_path)
 
     def _lex_vacuum() -> None:
         from etl_python_airflow_bigquery_spark.operators.lex_index import (

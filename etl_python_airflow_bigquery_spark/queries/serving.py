@@ -668,9 +668,7 @@ def busqueda_bm25_indexada(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-identical to busqueda_bm25 and the oracle is the SAME SQL —
     the exactness of the index IS the correctness claim."""
     from etl_python_airflow_bigquery_spark.operators.lex_index import (
-        _tables as _lex_tables,
-    )
-    from etl_python_airflow_bigquery_spark.operators.lex_index import (
+        _postings,
         lex_meta_current,
         search_bm25_lex_index,
     )
@@ -687,9 +685,8 @@ def busqueda_bm25_indexada(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 #5) and a warm serve pays only the terms' posting reads
     terms = _SERVE_CTX_CACHE.get(("terms", path))
     if terms is None:
-        post_tx, _ = _lex_tables(path)
         n = lex_meta_current(spark, path)["n"]
-        df_t = post_tx.read(spark).groupBy("token").agg(
+        df_t = _postings(path).read(spark).groupBy("token").agg(
             F.count(F.lit(1)).alias("df")
         )
         terms = [

@@ -612,10 +612,8 @@ def hibrida_lexical_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from the shared ``hibrida_corpus_stats`` (one tf/dl/n/avgdl
     definition with the multi-query and streaming forms)."""
     from etl_python_airflow_bigquery_spark.queries.text import (
-        _BM25_B,
-        _BM25_K1,
         _BM25_TOP,
-        _floor_log2_sql,
+        bm25_scorer,
     )
 
     tf, dl, n, avgdl_mili = hibrida_corpus_stats(spark, sf_dir)
@@ -625,23 +623,14 @@ def hibrida_lexical_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     df_t = tf.join(F.broadcast(consulta), "token").groupBy("token").agg(
         F.count(F.lit(1)).alias("df")
     )
-    pesos = df_t.select(
-        "token",
-        F.expr(
-            _floor_log2_sql(f"greatest(1L, ({n}L * 1000) div (df * 1000 + 500))")
-        ).cast("bigint").alias("idf_q"),
-    )
-    tf_comp = (
-        f"(tf * {_BM25_K1 + 1000}L * 1000) div (tf * 1000 + "
-        f"({_BM25_K1} * (1000 - {_BM25_B} + "
-        f"(({_BM25_B} * dl * 1000) div {avgdl_mili}L))) div 1000)"
-    )
+    idf_q, score = bm25_scorer(n, avgdl_mili)
+    pesos = df_t.select("token", idf_q)
     scored = (
         tf.where(F.col("doc_id") != _HIB_Q)
         .join(F.broadcast(pesos), "token")
         .join(dl, "doc_id")
         .groupBy("doc_id")
-        .agg(F.sum(F.expr(f"({tf_comp}) * idf_q")).alias("score"))
+        .agg(score.alias("score"))
     )
     # top-k via TakeOrderedAndProject, never a single-task full sort of
     # the candidate set (for common query terms ≈ the corpus) — the
@@ -741,10 +730,8 @@ def hibrida_lexical_top_multi(
     precomputed ``hibrida_corpus_stats`` tuple — pass it when serving
     many batches so the corpus scan happens once."""
     from etl_python_airflow_bigquery_spark.queries.text import (
-        _BM25_B,
-        _BM25_K1,
         _BM25_TOP,
-        _floor_log2_sql,
+        bm25_scorer,
     )
 
     tf, dl, n, avgdl_mili = (
@@ -760,23 +747,14 @@ def hibrida_lexical_top_multi(
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("df"))
     )
-    pesos = df_t.select(
-        "token",
-        F.expr(
-            _floor_log2_sql(f"greatest(1L, ({n}L * 1000) div (df * 1000 + 500))")
-        ).cast("bigint").alias("idf_q"),
-    )
-    tf_comp = (
-        f"(tf * {_BM25_K1 + 1000}L * 1000) div (tf * 1000 + "
-        f"({_BM25_K1} * (1000 - {_BM25_B} + "
-        f"(({_BM25_B} * dl * 1000) div {avgdl_mili}L))) div 1000)"
-    )
+    idf_q, score = bm25_scorer(n, avgdl_mili)
+    pesos = df_t.select("token", idf_q)
     scored = (
         tf.join(F.broadcast(consulta.join(pesos, "token")), "token")
         .where(F.col("doc_id") != F.col("query_id"))
         .join(dl, "doc_id")
         .groupBy("query_id", "doc_id")
-        .agg(F.sum(F.expr(f"({tf_comp}) * idf_q")).alias("score"))
+        .agg(score.alias("score"))
     )
     w_lex = Window.partitionBy("query_id").orderBy(F.desc("score"), "doc_id")
     return (

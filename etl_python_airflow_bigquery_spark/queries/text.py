@@ -1622,6 +1622,30 @@ def _floor_log2_sql(expr: str) -> str:
     return f"(CASE {branches} ELSE 0 END)"
 
 
+def bm25_scorer(n: int, avgdl_mili: int) -> tuple[Column, Column]:
+    """The engine's integer BM25 as Spark columns — the ONE Spark-side
+    definition, shared by the brute queries (busqueda_bm25, the
+    retrieval eval, the hybrid lexical rankers) and the stored-index
+    serves (operators/lex_index.py). The DuckDB oracles keep their own
+    SQL copy as the independent check. Returns (idf_q, score):
+
+    * ``idf_q`` — reads a ``df`` column: floor(log2) of the integer odds
+      ratio (n·1000) div (df·1000 + 500), clamped to ≥ 1 before the log;
+      aliased ``idf_q``.
+    * ``score`` — the aggregate Σ over a group's matched term rows of
+      the k1-saturated, b-length-normalized tf (milli-units, floor
+      division) × ``idf_q``; reads ``tf``, ``dl`` and ``idf_q``."""
+    idf_q = F.expr(
+        _floor_log2_sql(f"greatest(1L, ({n}L * 1000) div (df * 1000 + 500))")
+    ).cast("bigint").alias("idf_q")
+    tf_comp = (
+        f"(tf * {_BM25_K1 + 1000}L * 1000) div (tf * 1000 + "
+        f"({_BM25_K1} * (1000 - {_BM25_B} + "
+        f"(({_BM25_B} * dl * 1000) div {avgdl_mili}L))) div 1000)"
+    )
+    return idf_q, F.sum(F.expr(f"({tf_comp}) * idf_q")).cast("bigint")
+
+
 _BM25_ORACLE = f"""
 WITH tok AS (
     SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
@@ -1701,25 +1725,13 @@ def busqueda_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         df_t.where(F.col("df") * 20 >= n).orderBy("df", "token")
         .limit(_BM25_TERMS)
     )
-    pesos = consulta.select(
-        "token",
-        F.expr(
-            _floor_log2_sql(f"greatest(1L, ({n}L * 1000) div (df * 1000 + 500))")
-        ).cast("bigint").alias("idf_q"),
-    )
-    tf_comp = (
-        f"(tf * {_BM25_K1 + 1000}L * 1000) div (tf * 1000 + "
-        f"({_BM25_K1} * (1000 - {_BM25_B} + "
-        f"(({_BM25_B} * dl * 1000) div {avgdl_mili}L))) div 1000)"
-    )
+    idf_q, score = bm25_scorer(n, avgdl_mili)
+    pesos = consulta.select("token", idf_q)
     puntos = (
         tf.join(F.broadcast(pesos), "token")
         .join(dl, "doc_id")
         .groupBy("doc_id")
-        .agg(
-            F.sum(F.expr(f"({tf_comp}) * idf_q")).cast("bigint")
-            .alias("score_mili")
-        )
+        .agg(score.alias("score_mili"))
     )
     # TakeOrderedAndProject over the scored candidates — never a
     # single-task full sort (VERDICT r11)
@@ -1852,25 +1864,14 @@ def _rankings_retrieval(spark: SparkSession, sf_dir: str):
         df_t.where(F.col("df") * 20 >= n).orderBy("df", "token")
         .limit(_BM25_TERMS)
     )
-    pesos = consulta.select(
-        "token",
-        "df",
-        F.expr(
-            _floor_log2_sql(f"greatest(1L, ({n}L * 1000) div (df * 1000 + 500))")
-        ).cast("bigint").alias("idf_q"),
-    )
-    tf_comp = (
-        f"(tf * {_BM25_K1 + 1000}L * 1000) div (tf * 1000 + "
-        f"({_BM25_K1} * (1000 - {_BM25_B} + "
-        f"(({_BM25_B} * dl * 1000) div {avgdl_mili}L))) div 1000)"
-    )
+    idf_q, score = bm25_scorer(n, avgdl_mili)
+    pesos = consulta.select("token", "df", idf_q)
     puntos = (
         tf.join(F.broadcast(pesos), "token")
         .join(dl, "doc_id")
         .groupBy("doc_id")
         .agg(
-            F.sum(F.expr(f"({tf_comp}) * idf_q")).cast("bigint")
-            .alias("score_mili"),
+            score.alias("score_mili"),
             F.sum(F.expr("tf * (1000000L div df)")).cast("bigint")
             .alias("score_ex"),
         )

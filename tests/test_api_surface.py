@@ -225,3 +225,46 @@ def test_every_survey2_op_has_a_coverage_row():
         cov = fh.read()
     absent = sorted(t for t in tags if f"| {t} |" not in cov)
     assert absent == [], f"SURVEY §2 tags missing from COVERAGE.md: {absent}"
+
+
+def test_bm25_expressions_have_one_spark_side_home():
+    """The integer BM25 tf-saturation and idf expressions are built in
+    exactly one Spark-side function (queries.text.bm25_scorer), shared
+    by the brute queries and the stored-index serves. Spark SQL writes
+    integer division as ``div``; the DuckDB oracles (``//``) keep their
+    own copy as the independent check and are not matched here."""
+    import ast
+    import re
+
+    import etl_python_airflow_bigquery_spark as pkg
+
+    firmas = {
+        "tf saturation": re.compile(r"div \(tf \* 1000 \+"),
+        "idf ladder": re.compile(r"div \(df \* 1000 \+ 500\)"),
+    }
+    raiz = os.path.dirname(pkg.__file__)
+    hogares = {k: set() for k in firmas}
+    for carpeta, _dirs, files in os.walk(raiz):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            ruta = os.path.join(carpeta, f)
+            src = open(ruta).read()
+            funcs = [
+                n for n in ast.walk(ast.parse(src))
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+            for k, rx in firmas.items():
+                for m in rx.finditer(src):
+                    linea = src.count("\n", 0, m.start()) + 1
+                    dentro = [
+                        fn for fn in funcs
+                        if fn.lineno <= linea <= fn.end_lineno
+                    ]
+                    nombre = (
+                        min(dentro, key=lambda fn: fn.end_lineno - fn.lineno).name
+                        if dentro else "<module>"
+                    )
+                    hogares[k].add((os.path.relpath(ruta, raiz), nombre))
+    for k, donde in hogares.items():
+        assert donde == {("queries/text.py", "bm25_scorer")}, (k, sorted(donde))

@@ -6,7 +6,7 @@ and duplicate none (SURVEY.md §7.4.1)."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -19,7 +19,7 @@ BUCKET = 100  # tiny bucket width so intervals frequently span buckets
 
 interval = st.tuples(
     st.integers(min_value=0, max_value=1000),
-    st.integers(min_value=1, max_value=350),
+    st.integers(min_value=0, max_value=350),
 ).map(lambda t: (t[0], t[0] + t[1]))
 
 
@@ -28,6 +28,8 @@ interval = st.tuples(
     lefts=st.lists(interval, min_size=1, max_size=12),
     rights=st.lists(interval, min_size=1, max_size=12),
 )
+# zero-length intervals strictly inside the other side, on both sides
+@example(lefts=[(150, 150), (0, 400)], rights=[(100, 300), (250, 250)])
 def test_bucketed_join_equals_bruteforce(spark_prop, lefts, rights):
     spark = spark_prop
     ldf = spark.createDataFrame(

@@ -1,26 +1,26 @@
 """Persistent lexical (inverted-postings) index lifecycle
-(operators/lex_index.py): build once, serve from the stored tables
+(operators/lex_index.py): build once, serve from the stored postings
 only, append without retokenizing the corpus, stats-pruned posting
 reads — the BM25 twin of test_ann_index.py."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_python_airflow_bigquery_spark.operators.lex_index import (
-    _tables,
+    _postings,
     add_to_lex_index,
     build_lex_index,
     lex_meta_current,
-    read_lex_meta,
     search_bm25_lex_index,
 )
 from etl_python_airflow_bigquery_spark.tables import load_table
 
 
 def _terms_for(spark, path, k=3):
-    post_tx, _ = _tables(path)
-    n = read_lex_meta(path)["n"]
+    post_tx = _postings(path)
+    n = lex_meta_current(spark, path)["n"]
     df_t = post_tx.read(spark).groupBy("token").agg(
         F.count(F.lit(1)).alias("df")
     )
@@ -40,6 +40,10 @@ def test_build_and_serve_equals_brute_bm25(spark, sf_dir, tmp_path):
     path = str(tmp_path / "lex")
     stats = build_lex_index(spark, docs, path)
     assert stats["n"] == docs.count() and stats["version"] == 0
+    import os
+
+    # the whole index: one txlog table plus its metadata file
+    assert sorted(os.listdir(path)) == ["lex_meta.json", "postings"]
 
     got = sorted(
         map(tuple, search_bm25_lex_index(
@@ -59,7 +63,7 @@ def test_serve_reads_only_query_term_files(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents")
     path = str(tmp_path / "lex")
     build_lex_index(spark, docs, path)
-    post_tx, _ = _tables(path)
+    post_tx = _postings(path)
     total = len(post_tx._manifest(post_tx.version())["files"])
     assert total > 1  # range clustering produced a multi-file layout
     pruned = post_tx.read_in(spark, "token", _terms_for(spark, path))
@@ -70,7 +74,7 @@ def test_append_equals_rebuild_and_meta_heals(spark, sf_dir, tmp_path):
     """Incremental growth: building on half the corpus then appending
     the other half serves exactly like a from-scratch build (the
     posting algebra is per-document); metadata maintains n/avgdl and
-    self-heals from a stale version stamp."""
+    a lost entry heals by recount from the postings snapshot."""
     docs = load_table(spark, sf_dir, "documents")
     mitad_a = docs.where(F.col("doc_id") % 2 == 0)
     mitad_b = docs.where(F.col("doc_id") % 2 == 1)
@@ -81,25 +85,25 @@ def test_append_equals_rebuild_and_meta_heals(spark, sf_dir, tmp_path):
     full = str(tmp_path / "full")
     build_lex_index(spark, docs, full)
 
-    assert read_lex_meta(inc)["n"] == read_lex_meta(full)["n"]
-    assert read_lex_meta(inc)["avgdl_mili"] == read_lex_meta(full)["avgdl_mili"]
+    meta_full = lex_meta_current(spark, full)
+    meta_inc = lex_meta_current(spark, inc)
+    assert meta_inc["n"] == meta_full["n"]
+    assert meta_inc["avgdl_mili"] == meta_full["avgdl_mili"]
     terms = _terms_for(spark, full)
     a = sorted(map(tuple, search_bm25_lex_index(spark, terms, inc).collect()))
     b = sorted(map(tuple, search_bm25_lex_index(spark, terms, full).collect()))
     assert a == b
 
-    # stale meta (simulated lost RMW) heals by snapshot recount
-    import json
+    # a lost entry (simulated lost RMW) heals by snapshot recount
     from etl_python_airflow_bigquery_spark.operators.lex_index import (
-        _meta_path,
+        _read_counts,
         _write_meta,
     )
 
-    meta = json.load(open(_meta_path(inc)))
-    meta["n"], meta["version"] = 1, -99
-    _write_meta(inc, meta)
+    _write_meta(inc, {})
     healed = lex_meta_current(spark, inc)
-    assert healed["n"] == read_lex_meta(full)["n"]
+    assert healed == meta_inc
+    assert str(meta_inc["version"]) in _read_counts(inc)  # written back
 
 
 def test_version_pinned_lexical_serve(spark, sf_dir, tmp_path):
@@ -208,9 +212,9 @@ def test_lex_auto_vacuum_soak_bounded_files_and_pinned_reader(
         add_to_lex_index(spark, lote, path)
         conteos.append(files_on_disk())
 
-    post_tx, _ = _tables(path)
+    post_tx = _postings(path)
     assert conteos[-1] <= max(conteos)
-    assert conteos[-1] < 2 * 2 * 24  # two tables, no-GC worst case
+    assert conteos[-1] < 2 * 24  # under a file + a manifest per add: GC ran
     assert len(post_tx._versions()) <= 3 + 2 + 1
 
     # the pinned snapshot still serves the original ranking
@@ -235,16 +239,12 @@ def test_lex_auto_vacuum_soak_bounded_files_and_pinned_reader(
 def test_pin_after_compaction_survives_vacuum_desynced_counters(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """ADVICE-r12 (high): postings-only compaction advances the
-    postings version counter past the lengths counter. A pin taken at
-    the CURRENT postings version after such a compaction must tag the
-    lengths version the serve actually reads (via the metadata's
-    postings→lengths map), so the pinned time-travel serve (a) never
-    asks the lengths table for a version that does not exist and (b)
-    provably survives vacuum cycles that reclaim untagged history."""
+    """ADVICE-r12 (high): a pin taken at the CURRENT postings version
+    after compactions (two postings versions per add) must survive
+    vacuum cycles that reclaim untagged history, and the pinned
+    time-travel serve must keep returning the pinned ranking."""
     from etl_python_airflow_bigquery_spark.operators import ann_index as ai
     from etl_python_airflow_bigquery_spark.operators.lex_index import (
-        _resolve_dl_version,
         maybe_auto_vacuum_lex,
         pin_lex_version,
     )
@@ -254,8 +254,7 @@ def test_pin_after_compaction_survives_vacuum_desynced_counters(
     build_lex_index(spark, docs.where(F.col("doc_id") % 2 == 0), path)
     # force a compaction on EVERY add: any append puts the postings
     # manifest past the gate, so the postings counter advances twice
-    # per add while the lengths counter advances once — guaranteed
-    # desync after the first batch
+    # per add
     monkeypatch.setattr(ai, "_COMPACT_FILE_GATE", 2)
 
     base = docs.where(F.col("doc_id") % 2 == 1).limit(20)
@@ -266,22 +265,15 @@ def test_pin_after_compaction_survives_vacuum_desynced_counters(
         )
         add_to_lex_index(spark, lote, path)
 
-    post_tx, dl_tx = _tables(path)
-    assert post_tx.version() > dl_tx.version()  # counters ARE desynced
-
     terms = _terms_for(spark, path)
     pinned_v = pin_lex_version(path, "release_post_compact")
-    # the resolved lengths version must exist (the raw postings number
-    # does not, in the lengths table's history)
-    dl_v = _resolve_dl_version(path, pinned_v, dl_tx)
-    assert dl_v in dl_tx._versions() and dl_v == dl_tx.version()
     quiero = sorted(map(tuple, search_bm25_lex_index(
         spark, terms, path, version=pinned_v
     ).collect()))
     assert quiero
 
     # grow + vacuum aggressively; the pinned serve must keep returning
-    # the pinned ranking (both tables' tagged snapshots are GC roots)
+    # the pinned ranking (the tagged snapshot is a GC root)
     monkeypatch.setattr(ai, "_AUTO_VACUUM_KEEP", 2)
     monkeypatch.setattr(ai, "_AUTO_VACUUM_SLACK", 1)
     monkeypatch.setattr(ai, "_AUTO_VACUUM_RETENTION_S", 0.0)
@@ -299,12 +291,67 @@ def test_pin_after_compaction_survives_vacuum_desynced_counters(
     assert got == quiero
 
 
+def test_pre_dl_index_is_refused(spark, sf_dir, tmp_path):
+    """A postings snapshot without the dl column cannot be grown or
+    served: an append would read the old files' dl as NULL and a serve
+    would rank without length normalization. Both raise, naming the
+    rebuild, and the refused add commits nothing."""
+    docs = load_table(spark, sf_dir, "documents")
+    path = str(tmp_path / "lex")
+    build_lex_index(spark, docs.where(F.col("doc_id") % 2 == 0), path)
+    terms = _terms_for(spark, path)
+    post_tx = _postings(path)
+    post_tx.overwrite(post_tx.read(spark).drop("dl"))
+    v = post_tx.version()
+
+    with pytest.raises(ValueError, match="build_lex_index"):
+        add_to_lex_index(spark, docs.where(F.col("doc_id") % 2 == 1), path)
+    assert post_tx.version() == v
+    with pytest.raises(ValueError, match="build_lex_index"):
+        search_bm25_lex_index(spark, terms, path).collect()
+
+
+def test_crash_before_meta_write_serves_like_fresh_build(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A crash between the add's postings flip and its metadata write
+    leaves the new version without counts; the next serve recounts
+    n/avgdl from that postings snapshot and equals a fresh build over
+    the same documents."""
+    from etl_python_airflow_bigquery_spark.operators import lex_index as li
+
+    docs = load_table(spark, sf_dir, "documents")
+    inc = str(tmp_path / "inc")
+    build_lex_index(spark, docs.where(F.col("doc_id") % 2 == 0), inc)
+    v0 = _postings(inc).version()
+
+    def crash(path, meta):
+        raise OSError("injected crash before the meta write")
+
+    with monkeypatch.context() as m:
+        m.setattr(li, "_write_meta", crash)
+        with pytest.raises(OSError, match="injected"):
+            add_to_lex_index(spark, docs.where(F.col("doc_id") % 2 == 1), inc)
+    assert _postings(inc).version() == v0 + 1  # the flip landed
+
+    full = str(tmp_path / "full")
+    build_lex_index(spark, docs, full)
+    terms = _terms_for(spark, full)
+    got = sorted(map(tuple, search_bm25_lex_index(spark, terms, inc).collect()))
+    want = sorted(map(tuple, search_bm25_lex_index(spark, terms, full).collect()))
+    assert got == want and got
+    meta_inc, meta_full = lex_meta_current(spark, inc), lex_meta_current(spark, full)
+    assert (meta_inc["n"], meta_inc["dl_total"]) == (
+        meta_full["n"], meta_full["dl_total"]
+    )
+
+
 def test_streaming_lex_ingest_grows_index_and_replays_as_noop(
     spark, sf_dir, tmp_path
 ):
     """run_lex_ingest: documents stream into the persistent lexical
     index batch-by-batch (batch-only tokenize, one manifest flip per
-    micro-batch per table); after draining, the served BM25 over the
+    micro-batch); after draining, the served BM25 over the
     streamed-complete corpus equals the brute registry query row for
     row, and replaying the drained stream from its checkpoint is a
     no-op (file-tracking idempotency)."""
@@ -316,7 +363,7 @@ def test_streaming_lex_ingest_grows_index_and_replays_as_noop(
     docs = load_table(spark, sf_dir, "documents")
     path = str(tmp_path / "lex")
     build_lex_index(spark, docs.where(F.col("doc_id") % 2 == 0), path)
-    post_tx, _ = _tables(path)
+    post_tx = _postings(path)
     v0 = post_tx.version()
 
     src = str(tmp_path / "stream")
@@ -331,7 +378,7 @@ def test_streaming_lex_ingest_grows_index_and_replays_as_noop(
     ck = str(tmp_path / "ck")
     run_lex_ingest(spark, src, path, ck)
     assert post_tx.version() == v0 + 2  # one flip per micro-batch
-    assert read_lex_meta(path)["n"] == docs.count()
+    assert lex_meta_current(spark, path)["n"] == docs.count()
 
     # streamed-complete corpus == the brute query's corpus ⇒ identical
     # ranking (the index is exact, not approximate)
@@ -344,7 +391,7 @@ def test_streaming_lex_ingest_grows_index_and_replays_as_noop(
     assert got == want
 
     # crash-replay: re-running the drained stream moves nothing
-    n_antes = read_lex_meta(path)["n"]
+    n_antes = lex_meta_current(spark, path)["n"]
     run_lex_ingest(spark, src, path, ck)
     assert post_tx.version() == v0 + 2
-    assert read_lex_meta(path)["n"] == n_antes
+    assert lex_meta_current(spark, path)["n"] == n_antes

@@ -56,7 +56,7 @@ def test_interleaved_multi_table_soak(spark, sf_dir, tmp_path, monkeypatch):
         search_ivf_index,
     )
     from etl_python_airflow_bigquery_spark.operators.lex_index import (
-        _tables as lex_tables,
+        _postings as lex_postings,
     )
     from etl_python_airflow_bigquery_spark.operators.lex_index import (
         add_to_lex_index,
@@ -111,7 +111,7 @@ def test_interleaved_multi_table_soak(spark, sf_dir, tmp_path, monkeypatch):
     app = "soak_sink"
 
     _, vec_tx = ann_tables(ann_path)
-    post_tx, _ = lex_tables(lex_path)
+    post_tx = lex_postings(lex_path)
 
     for ciclo in range(8):
         # one table per cycle gets its NEXT flip killed; the schedule

@@ -123,7 +123,7 @@ def test_operational_rehearsal_end_to_end(spark, sf_dir, tmp_path):
         read_dedup_labels,
     )
     from etl_python_airflow_bigquery_spark.operators.lex_index import (
-        read_lex_meta,
+        lex_meta_current,
     )
     from etl_python_airflow_bigquery_spark.operators.txlog import TxTable
     from etl_python_airflow_bigquery_spark.orchestration import (
@@ -145,7 +145,7 @@ def test_operational_rehearsal_end_to_end(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings")
 
     # the lexical index ingested the whole doc feed (n == corpus)
-    assert read_lex_meta(work + "/lex")["n"] == docs.count()
+    assert lex_meta_current(spark, work + "/lex")["n"] == docs.count()
 
     # the ANN postings grew by the feed's NON-duplicate arrivals only
     # (the semantic gate may drop near-dups): base < count <= corpus

@@ -26,7 +26,7 @@ def main() -> int:
         read_dedup_labels,
     )
     from etl_python_airflow_bigquery_spark.operators.lex_index import (
-        read_lex_meta,
+        lex_meta_current,
     )
     from etl_python_airflow_bigquery_spark.operators.txlog import TxTable
     from etl_python_airflow_bigquery_spark.orchestration import (
@@ -54,7 +54,7 @@ def main() -> int:
         "state": {
             "docs": docs.count(),
             "vectors": emb.count(),
-            "lex_n": read_lex_meta(os.path.join(work, "lex"))["n"],
+            "lex_n": lex_meta_current(spark, os.path.join(work, "lex"))["n"],
             "ann_postings": vec_tx.read(spark).count(),
             "dedup_labels": read_dedup_labels(
                 spark, os.path.join(work, "dedup")
