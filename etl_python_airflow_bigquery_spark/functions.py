@@ -264,6 +264,56 @@ def local_df(spark, rows: list, schema: str) -> DataFrame:
     )
 
 
+def overlap(main, *lanes) -> tuple:
+    """``(main(), *(lane() for lane in lanes))`` with ``main`` on the
+    calling thread and each lane on its own driver thread, so their
+    Spark jobs overlap (guide §2.6). Lanes start through
+    ``inheritable_thread_target``: they keep the caller's job group,
+    description, pool and tags. All the call's jobs carry one fresh job
+    tag; the first exception from ``main`` or a lane cancels that tag's
+    jobs, every lane is joined, and that exception is re-raised. A
+    nested call's jobs carry the outer tag too."""
+    import threading
+    import uuid
+
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.active()
+    sc = spark.sparkContext
+    tag = f"overlap-{uuid.uuid4().hex}"
+    out: list = [None] * (1 + len(lanes))
+    fallos: list[BaseException] = []
+    cerrojo = threading.Lock()
+
+    def correr(i: int, fn) -> None:
+        try:
+            out[i] = fn()
+        except BaseException as e:
+            with cerrojo:
+                fallos.append(e)
+                if len(fallos) == 1:
+                    sc.cancelJobsWithTag(tag)
+
+    sc.addJobTag(tag)
+    try:
+        heredar = inheritable_thread_target(spark)  # captures the tag too
+        hilos = [
+            threading.Thread(target=heredar(lambda i=i, fn=fn: correr(i, fn)))
+            for i, fn in enumerate(lanes, 1)
+        ]
+        for h in hilos:
+            h.start()
+        correr(0, main)
+        for h in hilos:
+            h.join()
+    finally:
+        sc.removeJobTag(tag)
+    if fallos:
+        raise fallos[0]
+    return tuple(out)
+
+
 def device_fingerprint(*cols: Column | str) -> Column:
     """MD5-hex device/identity fingerprint — the reference's
     ``TO_HEX(MD5(request_ip || user_agent))`` (consumo_registrados.py:113)."""

@@ -186,7 +186,12 @@ def _stored_centroids(spark: SparkSession, path: str) -> dict[int, list[int]]:
 _COMPACT_FILE_GATE = 32
 
 
-def add_to_ivf_index(spark: SparkSession, emb_new: DataFrame, path: str) -> int:
+def add_to_ivf_index(
+    spark: SparkSession,
+    emb_new: DataFrame,
+    path: str,
+    txn: tuple[str, int] | None = None,
+) -> int:
     """Incremental index growth: assign the new batch against the STORED
     centroids and append its postings — cost O(batch·k), one atomic
     manifest flip, never a refit. (Centroid drift under sustained skewed
@@ -200,15 +205,23 @@ def add_to_ivf_index(spark: SparkSession, emb_new: DataFrame, path: str) -> int:
     the serve path's file pruning survives (a plain coalesce would
     interleave cells and defeat it). index_meta stays version-stamped
     through the flip; a crash between steps self-heals via
-    ``index_meta_current``."""
+    ``index_meta_current``.
+
+    ``txn=(app_id, batch_id)``: the append's idempotency fence
+    (``TxTable.append``). A batch the postings already recorded is
+    skipped whole — no append, no size-cache increment — so a
+    micro-batch replayed after a crash between the flip and the
+    stream's checkpoint commit is a no-op."""
     _, vec_tx = _tables(path)
+    if txn is not None and vec_tx.txn_version(txn[0]) >= txn[1]:
+        return vec_tx.version()
     cent = _stored_centroids(spark, path)
     enteros = _int_vectors(emb_new).localCheckpoint(eager=False)
     n_batch = enteros.count()
     nuevos = _assign_cells(enteros, cent, keep_ev=True).select(
         "vec_id", "celda", "ev"
     )
-    v = vec_tx.append(nuevos)
+    v = vec_tx.append(nuevos, txn=txn)
     if len(vec_tx._manifest(v)["files"]) >= _COMPACT_FILE_GATE:
         v = vec_tx.optimize_compact(
             spark, n_files=max(1, len(cent) // 8), cluster_col="celda"

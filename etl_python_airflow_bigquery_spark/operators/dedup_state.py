@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_python_airflow_bigquery_spark.functions import overlap
 from etl_python_airflow_bigquery_spark.operators.txlog import TxTable
 
 # Target file counts for the range clusterings (same role as
@@ -67,18 +68,33 @@ def _tables(path: str) -> tuple[TxTable, TxTable, TxTable, TxTable]:
     )
 
 
-def _frames(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(hashes, postings) for a documents frame. The per-doc shingle
-    ARRAYS are deliberately NOT derived here: every consumer checkpoints
-    the postings first and aggregates arrays from the checkpoint, so an
-    arrays lineage rooted at the raw documents would silently
-    re-tokenize the corpus on its first materialization."""
+def _frames(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(hashes, postings, arrays) for a documents frame. The postings
+    are checkpointed (lazily) and the per-doc sorted shingle arrays
+    aggregate from that checkpoint: the pair engine's verify step, the
+    arrays and the postings write all consume it, and an arrays lineage
+    rooted at the raw documents would re-tokenize the corpus on its
+    first materialization (guide §2.4)."""
     from etl_python_airflow_bigquery_spark.queries.dedup import (
         shingle_postings,
     )
 
     hashes = docs.select("doc_id", F.md5("text").alias("h"))
-    return hashes, shingle_postings(docs)
+    sh = shingle_postings(docs).localCheckpoint(eager=False)
+    arrays = sh.groupBy("doc_id").agg(
+        F.sort_array(F.collect_list("s")).alias("arr")
+    ).localCheckpoint(eager=False)
+    return hashes, sh, arrays
+
+
+def _sin_lote(frame: DataFrame, docs: DataFrame) -> DataFrame:
+    """``frame`` without the rows of ``docs``' own doc_ids. Replay
+    determinism: a fenced replay finds the batch's OWN rows already
+    stored (the first run appended them), and without this exclusion
+    every replayed doc would classify "exacto" against itself. On a
+    first run the split is disjoint and the anti join filters nothing;
+    the batch id set broadcasts (batch-bounded)."""
+    return frame.join(F.broadcast(docs.select("doc_id")), "doc_id", "left_anti")
 
 
 def build_dedup_state(spark: SparkSession, docs: DataFrame, path: str) -> dict:
@@ -86,34 +102,30 @@ def build_dedup_state(spark: SparkSession, docs: DataFrame, path: str) -> dict:
     {'n_docs', 'n_pares', 'version'} (the postings version).
 
     The four table commits are INDEPENDENT once their inputs are
-    checkpointed, so the hash/posting/array writes run as overlapped
-    driver-thread jobs (guide §2.6) while the main thread walks the
-    critical path (postings → arrays → pair engine → labels → label
-    write): the scheduler back-fills the side lanes' tasks under the
-    pair engine's stages instead of running four write jobs end to end
-    (r15 profile: the sequential writes added ~1.7 s warm / ~3.9 s cold
-    on top of the critical path at sf0.1)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    checkpointed, so they run as overlapped lanes (``overlap``, guide
+    §2.6) while the calling thread walks the critical path (postings →
+    arrays → pair engine → labels → label write): the scheduler
+    back-fills the side lanes' tasks under the pair engine's stages
+    instead of running four write jobs end to end (r15 profile: the
+    sequential writes added ~1.7 s warm / ~3.9 s cold on top of the
+    critical path at sf0.1). The hash lane shares no frame with the
+    pair chain and starts at once; the posting and array lanes start
+    from inside the critical path, after ``propagate_min_labels`` has
+    run the fused job that first materializes the shared sh/arrays
+    checkpoints, so they read checkpoint blocks instead of
+    re-tokenizing the corpus concurrently."""
     from etl_python_airflow_bigquery_spark.queries.dedup import (
         pares_jaccard_prefijo,
         propagate_min_labels,
     )
 
-    hashes, sh = _frames(docs)
+    hashes, sh, arrays = _frames(docs)
     # two consumers in the hash lane (the range partitioner's SAMPLING
     # pass + the write) plus the n_docs count would each re-scan
     # documents and re-md5 the full text — checkpoint the narrow
     # (doc_id, h) frame once instead (guide §2.4); it materializes
     # inside the hash lane's first job, exclusively
     hashes = hashes.localCheckpoint(eager=False)
-    sh = sh.localCheckpoint(eager=False)  # pair engine + arrays share it
-    # the arrays aggregate feeds BOTH the conjuntos table and the pair
-    # engine's verify step — derive it from the CHECKPOINTED postings
-    # (the _frames lineage would re-shingle the corpus, guide §2.4)
-    arrays = sh.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("s")).alias("arr")
-    ).localCheckpoint(eager=False)
     h_tx, s_tx, a_tx, e_tx = _tables(path)
 
     def _lane_hashes() -> int:
@@ -121,18 +133,11 @@ def build_dedup_state(spark: SparkSession, docs: DataFrame, path: str) -> dict:
         # one hash row per doc — counts the checkpointed narrow frame
         return hashes.count()
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        # the hash lane shares no frame with the pair chain — it
-        # back-fills under the pair engine's stages from the start
-        f_hash = pool.submit(_lane_hashes)
+    def _critical() -> tuple:
         # checkpoint the verified pair list ONCE: the symmetric edge
         # list -> labels and n_pares would otherwise each re-run the
         # full prefix-filter + verify engine (~2-4 s per extra run at
-        # sf0.1 — measured r14); the pair list itself is tiny. Its
-        # first materialization (inside propagate_min_labels' edge
-        # checkpoint) finalizes the sh/arrays checkpoints too — the
-        # posting/array lanes launch AFTER it so they read checkpoint
-        # blocks instead of re-tokenizing the corpus concurrently.
+        # sf0.1 — measured r14); the pair list itself is tiny
         pares = (
             pares_jaccard_prefijo(sh, arr=arrays)
             .select("doc_a", "doc_b")
@@ -146,19 +151,20 @@ def build_dedup_state(spark: SparkSession, docs: DataFrame, path: str) -> dict:
             )
         )
         etiquetas = propagate_min_labels(sym).select("doc_id", "cluster_id")
-        f_post = pool.submit(
-            lambda: s_tx.overwrite(sh.repartitionByRange(_STATE_FILES, "s"))
-        )
-        f_arr = pool.submit(
+
+        def _labels() -> int:
+            e_tx.overwrite(etiquetas)
+            return pares.count()
+
+        return overlap(
+            _labels,
+            lambda: s_tx.overwrite(sh.repartitionByRange(_STATE_FILES, "s")),
             lambda: a_tx.overwrite(
                 arrays.repartitionByRange(_STATE_FILES, "doc_id")
-            )
+            ),
         )
-        e_tx.overwrite(etiquetas)
-        n_pares = pares.count()
-        n_docs = f_hash.result()
-        v = f_post.result()
-        f_arr.result()
+
+    (n_pares, v, _), n_docs = overlap(_critical, _lane_hashes)
     return {"n_docs": n_docs, "n_pares": n_pares, "version": v}
 
 
@@ -180,6 +186,48 @@ def _probe_read(
     return tx.read(spark, version=version).join(
         F.broadcast(frame.select(col).distinct()), col, "left_semi"
     )
+
+
+def _commit_fold(
+    spark: SparkSession,
+    path: str,
+    aristas: DataFrame,
+    hashes_n: DataFrame,
+    sh_n: DataFrame,
+    arrays_n: DataFrame,
+    txn: tuple[str, int] | None,
+) -> None:
+    """Fold the new (src, dst) edges into the stored labels
+    (``cc_incremental``, star contraction) and commit the four tables:
+    labels overwritten, the batch's hashes/postings/arrays appended.
+    The four commits are independent (every shared input is
+    checkpoint-materialized by cc_incremental's edge collect), so they
+    run as overlapped lanes instead of four back-to-back write jobs;
+    each keeps its own (app_id, batch) fence, so a retry after a
+    partial failure applies exactly the commits that did not land. The
+    label read is pinned to its manifest at construction (snapshot
+    isolation), so overlapping its overwrite with the appends cannot
+    race it. Posting compaction past the shared file gate and the
+    keep+slack auto-vacuum follow."""
+    from etl_python_airflow_bigquery_spark.operators.ann_index import (
+        _COMPACT_FILE_GATE,
+    )
+    from etl_python_airflow_bigquery_spark.queries.dedup import (
+        cc_incremental,
+    )
+
+    h_tx, s_tx, a_tx, e_tx = _tables(path)
+    etiquetas = e_tx.read(spark).select("doc_id", "cluster_id")
+    nuevas = cc_incremental(etiquetas, aristas).select("doc_id", "cluster_id")
+    _, _, v, _ = overlap(
+        lambda: e_tx.overwrite(nuevas, txn=txn),
+        lambda: h_tx.append(hashes_n, txn=txn),
+        lambda: s_tx.append(sh_n, txn=txn),
+        lambda: a_tx.append(arrays_n, txn=txn),
+    )
+    if len(s_tx._manifest(v)["files"]) >= _COMPACT_FILE_GATE:
+        s_tx.optimize_compact(spark, n_files=_STATE_FILES, cluster_col="s")
+    maybe_auto_vacuum_dedup(path)
 
 
 def ingest_dedup_state(
@@ -210,48 +258,17 @@ def ingest_dedup_state(
     anti-join the batch's OWN doc_ids out, so a full replay returns the
     first run's classification bit for bit instead of matching the
     batch against itself."""
-    from etl_python_airflow_bigquery_spark.operators.ann_index import (
-        _COMPACT_FILE_GATE,
-    )
-    from etl_python_airflow_bigquery_spark.queries.dedup import (
-        cc_incremental,
-    )
-
-    h_tx, s_tx, a_tx, e_tx = _tables(path)
+    h_tx, s_tx, a_tx, _ = _tables(path)
     c = _clasificar(spark, docs_new, h_tx, s_tx, a_tx)
-    hashes_n, sh_n, arrays_n = c["hashes_n"], c["sh_n"], c["arrays_n"]
-    verificados, pares_lote = c["verificados"], c["pares_lote"]
-
     # fold every new edge into the stored labels (star contraction)
     aristas = (
-        verificados.select("doc_a", "doc_b")
-        .unionByName(pares_lote)
+        c["verificados"].select("doc_a", "doc_b")
+        .unionByName(c["pares_lote"])
         .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
-    etiquetas = e_tx.read(spark).select("doc_id", "cluster_id")
-    nuevas = cc_incremental(etiquetas, aristas).select("doc_id", "cluster_id")
-
-    # the four commits are independent (four tables; every shared input
-    # is checkpoint-materialized by cc_incremental's edge collect), so
-    # they run as overlapped driver-thread jobs (guide §2.6) instead of
-    # four back-to-back write jobs; each keeps its own (app_id, batch)
-    # fence, so replay semantics are unchanged. The label read above is
-    # pinned to its manifest at construction (snapshot isolation), so
-    # overlapping its overwrite with the appends cannot race it.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_e = pool.submit(lambda: e_tx.overwrite(nuevas, txn=txn))
-        f_h = pool.submit(lambda: h_tx.append(hashes_n, txn=txn))
-        f_s = pool.submit(lambda: s_tx.append(sh_n, txn=txn))
-        f_a = pool.submit(lambda: a_tx.append(arrays_n, txn=txn))
-        f_e.result()
-        f_h.result()
-        v = f_s.result()
-        f_a.result()
-    if len(s_tx._manifest(v)["files"]) >= _COMPACT_FILE_GATE:
-        s_tx.optimize_compact(spark, n_files=_STATE_FILES, cluster_col="s")
-    maybe_auto_vacuum_dedup(path)
+    _commit_fold(
+        spark, path, aristas, c["hashes_n"], c["sh_n"], c["arrays_n"], txn
+    )
     return c["salida"]
 
 
@@ -303,42 +320,25 @@ def ingest_dedup_state_lotes(
     application-transaction per call, the single-batch discipline), and
     the stored probes anti-join every lote's doc_ids, so a fenced
     replay reproduces the first run's classification exactly."""
-    from etl_python_airflow_bigquery_spark.operators.ann_index import (
-        _COMPACT_FILE_GATE,
-    )
     from etl_python_airflow_bigquery_spark.queries.dedup import (
         _verify_jaccard_arrays,
-        cc_incremental,
     )
 
-    h_tx, s_tx, a_tx, e_tx = _tables(path)
+    h_tx, s_tx, a_tx, _ = _tables(path)
     lote_map = docs_lotes.select("doc_id", "lote")
-    hashes_n, sh_n = _frames(docs_lotes)
-    sh_n = sh_n.localCheckpoint(eager=False)
-    # arrays from the CHECKPOINTED postings (see _clasificar)
-    arrays_n = sh_n.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("s")).alias("arr")
-    ).localCheckpoint(eager=False)
+    hashes_n, sh_n, arrays_n = _frames(docs_lotes)
     hashes_l = hashes_n.join(F.broadcast(lote_map), "doc_id")
     sh_l = sh_n.join(F.broadcast(lote_map), "doc_id")
 
-    lote_ids = F.broadcast(docs_lotes.select("doc_id"))
-
-    def _sin_lote(frame: DataFrame) -> DataFrame:
-        return frame.join(lote_ids, "doc_id", "left_anti")
-
     # overlap the two independent probe collects (see _clasificar)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_ph = pool.submit(_probe_read, spark, h_tx, "h", hashes_n)
-        f_ps = pool.submit(_probe_read, spark, s_tx, "s", sh_n)
-        probe_h_raw = f_ph.result()
-        probe_s_raw = f_ps.result()
+    probe_h_raw, probe_s_raw = overlap(
+        lambda: _probe_read(spark, h_tx, "h", hashes_n),
+        lambda: _probe_read(spark, s_tx, "s", sh_n),
+    )
 
     # exact tier: stored hashes (lote 0) ⊎ earlier-lote batch hashes
     probe_h = (
-        _sin_lote(probe_h_raw)
+        _sin_lote(probe_h_raw, docs_lotes)
         .select("h", F.col("doc_id").alias("viejo"), F.lit(0).alias("lote_b"))
         .unionByName(
             hashes_l.select(
@@ -359,7 +359,7 @@ def ingest_dedup_state_lotes(
     # does not depend on the order (see docstring), and a shingle
     # absent everywhere still ranks last via the coalesce sentinel.
     probe = (
-        _sin_lote(probe_s_raw)
+        _sin_lote(probe_s_raw, docs_lotes)
         .select(F.col("doc_id").alias("doc_b"), "s", F.lit(0).alias("lote_b"))
         .unionByName(
             sh_l.select(
@@ -400,7 +400,8 @@ def ingest_dedup_state_lotes(
         _probe_read(
             spark, a_tx, "doc_id",
             cand.select(F.col("doc_b").alias("doc_id")),
-        )
+        ),
+        docs_lotes,
     )
     # arrays verify directly (see _clasificar) — no explode+re-aggregate
     verificados = _verify_jaccard_arrays(
@@ -450,28 +451,11 @@ def ingest_dedup_state_lotes(
         )
     )
 
-    # one fold, one commit set — the amortization itself; the four
-    # commits overlap as independent driver-thread jobs (guide §2.6,
-    # see ingest_dedup_state)
+    # one fold, one commit set — the amortization itself
     aristas = verificados.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
-    etiquetas = e_tx.read(spark).select("doc_id", "cluster_id")
-    nuevas = cc_incremental(etiquetas, aristas).select("doc_id", "cluster_id")
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_e = pool.submit(lambda: e_tx.overwrite(nuevas, txn=txn))
-        f_h = pool.submit(lambda: h_tx.append(hashes_n, txn=txn))
-        f_s = pool.submit(lambda: s_tx.append(sh_n, txn=txn))
-        f_a = pool.submit(lambda: a_tx.append(arrays_n, txn=txn))
-        f_e.result()
-        f_h.result()
-        v = f_s.result()
-        f_a.result()
-    if len(s_tx._manifest(v)["files"]) >= _COMPACT_FILE_GATE:
-        s_tx.optimize_compact(spark, n_files=_STATE_FILES, cluster_col="s")
-    maybe_auto_vacuum_dedup(path)
+    _commit_fold(spark, path, aristas, hashes_n, sh_n, arrays_n, txn)
     return salida
 
 
@@ -514,41 +498,21 @@ def _clasificar(
     vh = (pins or {}).get("hashes")
     vs = (pins or {}).get("postings")
     va = (pins or {}).get("conjuntos")
-    hashes_n, sh_n = _frames(docs_new)
-    sh_n = sh_n.localCheckpoint(eager=False)
-    # arrays from the CHECKPOINTED postings — the _frames lineage would
-    # re-tokenize the batch for its first materialization
-    arrays_n = sh_n.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("s")).alias("arr")
-    ).localCheckpoint(eager=False)
-
-    # Replay determinism: a fenced replay finds the batch's OWN rows
-    # already stored (the first run appended them) — without this
-    # exclusion every replayed doc would classify "exacto" against
-    # itself. On a first run the split is disjoint and the anti join
-    # filters nothing (the registered oracle is unchanged); the batch
-    # id set broadcasts (batch-bounded).
-    lote_ids = F.broadcast(docs_new.select("doc_id"))
-
-    def _sin_lote(frame: DataFrame) -> DataFrame:
-        return frame.join(lote_ids, "doc_id", "left_anti")
+    hashes_n, sh_n, arrays_n = _frames(docs_new)
 
     # the exact-tier hash probe and the near-tier shingle probe each
     # collect the batch's own value set before pruning the stored read
     # — two independent driver round-trips that overlap as threads
     # (guide §2.6; hashes_n and sh_n have disjoint lineages)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_ph = pool.submit(_probe_read, spark, h_tx, "h", hashes_n, vh)
-        f_ps = pool.submit(_probe_read, spark, s_tx, "s", sh_n, vs)
-        probe_h_raw = f_ph.result()
-        probe_s_raw = f_ps.result()
+    probe_h_raw, probe_s_raw = overlap(
+        lambda: _probe_read(spark, h_tx, "h", hashes_n, vh),
+        lambda: _probe_read(spark, s_tx, "s", sh_n, vs),
+    )
 
     # exact tier: the batch's hashes probe the stored hash table
     exacto = (
         hashes_n.join(
-            _sin_lote(probe_h_raw).select(
+            _sin_lote(probe_h_raw, docs_new).select(
                 "h", F.col("doc_id").alias("viejo")
             ),
             "h",
@@ -569,7 +533,7 @@ def _clasificar(
     # prefix slots). Without this filter the raw s-join explodes on
     # high-df shingles: 6.7M candidate pairs for a 1.7k-doc batch on
     # the clone-heavy 10x replica, and the verify pays 115 s for them.
-    probe = _sin_lote(probe_s_raw).localCheckpoint(eager=False)
+    probe = _sin_lote(probe_s_raw, docs_new).localCheckpoint(eager=False)
     df_s = probe.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     w_rank = Window.partitionBy("doc_id").orderBy("df", "s")
     w_all = Window.partitionBy("doc_id")

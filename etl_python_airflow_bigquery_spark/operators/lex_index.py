@@ -233,7 +233,10 @@ def compact_lex_index(spark: SparkSession, path: str) -> int:
 
 
 def add_to_lex_index(
-    spark: SparkSession, docs_new: DataFrame, path: str
+    spark: SparkSession,
+    docs_new: DataFrame,
+    path: str,
+    txn: tuple[str, int] | None = None,
 ) -> int:
     """Incremental growth: the new documents' postings append as ONE
     manifest flip — no corpus retokenize — and their counts land in the
@@ -241,12 +244,20 @@ def add_to_lex_index(
     (token-range-clustered) past the shared ann_index file gate so stats
     pruning survives streamed ingest. A crash between the flip and the
     metadata write leaves the new version unrecorded; the next
-    ``lex_meta_current`` recounts it from the snapshot."""
+    ``lex_meta_current`` recounts it from the snapshot.
+
+    ``txn=(app_id, batch_id)``: the append's idempotency fence
+    (``TxTable.append``). A batch the postings already recorded is
+    skipped whole — no append, no new counts — so a micro-batch
+    replayed after a crash between the flip and the stream's checkpoint
+    commit is a no-op."""
     post_tx = _postings(path)
+    if txn is not None and post_tx.txn_version(txn[0]) >= txn[1]:
+        return post_tx.version()
     _checked_version(path, post_tx, None)
     postings, dl = _postings_frame(docs_new)
     n, dl_total = _counts(dl)
-    _inherit(path, post_tx, post_tx.append(postings), n, dl_total)
+    _inherit(path, post_tx, post_tx.append(postings, txn=txn), n, dl_total)
     v = compact_lex_index(spark, path)
     maybe_auto_vacuum_lex(path)
     return v

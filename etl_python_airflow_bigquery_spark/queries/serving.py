@@ -27,6 +27,7 @@ import tempfile as _tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_python_airflow_bigquery_spark.functions import overlap
 from etl_python_airflow_bigquery_spark.queries import register
 from etl_python_airflow_bigquery_spark.queries.similarity import (
     _D2_SQL,
@@ -470,19 +471,11 @@ def busqueda_hibrida_indexada_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine (the serving path's arithmetic, not the brute raw-embedding
     dot), so this row value-checks the SELECTIVE probe itself — not
     just the full-probe degenerate case the module test pins."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from etl_python_airflow_bigquery_spark.operators.ann_index import (
         busqueda_hibrida_indexada,
     )
 
-    # the two index builds are INDEPENDENT (IVF over embeddings, the
-    # lexical postings over documents) — overlap them as driver threads
-    # (guide §2.6); each session-caches under its own key
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_lex = pool.submit(_served_lex_index, spark, sf_dir)
-        path = _served_index(spark, sf_dir, "full")
-        lex = f_lex.result()
+    path, lex = _served_indexes(spark, sf_dir)
     return busqueda_hibrida_indexada(
         spark, sf_dir, path, nprobe=_NPROBE, lex_path=lex,
         ctx=_served_ctx(spark, path, lex_path=lex),
@@ -630,6 +623,17 @@ def _served_lex_index(spark: SparkSession, sf_dir: str) -> str:
         )
     _LEX_CACHE[key] = path
     return path
+
+
+def _served_indexes(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """(IVF index path, lexical index path) for the dataset. The two
+    builds are INDEPENDENT (IVF over embeddings, the lexical postings
+    over documents), so they overlap (guide §2.6); each session-caches
+    under its own key."""
+    return overlap(
+        lambda: _served_index(spark, sf_dir, "full"),
+        lambda: _served_lex_index(spark, sf_dir),
+    )
 
 
 _clear_vec_caches = clear_session_caches

@@ -987,7 +987,7 @@ def streaming_busqueda_hibrida(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile as _tempfile
 
     from etl_python_airflow_bigquery_spark.operators.txlog import TxTable
-    from etl_python_airflow_bigquery_spark.queries.serving import _served_index
+    from etl_python_airflow_bigquery_spark.queries.serving import _served_indexes
     from etl_python_airflow_bigquery_spark.streaming.jobs import (
         run_hybrid_serve,
         table_dir_for,
@@ -1007,18 +1007,7 @@ def streaming_busqueda_hibrida(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not qids:  # empty corpus: nothing arrives, nothing to index
         return spark.createDataFrame([], _schema)
-    from concurrent.futures import ThreadPoolExecutor
-
-    from etl_python_airflow_bigquery_spark.queries.serving import (
-        _served_lex_index,
-    )
-
-    # the IVF and lexical builds are independent (embeddings vs
-    # documents) — overlap them as driver threads (guide §2.6)
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_lex = pool.submit(_served_lex_index, spark, sf_dir)
-        index_path = _served_index(spark, sf_dir, "full")
-        lex_path = f_lex.result()
+    index_path, lex_path = _served_indexes(spark, sf_dir)
 
     raiz = _tempfile.mkdtemp(prefix="hib_stream_")
     src = _os.path.join(raiz, "llegadas")

@@ -67,6 +67,27 @@ def _maintain_sink(spark: SparkSession, tx) -> None:
         tx.vacuum(_SINK_KEEP, _SINK_RETENTION_S)
 
 
+def _drain_landed(spark: SparkSession, src_dir: str, checkpoint: str, fn) -> None:
+    """Run ``fn(batch_df, batch_id)`` over the parquet files landed under
+    ``src_dir``, one file per micro-batch, until drained (availableNow);
+    ``checkpoint`` tracks the files already consumed. The stream schema
+    is the landed files' own."""
+    schema = (
+        spark.read.option("recursiveFileLookup", "true").parquet(src_dir).schema
+    )
+    (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(src_dir)
+        .writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def files_per_trigger_for(path: str, target_batches: int = 2) -> int:
     """Bound a REPLAYED table-stream's micro-batch count at
     ~``target_batches`` regardless of the table's file layout. Per-batch
@@ -498,16 +519,6 @@ def run_validated_ingest(
     cuarentena = TxTable(os.path.join(out_path, "cuarentena"))
     stats = {"commits": 0, "cuarentenas": 0}
 
-    batch_schema = (
-        spark.read.option("recursiveFileLookup", "true").parquet(src_dir).schema
-    )
-    src = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-    )
-
     # CHECKPOINT-keyed fence: batch ids only mean anything within one
     # checkpoint lineage, so a fresh checkpoint is a NEW logical stream
     # (reprocesses everything — point it at a fresh sink or accept
@@ -551,13 +562,7 @@ def run_validated_ingest(
             stats["commits"] += 1
         _maintain_sink(spark, cuarentena if rotas else main)
 
-    q = (
-        src.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_landed(spark, src_dir, checkpoint, gate)
     return stats
 
 
@@ -571,8 +576,9 @@ def run_ann_ingest(
     each micro-batch joins the persistent ANN index — assignment runs
     map-only against the STORED centroids (operators/ann_index) and the
     postings land as ONE atomic manifest flip per batch, so searches
-    never observe a half-ingested batch and a crashed ingest replays
-    idempotently from the checkpoint. The quantizer is never refit on
+    never observe a half-ingested batch; the append is fenced with
+    (app_id, batch_id), so a batch replayed from the checkpoint after a
+    crash past its flip is a no-op. The quantizer is never refit on
     the hot path; sustained drift is a scheduled rebuild, measurable
     across index versions. State: none beyond the stream's own file
     tracking — the index tables ARE the state."""
@@ -580,28 +586,15 @@ def run_ann_ingest(
         add_to_ivf_index,
     )
 
-    schema = (
-        spark.read.option("recursiveFileLookup", "true").parquet(src_dir).schema
-    )
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-    )
+    # SRC-keyed fence (see run_hybrid_serve for the trade-off)
+    app_id = f"ann_ingest:{os.path.abspath(src_dir)}"
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        add_to_ivf_index(spark, batch_df, index_path)
+        add_to_ivf_index(spark, batch_df, index_path, txn=(app_id, batch_id))
 
-    q = (
-        src.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_landed(spark, src_dir, checkpoint, ingest)
 
 
 def run_lex_ingest(
@@ -618,36 +611,24 @@ def run_lex_ingest(
     flip; the token-range compaction and the shared keep+slack
     auto-vacuum ride the same call, so a continuously-fed lexical index
     keeps pruned serve reads AND a bounded on-disk footprint without
-    operator intervention. Crash replay re-runs a batch against the
-    checkpoint's file tracking; n/avgdl survive the crash window because
-    a version without a metadata entry is recounted from its own
-    postings snapshot (lex_meta_current)."""
+    operator intervention. The append is fenced with (app_id,
+    batch_id), so a batch replayed from the checkpoint after a crash
+    past its flip is a no-op; n/avgdl survive a crash between the flip
+    and the metadata write because a version without a metadata entry
+    is recounted from its own postings snapshot (lex_meta_current)."""
     from etl_python_airflow_bigquery_spark.operators.lex_index import (
         add_to_lex_index,
     )
 
-    schema = (
-        spark.read.option("recursiveFileLookup", "true").parquet(src_dir).schema
-    )
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-    )
+    # SRC-keyed fence (see run_hybrid_serve for the trade-off)
+    app_id = f"lex_ingest:{os.path.abspath(src_dir)}"
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        add_to_lex_index(spark, batch_df, index_path)
+        add_to_lex_index(spark, batch_df, index_path, txn=(app_id, batch_id))
 
-    q = (
-        src.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_landed(spark, src_dir, checkpoint, ingest)
 
 
 def run_hybrid_serve(
@@ -734,22 +715,7 @@ def run_hybrid_serve(
         sink.append(out, txn=(app_id, batch_id))
         _maintain_sink(spark, sink)
 
-    schema = (
-        spark.read.option("recursiveFileLookup", "true").parquet(src_dir).schema
-    )
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-    )
-    q = (
-        src.writeStream.foreachBatch(serve)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_landed(spark, src_dir, checkpoint, serve)
 
 
 def run_semdedup_ingest(
@@ -883,22 +849,7 @@ def run_semdedup_ingest(
             )
         maybe_auto_vacuum(index_path)
 
-    schema = (
-        spark.read.option("recursiveFileLookup", "true").parquet(src_dir).schema
-    )
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-    )
-    q = (
-        src.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_landed(spark, src_dir, checkpoint, gate)
 
 
 def run_label_ingest(
@@ -945,22 +896,7 @@ def run_label_ingest(
         sink.append(out, txn=(app_id, batch_id))
         _maintain_sink(spark, sink)
 
-    schema = (
-        spark.read.option("recursiveFileLookup", "true").parquet(src_dir).schema
-    )
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-    )
-    q = (
-        src.writeStream.foreachBatch(label)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_landed(spark, src_dir, checkpoint, label)
 
 
 def run_span_cut_ingest(
@@ -1006,16 +942,6 @@ def run_span_cut_ingest(
     indice = index_df.localCheckpoint(eager=True)
     stats = {"commits": 0, "docs": 0}
 
-    batch_schema = (
-        spark.read.option("recursiveFileLookup", "true").parquet(src_dir).schema
-    )
-    src = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-    )
-
     app_id = f"span_cut_ingest:{os.path.abspath(checkpoint)}"
 
     def cortar(batch_df: DataFrame, batch_id: int) -> None:
@@ -1055,13 +981,7 @@ def run_span_cut_ingest(
         stats["commits"] += 1
         stats["docs"] += limpio.count()
 
-    q = (
-        src.writeStream.foreachBatch(cortar)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_landed(spark, src_dir, checkpoint, cortar)
     return stats
 
 

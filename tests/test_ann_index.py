@@ -4,11 +4,13 @@ brute force."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_python_airflow_bigquery_spark.operators.ann_index import (
     add_to_ivf_index,
     build_ivf_index,
+    index_meta_current,
     search_ivf_index,
 )
 from etl_python_airflow_bigquery_spark.queries.similarity import _int_vectors
@@ -106,12 +108,20 @@ def test_maintenance_preserves_search_results(spark, sf_dir, tmp_path):
     assert antes == despues
 
 
-def test_streaming_ingest_grows_the_index(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("crash", [False, True], ids=["clean", "crash"])
+def test_streaming_ingest_grows_the_index(
+    spark, sf_dir, tmp_path, monkeypatch, crash
+):
     """ROADMAP candidate C: embeddings stream into the persistent index
     batch-by-batch (stored-centroid assignment, one manifest flip per
-    micro-batch); a clone arriving via the STREAM becomes searchable."""
+    micro-batch); a clone arriving via the STREAM becomes searchable.
+    ``crash``: the first micro-batch's add lands and the batch then
+    fails before the stream commits it; the rerun from the same
+    checkpoint redelivers it, and the txn fence keeps it from
+    appending or counting twice."""
     import os
 
+    from etl_python_airflow_bigquery_spark.operators import ann_index
     from etl_python_airflow_bigquery_spark.operators.txlog import TxTable
     from etl_python_airflow_bigquery_spark.streaming.jobs import run_ann_ingest
 
@@ -130,9 +140,26 @@ def test_streaming_ingest_grows_the_index(spark, sf_dir, tmp_path):
     impar.where(F.col("vec_id") % 4 == 3).unionByName(clon).coalesce(1).write.parquet(
         src + "/f2.parquet"
     )
+    if crash:
+        real = ann_index.add_to_ivf_index
+
+        def add_then_crash(*args, **kwargs):
+            v = real(*args, **kwargs)
+            monkeypatch.setattr(ann_index, "add_to_ivf_index", real)
+            raise RuntimeError(f"crash after flip {v}")
+
+        monkeypatch.setattr(ann_index, "add_to_ivf_index", add_then_crash)
+        with pytest.raises(Exception, match="crash after flip"):
+            run_ann_ingest(spark, src, path, str(tmp_path / "ck"))
+        assert TxTable(f"{path}/vectores").version() == v0 + 1
     run_ann_ingest(spark, src, path, str(tmp_path / "ck"))
     # two micro-batches = two manifest flips
-    assert TxTable(f"{path}/vectores").version() == v0 + 2
+    vec_tx = TxTable(f"{path}/vectores")
+    assert vec_tx.version() == v0 + 2
+    assert vec_tx.read(spark).groupBy("vec_id").count().where(
+        F.col("count") > 1
+    ).count() == 0
+    assert index_meta_current(spark, path)["n"] == emb.count() + 1
     consultas = _queries_from(spark, emb.where(F.col("vec_id") == 0), every=1)
     top = search_ivf_index(spark, consultas, path).where(F.col("pos") == 1).collect()
     assert top and top[0]["cand_id"] == 7_000_001

@@ -268,3 +268,38 @@ def test_bm25_expressions_have_one_spark_side_home():
                     hogares[k].add((os.path.relpath(ruta, raiz), nombre))
     for k, donde in hogares.items():
         assert donde == {("queries/text.py", "bm25_scorer")}, (k, sorted(donde))
+
+
+def test_thread_overlap_has_one_home():
+    """Driver-thread overlap goes through one helper
+    (functions.overlap), which keeps the caller's job group on its
+    lanes and cancels the call's jobs on the first failure. No other
+    function in the engine package starts threads or thread pools."""
+    import ast
+    import re
+
+    import etl_python_airflow_bigquery_spark as pkg
+
+    rx = re.compile(r"ThreadPoolExecutor|concurrent\.futures|threading\.Thread")
+    raiz = os.path.dirname(pkg.__file__)
+    hogares = set()
+    for carpeta, _dirs, files in os.walk(raiz):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            ruta = os.path.join(carpeta, f)
+            src = open(ruta).read()
+            funcs = [
+                n for n in ast.walk(ast.parse(src))
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+            for m in rx.finditer(src):
+                linea = src.count("\n", 0, m.start()) + 1
+                dentro = [
+                    fn for fn in funcs
+                    if fn.lineno <= linea <= fn.end_lineno
+                    and fn.col_offset == 0
+                ]
+                nombre = dentro[0].name if dentro else "<module>"
+                hogares.add((os.path.relpath(ruta, raiz), nombre))
+    assert hogares == {("functions.py", "overlap")}, sorted(hogares)

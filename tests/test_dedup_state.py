@@ -287,3 +287,118 @@ def test_multilote_fenced_replay_is_noop(spark, sf_dir, tmp_path):
     ).collect()))
     assert replay == primera
     assert [tx.version() for tx in (h_tx, s_tx, a_tx, e_tx)] == vs
+
+
+def _job_ids_between_markers(sc, grupo, run):
+    """(job ids ``run`` started, job ids of group ``grupo``): ``run`` is
+    bracketed by two one-task marker jobs, and job ids are assigned in
+    submission order, so every job it started lies strictly between the
+    markers' ids."""
+    bus = sc._jsc.sc().listenerBus()
+
+    def marker(nombre):
+        sc.setJobGroup(nombre, nombre)
+        sc.parallelize([0], 1).count()
+        bus.waitUntilEmpty()
+        return sc.statusTracker().getJobIdsForGroup(nombre)[0]
+
+    try:
+        antes = marker(f"{grupo}-antes")
+        sc.setJobGroup(grupo, "dedup state under test")
+        run()
+        despues = marker(f"{grupo}-despues")
+    finally:
+        sc._jsc.clearJobGroup()
+    return (
+        set(range(antes + 1, despues)),
+        set(sc.statusTracker().getJobIdsForGroup(grupo)),
+    )
+
+
+def test_every_state_job_runs_in_the_callers_job_group(
+    spark, sf_dir, tmp_path
+):
+    """The overlapped lanes of build and ingest inherit the caller's job
+    group: every job either call starts is attributable to it through
+    the status tracker (and so cancellable with it). The job counts are
+    pinned too: a change in them is a change in the build's shape."""
+    docs = load_table(spark, sf_dir, "documents")
+    path = str(tmp_path / "estado")
+    sc = spark.sparkContext
+
+    iniciados, en_grupo = _job_ids_between_markers(
+        sc, "build", lambda: build_dedup_state(
+            spark, docs.where(F.col("doc_id") % 10 != 0), path
+        ),
+    )
+    assert en_grupo == iniciados and len(iniciados) == 24
+
+    iniciados, en_grupo = _job_ids_between_markers(
+        sc, "ingest", lambda: ingest_dedup_state(
+            spark, docs.where(F.col("doc_id") % 10 == 0), path
+        ).collect(),
+    )
+    assert en_grupo == iniciados and len(iniciados) == 45
+
+
+def test_failed_commit_lane_cancels_siblings_and_retry_matches_clean_run(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A failing lane inside the overlapped fold commit: the conjuntos
+    append raises while the postings lane runs a long job. The ingest
+    re-raises the conjuntos error, the postings job is cancelled rather
+    than run out, and a retry with the same txn returns the same
+    classification and leaves the same stored rows as a clean run."""
+    import threading
+    import time
+
+    import pytest
+
+    docs = load_table(spark, sf_dir, "documents")
+    corpus = docs.where(F.col("doc_id") % 10 != 0)
+    lote = docs.where(F.col("doc_id") % 10 == 0)
+
+    limpio = str(tmp_path / "limpio")
+    build_dedup_state(spark, corpus, limpio)
+    want = sorted(map(tuple, ingest_dedup_state(
+        spark, lote, limpio, txn=("lotes", 0)
+    ).collect()))
+
+    path = str(tmp_path / "estado")
+    build_dedup_state(spark, corpus, path)
+    real_append = TxTable.append
+    largo_lanzado = threading.Event()
+    hermano: list[BaseException] = []
+
+    def append(self, df, txn=None):
+        if self.path.endswith("/postings"):
+            largo_lanzado.set()
+            try:
+                spark.sparkContext.parallelize(range(2), 2).foreach(
+                    lambda _: time.sleep(120)
+                )
+            except BaseException as e:
+                hermano.append(e)
+                raise
+        if self.path.endswith("/conjuntos"):
+            largo_lanzado.wait(60)
+            time.sleep(3)  # the sibling's job is running by now
+            raise RuntimeError("conjuntos lane failed")
+        return real_append(self, df, txn=txn)
+
+    monkeypatch.setattr(TxTable, "append", append)
+    t0 = time.monotonic()
+    with pytest.raises(RuntimeError, match="conjuntos lane failed"):
+        ingest_dedup_state(spark, lote, path, txn=("lotes", 0)).collect()
+    assert time.monotonic() - t0 < 90  # the 120 s sibling did not run out
+    assert hermano and "cancel" in str(hermano[0]).lower()
+    monkeypatch.setattr(TxTable, "append", real_append)
+
+    got = sorted(map(tuple, ingest_dedup_state(
+        spark, lote, path, txn=("lotes", 0)
+    ).collect()))
+    assert got == want and got
+    for tabla in ("hashes", "postings", "conjuntos", "etiquetas"):
+        a = sorted(map(tuple, TxTable(f"{limpio}/{tabla}").read(spark).collect()))
+        b = sorted(map(tuple, TxTable(f"{path}/{tabla}").read(spark).collect()))
+        assert a == b, tabla

@@ -11,6 +11,7 @@ from etl_python_airflow_bigquery_spark.functions import (
     day_to_date,
     epoch_day,
     hour_of_day,
+    overlap,
     safe_div,
     to_santiago,
     trunc1,
@@ -295,3 +296,58 @@ def test_approx_percentiles_within_tolerance(spark, sf_dir):
     for r in REGISTRY["percentiles_aprox"].fn(spark, sf_dir).collect():
         assert r["dentro_banda"] == 1, r
         assert r["p50_exacto"] <= r["p90_exacto"] <= r["p99_exacto"], r
+
+
+def test_overlap_returns_in_order_and_cancels_on_first_failure(spark):
+    """overlap returns (main, *lanes) results in argument order, and on
+    a lane failure cancels the call's running jobs (here main's 120 s
+    job) and re-raises the lane's error, not main's cancellation."""
+    import threading
+    import time
+
+    import pytest
+
+    sc = spark.sparkContext
+    assert overlap(lambda: 1, lambda: 2, lambda: 3) == (1, 2, 3)
+
+    lanzado = threading.Event()
+
+    def largo():
+        lanzado.set()
+        sc.parallelize(range(2), 2).foreach(lambda _: time.sleep(120))
+
+    def falla():
+        lanzado.wait(60)
+        time.sleep(3)  # main's job is running by now
+        raise ValueError("lane failed")
+
+    t0 = time.monotonic()
+    with pytest.raises(ValueError, match="lane failed"):
+        overlap(largo, falla)
+    assert time.monotonic() - t0 < 60
+    assert not sc.getJobTags()  # the call's tag is removed
+
+
+def test_overlap_many_failing_lanes_cancel_once(spark, monkeypatch):
+    """More lanes than cores, with thread switches forced often: results
+    land in their own slots, and when every lane fails the tag is
+    cancelled exactly once and one lane's error is re-raised."""
+    import sys
+
+    import pytest
+
+    cancelados: list = []
+    monkeypatch.setattr(spark.sparkContext, "cancelJobsWithTag", cancelados.append)
+
+    def falla(i):
+        raise ValueError(i)
+
+    intervalo = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        assert overlap(*[lambda i=i: i for i in range(32)]) == tuple(range(32))
+        with pytest.raises(ValueError):
+            overlap(*[lambda i=i: falla(i) for i in range(32)])
+    finally:
+        sys.setswitchinterval(intervalo)
+    assert len(cancelados) == 1

@@ -346,17 +346,22 @@ def test_crash_before_meta_write_serves_like_fresh_build(
     )
 
 
+@pytest.mark.parametrize("crash", [False, True], ids=["clean", "crash"])
 def test_streaming_lex_ingest_grows_index_and_replays_as_noop(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch, crash
 ):
     """run_lex_ingest: documents stream into the persistent lexical
     index batch-by-batch (batch-only tokenize, one manifest flip per
     micro-batch); after draining, the served BM25 over the
     streamed-complete corpus equals the brute registry query row for
     row, and replaying the drained stream from its checkpoint is a
-    no-op (file-tracking idempotency)."""
+    no-op (file-tracking idempotency). ``crash``: the first
+    micro-batch's add lands and the batch then fails before the stream
+    commits it; the rerun from the same checkpoint redelivers it, and
+    the txn fence keeps it from appending or counting twice."""
     import os
 
+    from etl_python_airflow_bigquery_spark.operators import lex_index
     from etl_python_airflow_bigquery_spark.queries import REGISTRY
     from etl_python_airflow_bigquery_spark.streaming.jobs import run_lex_ingest
 
@@ -376,9 +381,24 @@ def test_streaming_lex_ingest_grows_index_and_replays_as_noop(
         src + "/f2.parquet"
     )
     ck = str(tmp_path / "ck")
+    if crash:
+        real = lex_index.add_to_lex_index
+
+        def add_then_crash(*args, **kwargs):
+            v = real(*args, **kwargs)
+            monkeypatch.setattr(lex_index, "add_to_lex_index", real)
+            raise RuntimeError(f"crash after flip {v}")
+
+        monkeypatch.setattr(lex_index, "add_to_lex_index", add_then_crash)
+        with pytest.raises(Exception, match="crash after flip"):
+            run_lex_ingest(spark, src, path, ck)
+        assert post_tx.version() == v0 + 1
     run_lex_ingest(spark, src, path, ck)
     assert post_tx.version() == v0 + 2  # one flip per micro-batch
     assert lex_meta_current(spark, path)["n"] == docs.count()
+    assert post_tx.read(spark).groupBy("token", "doc_id").count().where(
+        F.col("count") > 1
+    ).count() == 0
 
     # streamed-complete corpus == the brute query's corpus ⇒ identical
     # ranking (the index is exact, not approximate)
