@@ -26,6 +26,12 @@ At 100 TB the manifest is the only metadata hot spot (KBs per commit);
 data moves are zero — exactly why this layout is object-store-safe where
 rename-swaps are not. Orphan cleanup (`vacuum`) uses the manifests as the
 root set, mirroring Delta's VACUUM.
+
+The surface is what the engine calls: snapshot reads (`read`, the
+stats-pruned `read_in`), fenced `append`/`overwrite`, `merge` (K4),
+`replace_where`/`replace_partitions` (the transactional K3),
+`optimize_compact`, `vacuum`, tags as vacuum GC roots, and the
+append-delta change feed (`changes`).
 """
 
 from __future__ import annotations
@@ -42,53 +48,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
-# Exact-tile-border cardinality cap for optimize_zorder: up to this many
-# distinct values per z column, tile borders compute from the exact
-# per-value histogram (deterministic — a pure function of the data
-# multiset); past it, approxQuantile (deterministic per physical
-# layout only). 256k (value, count) rows ≈ 4 MB on the driver.
-_Z_DISTINCT_CAP = 262_144
-
-# bucket-to-partition inverse-hash keys, cached per partition count —
-# the probe job is tiny (one range scan) and its answer is a pure
-# function of Spark's fixed Murmur3, so it never goes stale
-_INV_HASH_KEYS: dict[int, list[int]] = {}
-
-
-def _inverse_hash_keys(spark: SparkSession, n: int) -> list[int]:
-    """For each target partition b < n, the smallest bigint k with
-    pmod(murmur3(k), n) == b — the key that makes
-    ``repartition(n, key)`` route a row EXACTLY to partition b.
-    DataFrame hash partitioning is pmod(Murmur3Hash(cols), n), so this
-    turns content-hash partitioning into a deterministic, sample-free
-    assignment of one z-order bucket per output file
-    (``optimize_zorder``). Computed with one tiny Spark job against the
-    engine's own ``hash`` (bit-identical to the partitioner's) and
-    cached per ``n``."""
-    if n in _INV_HASH_KEYS:
-        return _INV_HASH_KEYS[n]
-    claves: dict[int, int] = {}
-    lo = 0
-    while len(claves) < n:
-        filas = (
-            spark.range(lo, lo + max(64, 16 * n))
-            .select("id", F.pmod(F.hash("id"), F.lit(n)).alias("p"))
-            .collect()
-        )
-        for r in sorted(filas, key=lambda r: r["id"]):
-            claves.setdefault(int(r["p"]), int(r["id"]))
-        lo += max(64, 16 * n)
-    _INV_HASH_KEYS[n] = [claves[b] for b in range(n)]
-    return _INV_HASH_KEYS[n]
-
-
 class CommitConflict(RuntimeError):
     """Another writer claimed the version first; retry on fresh state."""
-
-
-class ConstraintViolation(RuntimeError):
-    """An incoming batch (or the existing data, for add_constraint)
-    breaks a CHECK constraint — the commit is refused, nothing flips."""
 
 
 class NonIncrementalHistory(RuntimeError):
@@ -100,32 +61,15 @@ class NonIncrementalHistory(RuntimeError):
 class TxTable:
     """``stats_cols`` opts into Delta-style PER-FILE min/max stats in the
     manifest (read once from each new file's parquet footer at commit
-    time — no extra scan): `read_where` then prunes whole files the
-    predicate cannot touch, and `replace_where` rewrites ONLY files
-    whose stats overlap the replaced range — the transactional K3 whose
-    cost is bounded by the touched window, not the table."""
+    time — no extra scan): `read_in` then prunes whole files no requested
+    value can be in, and `replace_where` / `replace_partitions` rewrite
+    ONLY files whose stats overlap the replaced window — the
+    transactional K3 whose cost is bounded by the touched window, not the
+    table."""
 
-    def __init__(
-        self,
-        path: str,
-        stats_cols: list[str] | None = None,
-        bloom_cols: list[str] | None = None,
-        bloom_bits: int = 4096,
-        bloom_hashes: int = 3,
-    ) -> None:
+    def __init__(self, path: str, stats_cols: list[str] | None = None) -> None:
         self.path = path
         self.stats_cols = stats_cols or []
-        # bloom_cols opts into PER-FILE Bloom filters in the manifest:
-        # min/max stats prune RANGES but are useless for point lookups
-        # on high-cardinality keys (every file's [min, max] contains
-        # almost every id) — the Bloom bitset answers "definitely not
-        # in this file" for equality probes instead, the data-skipping
-        # index Delta/Iceberg attach for the same reason. 4096 bits / 3
-        # hashes ≈ 1% false positives at ~500 distinct values per file;
-        # 512 manifest bytes per file per column.
-        self.bloom_cols = bloom_cols or []
-        self.bloom_bits = bloom_bits
-        self.bloom_hashes = bloom_hashes
         self.log_dir = os.path.join(path, "_txlog")
         self.data_dir = os.path.join(path, "data")
         os.makedirs(self.log_dir, exist_ok=True)
@@ -151,6 +95,14 @@ class TxTable:
         with open(os.path.join(self.log_dir, f"v{v}.json")) as fh:
             return json.load(fh)
 
+    def _head(self) -> tuple[int, dict]:
+        """The latest version and its manifest ({} for an empty table),
+        read ONCE per commit: the txn fence check, the append schema gate
+        and `_claim`'s fence carry-forward all consult this one snapshot,
+        so a commit lists the log once and parses its parent once."""
+        v = self.version()
+        return v, (self._manifest(v) if v >= 0 else {})
+
     # -- read -------------------------------------------------------------
     @staticmethod
     def _names(entries: list) -> list[str]:
@@ -167,52 +119,6 @@ class TxTable:
         return spark.read.schema(schema).parquet(
             *[os.path.join(self.data_dir, n) for n in self._names(entries)]
         )
-
-    def history(self, spark: SparkSession) -> DataFrame:
-        """DESCRIBE HISTORY: one row per surviving version manifest —
-        (version, parent, op, n_files, restored_from) — newest first.
-        The ops-auditing face of the log (what rewrote the table, when a
-        restore happened, which versions vacuum already dropped show as
-        gaps); O(#versions) driver work reading manifests, no data files
-        touched."""
-        rows = []
-        for v in sorted(self._versions(), reverse=True):
-            m = self._manifest(v)
-            rows.append(
-                (
-                    v,
-                    m.get("parent", v - 1),
-                    m.get("op", "?"),
-                    len(m.get("files", [])),
-                    m.get("restored_from"),
-                )
-            )
-        return spark.createDataFrame(
-            rows,
-            "version BIGINT, parent BIGINT, op STRING, n_files BIGINT, "
-            "restored_from BIGINT",
-        )
-
-    def read_asof(self, spark: SparkSession, ts: float) -> DataFrame:
-        """Delta-style ``TIMESTAMP AS OF``: read the latest version
-        whose commit instant is ≤ ``ts`` (epoch seconds). Resolution is
-        a manifest walk (KB of metadata); versions predating the
-        ``committed_at`` field (or vacuumed away) are skipped. The
-        version number remains the ordering authority — the timestamp
-        is a convenience lookup over it, exactly as in Delta, so a
-        clock that stepped backwards between commits resolves to the
-        LATEST qualifying version, never an earlier one."""
-        best = -1
-        for v in self._versions():
-            at = self._manifest(v).get("committed_at")
-            if at is not None and at <= ts and v > best:
-                best = v
-        if best < 0:
-            raise FileNotFoundError(
-                f"txlog table {self.path!r} has no version committed at "
-                f"or before {ts}"
-            )
-        return self.read(spark, version=best)
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Snapshot read: the file set comes from ONE manifest (pinned if
@@ -239,25 +145,14 @@ class TxTable:
             # whose type changed between appends) — must read
             return True
 
-    def read_where(self, spark: SparkSession, col: str, lo, hi) -> DataFrame:
-        """Stats-pruned snapshot read of ``lo <= col <= hi``: whole files
-        whose min/max cannot intersect the range never reach the scan —
-        manifest-level file skipping on top of parquet's own row-group
-        skipping. Exact: the residual filter still applies per row."""
-        m = self._manifest(self.version())
-        hits = [e for e in m["files"] if self._overlaps(e, col, lo, hi)]
-        df = self._read_entries(spark, hits, m["schema"])
-        return df.where(F.col(col).between(lo, hi))
-
     def read_in(
         self, spark: SparkSession, col: str, values, version: int | None = None
     ) -> DataFrame:
-        """Stats-pruned snapshot read of ``col IN values`` — the
-        SET-membership sibling of ``read_where``, built for serve paths
-        whose qualifying keys are known and BOUNDED (the ANN probe: the
-        distinct probed cells of a query batch, ≤ k ids): a file is
-        scanned only when its recorded min/max admits at least one of
-        the values, so a range-clustered table (optimize_compact's
+        """Stats-pruned snapshot read of ``col IN values``, built for
+        serve paths whose qualifying keys are known and BOUNDED (the ANN
+        probe: the distinct probed cells of a query batch, ≤ k ids): a
+        file is scanned only when its recorded min/max admits at least
+        one of the values, so a range-clustered table (optimize_compact's
         cluster_col) serves a probe from the few files covering its
         cells. Exact: the residual IN filter still applies per row; a
         file without stats is always read. The membership test is
@@ -308,135 +203,10 @@ class TxTable:
                 continue
             src = os.path.join(tmp, f)
             stats = self._footer_stats(src) if self.stats_cols else {}
-            nulls = self._footer_nulls(src) if self.stats_cols else {}
-            blooms = self._file_blooms(src) if self.bloom_cols else {}
             name = f"part-{uuid.uuid4().hex}.parquet"
             os.rename(src, os.path.join(self.data_dir, name))
-            entry = {"name": name, "stats": stats}
-            if nulls:
-                entry["nulls"] = nulls
-            if blooms:
-                entry["blooms"] = blooms
-            out.append(entry)
+            out.append({"name": name, "stats": stats})
         shutil.rmtree(tmp)
-        return out
-
-    # -- bloom index -------------------------------------------------------
-    def _bloom_positions(self, value) -> list[int]:
-        """The k deterministic bit positions of a value: md5 of the
-        value's canonical string per hash seed — stable across runs,
-        engines, and Python hash randomization."""
-        import hashlib
-
-        return [
-            int.from_bytes(
-                hashlib.md5(f"{value}#{j}".encode()).digest()[:8], "big"
-            )
-            % self.bloom_bits
-            for j in range(self.bloom_hashes)
-        ]
-
-    @staticmethod
-    def _bloomable(value) -> bool:
-        """Same discipline as `_footer_stats`' type whitelist: Bloom
-        bits are built (and probed) only for int/str values, whose
-        canonical ``str()`` is unambiguous — a DOUBLE column's 7.0
-        would hash differently from an int probe's 7, turning the
-        'definitely absent' answer into silent row loss."""
-        return isinstance(value, (int, str)) and not isinstance(value, bool)
-
-    def _file_blooms(self, path: str) -> dict:
-        """Build the per-column Bloom bitsets for a just-written file
-        (one column-pruned pyarrow read of that file — at production
-        scale the same bits are folded in during the write itself).
-        Encoded as hex of the bitset bytes for the JSON manifest.
-        Columns missing from the file or of non-int/str types degrade
-        to None = never skipped (the `_footer_stats` contract)."""
-        present = set(_pq.ParquetFile(path).schema_arrow.names)
-        cols = [c for c in self.bloom_cols if c in present]
-        table = _pq.read_table(path, columns=cols) if cols else None
-        out = {}
-        for c in self.bloom_cols:
-            if c not in present:
-                out[c] = None
-                continue
-            bits = bytearray(self.bloom_bits // 8)
-            ok = True
-            for v in table.column(c):
-                v = v.as_py()
-                if v is None:
-                    continue
-                if not self._bloomable(v):
-                    ok = False
-                    break
-                for pos in self._bloom_positions(v):
-                    bits[pos // 8] |= 1 << (pos % 8)
-            out[c] = bytes(bits).hex() if ok else None
-        return out
-
-    def _bloom_may_contain(self, entry, col: str, value) -> bool:
-        """False only when the file's Bloom filter PROVES the value
-        absent; no filter — or a probe value outside the int/str
-        canonical domain — ⇒ must read (skipping stays an
-        optimization)."""
-        if not self._bloomable(value):
-            return True
-        blooms = entry.get("blooms", {}) if isinstance(entry, dict) else {}
-        encoded = blooms.get(col)
-        if not encoded:
-            return True
-        bits = bytes.fromhex(encoded)
-        return all(
-            bits[pos // 8] & (1 << (pos % 8))
-            for pos in self._bloom_positions(value)
-        )
-
-    def _may_hold_range(self, entry, col: str, lo, hi) -> bool:
-        """Stats check, plus the Bloom check when the range is a POINT
-        (lo == hi): a file whose filter proves the value absent holds
-        nothing to delete or read in that window."""
-        if not self._overlaps(entry, col, lo, hi):
-            return False
-        if lo == hi and not self._bloom_may_contain(entry, col, lo):
-            return False
-        return True
-
-    def read_point(self, spark: SparkSession, col: str, value) -> DataFrame:
-        """Point lookup ``col = value`` with Bloom + stats file
-        skipping: a file is read only if its min/max admits the value
-        AND its Bloom filter cannot rule it out. Exact — the residual
-        equality filter still applies to the surviving files' rows."""
-        m = self._manifest(self.version())
-        hits = [
-            e
-            for e in m["files"]
-            if self._overlaps(e, col, value, value)
-            and self._bloom_may_contain(e, col, value)
-        ]
-        df = self._read_entries(spark, hits, m["schema"])
-        return df.where(F.col(col) == F.lit(value))
-
-    def _footer_nulls(self, path: str) -> dict:
-        """Per-file NULL counts for ``stats_cols`` (Delta's nullCount
-        stat): rolls up row-group ``null_count`` from the footer just
-        written. Unknown (any row group missing the stat) degrades to
-        absent = never skipped. Powers IS NULL pruning in
-        ``delete_matching``: a file with zero recorded NULLs provably
-        has nothing for an IS-NULL predicate to delete."""
-        md = _pq.ParquetFile(path).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        out: dict[str, int] = {}
-        for col in self.stats_cols:
-            if col not in idx:
-                continue
-            total = 0
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx[col]).statistics
-                if st is None or st.null_count is None:
-                    break
-                total += st.null_count
-            else:
-                out[col] = total
         return out
 
     def _footer_stats(self, path: str) -> dict:
@@ -472,7 +242,7 @@ class TxTable:
             out[col] = None
         return out
 
-    def _claim(self, manifest: dict, expected_parent: int) -> int:
+    def _claim(self, manifest: dict, expected_parent: int, parent: dict) -> int:
         """Atomically claim version expected_parent+1: write the full
         manifest to a temp name, then hard-link it to the version file —
         link fails with EEXIST if a concurrent writer got there first
@@ -484,19 +254,15 @@ class TxTable:
         new commit contributes — so a compaction, merge, or overwrite in
         between never erases a streaming writer's idempotency marker.
         The merge is per-app ``max()``, never overwrite: fences are
-        monotonic by contract, and the fence-check in append/overwrite
-        and the parent read here are not one atomic step — a writer that
-        read the fence before a concurrent commit could otherwise claim
-        the next version carrying a LOWER fence for the same app_id,
-        regressing it and reopening the double-apply window the fence
-        exists to close."""
+        monotonic by contract, and a writer whose fence check read an
+        older snapshot could otherwise claim the next version carrying a
+        LOWER fence for the same app_id, regressing it and reopening the
+        double-apply window the fence exists to close.
+
+        ``parent`` is the manifest of ``expected_parent`` the committing
+        call read in `_head` ({} for an empty table) — never re-read."""
         v = expected_parent + 1
-        parent_txn = (
-            self._manifest(expected_parent).get("txn", {})
-            if expected_parent >= 0
-            else {}
-        )
-        txn = dict(parent_txn)
+        txn = dict(parent.get("txn", {}))
         for app_id, new_v in manifest.get("txn", {}).items():
             old_v = txn.get(app_id)
             txn[app_id] = new_v if old_v is None else max(old_v, new_v)
@@ -504,24 +270,12 @@ class TxTable:
             **manifest,
             "version": v,
             "parent": expected_parent,
-            # wall-clock commit instant: powers read_asof (timestamp
-            # time travel). Informational only — ordering authority is
-            # always the version number, never the clock.
+            # wall-clock commit instant, informational only — ordering
+            # authority is always the version number, never the clock
             "committed_at": time.time(),
         }
         if txn:
             payload["txn"] = txn
-        # CHECK constraints carry forward the same way: a data commit
-        # inherits the parent's set verbatim; only add_constraint /
-        # drop_constraint set the key explicitly (an explicit {} after
-        # the last drop genuinely clears it — hence the `in` test, not
-        # a truthiness merge)
-        if "constraints" not in manifest and expected_parent >= 0:
-            parent_cons = self._manifest(expected_parent).get("constraints", {})
-            if parent_cons:
-                payload["constraints"] = parent_cons
-        elif not payload.get("constraints"):
-            payload.pop("constraints", None)
         tmp = os.path.join(self.log_dir, f"_tmp_{uuid.uuid4().hex[:8]}.json")
         with open(tmp, "w") as fh:
             json.dump(payload, fh)
@@ -538,122 +292,18 @@ class TxTable:
             os.unlink(tmp)
         return v
 
-    def _commit(self, files: list[str], op: str, df: DataFrame) -> int:
-        return self._claim(
-            {"files": files, "op": op, "schema": df.schema.json()},
-            self.version(),
-        )
+    @staticmethod
+    def _fenced(head: dict, txn: tuple[str, int] | None) -> bool:
+        """True when ``head`` already records ``txn=(app_id, version)``
+        or a later version for that app — the write is a replay."""
+        return txn is not None and head.get("txn", {}).get(txn[0], -1) >= txn[1]
 
     def txn_version(self, app_id: str) -> int:
         """Last version this application id recorded via ``txn=`` (-1 if
         never): the read half of the txnAppId/txnVersion idempotency
         fence. One manifest read — no data files touched."""
-        v = self.version()
-        if v < 0:
-            return -1
-        return int(self._manifest(v).get("txn", {}).get(app_id, -1))
-
-    # -- CHECK constraints --------------------------------------------
-    def constraints(self) -> dict[str, str]:
-        """Active CHECK constraints: name -> SQL boolean expression.
-        Stored IN the manifest so they version with the data (time
-        travel shows the constraints of that era) and survive every
-        maintenance rewrite via _claim's carry-forward."""
-        v = self.version()
-        if v < 0:
-            return {}
-        return dict(self._manifest(v).get("constraints", {}))
-
-    def add_constraint(self, spark: SparkSession, name: str, expr: str) -> int:
-        """Delta-style ``ALTER TABLE ADD CONSTRAINT``: the EXISTING
-        snapshot is validated first (one aggregation pass — a table
-        already violating the rule must not get a constraint that lies
-        about it), then a manifest-only version commits the rule. From
-        then on every data commit (append/overwrite/merge/replace_*)
-        validates its incoming rows and REFUSES the whole commit on any
-        violation — Delta CHECK semantics: the expression must evaluate
-        TRUE for every row; FALSE **or NULL** is a violation (stricter
-        than ANSI CHECK, which lets UNKNOWN pass — an ingest gate that
-        waves nulls through is not a gate). Dropping a column an active
-        constraint references is refused at enforcement time by the
-        analyzer (loudly); drop the constraint first."""
-        if not name.isidentifier():
-            raise ValueError(f"constraint name must be an identifier: {name!r}")
-        cur = self.constraints()
-        if name in cur:
-            raise ValueError(f"constraint {name!r} already exists")
-        parent = self.version()
-        if parent < 0:
-            raise ValueError(
-                "cannot constrain a table with no schema yet — commit "
-                "first (an empty overwrite establishes the schema)"
-            )
-        self._enforce_one(self.read(spark, parent), name, expr, existing=True)
-        m = self._manifest(parent)
-        return self._claim(
-            {
-                "files": m["files"],
-                "op": "add_constraint",
-                "schema": m["schema"],
-                "constraints": {**cur, name: expr},
-            },
-            parent,
-        )
-
-    def drop_constraint(self, name: str) -> int:
-        """Remove a CHECK constraint (manifest-only version). Unknown
-        names raise — a deploy that thinks it relaxed a gate must not
-        silently keep enforcing it."""
-        cur = self.constraints()
-        if name not in cur:
-            raise ValueError(f"no such constraint: {name!r}")
-        parent = self.version()
-        m = self._manifest(parent)
-        rest = {k: v for k, v in cur.items() if k != name}
-        return self._claim(
-            {
-                "files": m["files"],
-                "op": "drop_constraint",
-                "schema": m["schema"],
-                "constraints": rest,
-            },
-            parent,
-        )
-
-    @staticmethod
-    def _violation_count(df: DataFrame, expr: str):
-        return F.sum(
-            F.when(~F.coalesce(F.expr(expr), F.lit(False)), 1).otherwise(0)
-        )
-
-    def _enforce_one(
-        self, df: DataFrame, name: str, expr: str, existing: bool = False
-    ) -> None:
-        bad = int(df.agg(self._violation_count(df, expr).alias("n")).first()["n"] or 0)
-        if bad:
-            where = "existing rows" if existing else "incoming rows"
-            raise ConstraintViolation(
-                f"CHECK constraint {name!r} ({expr}) fails for {bad} {where}"
-            )
-
-    def _enforce(self, df: DataFrame) -> None:
-        """Validate an incoming batch against every active constraint in
-        ONE aggregation pass (all violation counters in a single agg —
-        the same single extra job Delta pays per constrained write)."""
-        cons = self.constraints()
-        if not cons:
-            return
-        row = df.agg(
-            *[self._violation_count(df, e).alias(n) for n, e in cons.items()]
-        ).first()
-        bad = {n: int(row[n] or 0) for n in cons if (row[n] or 0) > 0}
-        if bad:
-            detail = ", ".join(
-                f"{n!r} ({cons[n]}): {c} rows" for n, c in sorted(bad.items())
-            )
-            raise ConstraintViolation(
-                f"commit refused — CHECK constraint violations: {detail}"
-            )
+        _, head = self._head()
+        return int(head.get("txn", {}).get(app_id, -1))
 
     def overwrite(
         self,
@@ -673,9 +323,9 @@ class TxTable:
         exactly-once semantics for foreachBatch replays, where a crash
         between the manifest flip and the streaming checkpoint commit
         makes the stream re-deliver an already-applied batch."""
-        if txn is not None and self.txn_version(txn[0]) >= txn[1]:
-            return self.version()
-        self._enforce(df)
+        parent, head = self._head()
+        if self._fenced(head, txn):
+            return parent
         m = {
             "files": self._write_files(df),
             "op": "overwrite",
@@ -685,7 +335,7 @@ class TxTable:
             m.update(extra)
         if txn is not None:
             m["txn"] = {txn[0]: txn[1]}
-        return self._claim(m, self.version())
+        return self._claim(m, parent, head)
 
     def append(
         self, df: DataFrame, txn: tuple[str, int] | None = None
@@ -713,30 +363,30 @@ class TxTable:
         (app_id, version) the table has already recorded is skipped (see
         ``overwrite``); a committed append records it in the manifest so
         a foreachBatch replay after a crash never double-appends."""
-        if txn is not None and self.txn_version(txn[0]) >= txn[1]:
-            return self.version()
-        self._enforce(df)
-        parent = self.version()
-        base = self._manifest(parent)["files"] if parent >= 0 else []
-        self._check_append_evolution(parent, df.schema)
+        parent, head = self._head()
+        if self._fenced(head, txn):
+            return parent
+        self._check_append_evolution(head, df.schema)
         new = self._write_files(df)
-        m = {"files": base + new, "op": "append", "schema": df.schema.json()}
+        m = {
+            "files": head.get("files", []) + new,
+            "op": "append",
+            "schema": df.schema.json(),
+        }
         if txn is not None:
             m["txn"] = {txn[0]: txn[1]}
-        return self._claim(m, parent)
+        return self._claim(m, parent, head)
 
-    def _check_append_evolution(self, parent: int, new_schema) -> None:
-        """Append-shaped schema-evolution gate (shared by ``append`` and
-        WAP ``publish``): column add/remove is legal, a TYPE change on a
+    def _check_append_evolution(self, head: dict, new_schema) -> None:
+        """Append-shaped schema-evolution gate against the parent
+        manifest ``head``: column add/remove is legal, a TYPE change on a
         shared column or a RENAME-shaped drop+add is refused loudly —
         see ``append``'s docstring for the full contract."""
-        if parent < 0:
+        if not head:
             return
         old_types = {
             f.name: f.dataType.simpleString()
-            for f in StructType.fromJson(
-                json.loads(self._manifest(parent)["schema"])
-            ).fields
+            for f in StructType.fromJson(json.loads(head["schema"])).fields
         }
         new_types = {
             f.name: f.dataType.simpleString() for f in new_schema.fields
@@ -774,11 +424,12 @@ class TxTable:
         snapshot read at start; if another commit lands in between, the
         version claim CONFLICTS instead of silently losing their rows —
         the lost-update window `merge_upsert`'s lockfile only guards
-        becomes impossible by construction."""
-        self._enforce(staging)
-        parent = self.version()
+        becomes impossible by construction. Upsert semantics: a staging
+        row replaces every target row with its key; unmatched rows on
+        either side are kept."""
+        parent, head = self._head()
         if parent >= 0:
-            target = self.read(spark, parent)
+            target = self._read_entries(spark, head["files"], head["schema"])
             kept = target.join(
                 staging.select(*key_cols).distinct(), key_cols, "left_anti"
             )
@@ -789,115 +440,7 @@ class TxTable:
         return self._claim(
             {"files": files, "op": "merge", "schema": merged.schema.json()},
             parent,
-        )
-
-    def merge_into(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        key_cols: list[str],
-        matched_update: dict[str, str] | None = None,
-        matched_delete: str | None = None,
-        insert_unmatched: bool = True,
-    ) -> int:
-        """Full Delta-style ``MERGE INTO`` clause semantics (the plain
-        ``merge`` above is the upsert special case). For each target row
-        with a key match in ``source``:
-
-        * ``matched_delete`` (SQL condition over ``t.*`` / ``s.*``)
-          true → the row is DELETED;
-        * else ``matched_update`` ({target col -> SQL expr over t/s})
-          → the row is rewritten with those expressions (unlisted
-          columns keep their target values);
-        * else the row carries through unchanged.
-
-        Unmatched target rows always carry through; unmatched SOURCE
-        rows insert when ``insert_unmatched`` (they must then supply
-        every target column). Delta's multiple-matches rule applies: a
-        source with DUPLICATE keys would update one target row twice in
-        an undefined order, so it is refused loudly up front. Snapshot
-        isolation is merge()'s: reconcile against the version read at
-        start, claim parent+1 — a concurrent commit turns into
-        CommitConflict, never a lost update. CHECK constraints validate
-        the final frame (updates can violate just as inserts can).
-
-        Shape: ONE key-equi full-outer join target×source; every clause
-        is a CASE over that joined row — no per-clause rescans. Like
-        merge(), this rewrites the snapshot's files; a stats-pruned
-        touched-file variant (replace_where's trick keyed by the
-        source's key range) is the documented upgrade path when merges
-        touch a narrow window of a huge table."""
-        parent = self.version()
-        # duplicate-source-key refusal comes BEFORE the empty-table
-        # fallback: the deterministic-merge rule is about the SOURCE, so
-        # a first load must be refused exactly like a merge against data
-        # — otherwise the duplicates insert silently on day one and the
-        # same call starts failing the day the table is non-empty
-        dup = (
-            source.groupBy(*key_cols)
-            .count()
-            .where(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            k = {c: dup[0][c] for c in key_cols}
-            raise ValueError(
-                f"merge_into: source has duplicate key {k} — multiple "
-                "source rows would match one target row (Delta's "
-                "deterministic-merge rule refuses this)"
-            )
-        if parent < 0:
-            if not insert_unmatched:
-                raise ValueError("merge_into on an empty table inserts only")
-            return self.merge(spark, source, key_cols)
-        target = self.read(spark, parent)
-        cols = target.columns
-        # existence sentinels, not key-null tests: eqNullSafe lets NULL
-        # keys match each other, and a null-keyed matched row must still
-        # read as matched
-        t = target.withColumn("_t_exists", F.lit(True)).alias("t")
-        s = source.withColumn("_s_exists", F.lit(True)).alias("s")
-        cond = None
-        for c in key_cols:
-            eq = F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}"))
-            cond = eq if cond is None else cond & eq
-        joined = (
-            t.join(s, cond, "full_outer")
-            .withColumn(
-                "_is_target", F.coalesce(F.col("t._t_exists"), F.lit(False))
-            )
-            .withColumn(
-                "_matched",
-                F.col("_is_target")
-                & F.coalesce(F.col("s._s_exists"), F.lit(False)),
-            )
-        )
-        # matched deletes drop; unmatched source rows drop unless inserting
-        keep = F.lit(True)
-        if matched_delete is not None:
-            keep = keep & ~(
-                F.col("_matched") & F.coalesce(F.expr(matched_delete), F.lit(False))
-            )
-        if not insert_unmatched:
-            keep = keep & F.col("_is_target")
-        survivors = joined.where(keep)
-        out_cols = []
-        upd = matched_update or {}
-        for c in cols:
-            updated = F.expr(upd[c]) if c in upd else F.col(f"t.{c}")
-            out_cols.append(
-                F.when(F.col("_matched"), updated)
-                .when(F.col("_is_target"), F.col(f"t.{c}"))
-                .otherwise(F.col(f"s.{c}"))
-                .alias(c)
-            )
-        merged = survivors.select(*out_cols)
-        self._enforce(merged)
-        files = self._write_files(merged)
-        return self._claim(
-            {"files": files, "op": "merge_into", "schema": merged.schema.json()},
-            parent,
+            head,
         )
 
     def replace_where(
@@ -925,14 +468,10 @@ class TxTable:
                 f"replace_where: {n_bad} incoming rows fall outside "
                 f"[{lo}, {hi}] on {col!r} (NULLs count as outside)"
             )
-        self._enforce(df)
-        parent = self.version()
-        entries = self._manifest(parent)["files"] if parent >= 0 else []
-        # point windows additionally consult the Bloom index: a file the
-        # filter proves free of the key has nothing to delete — it
-        # carries over physically untouched (ROADMAP r5 #9)
-        touched = [e for e in entries if self._may_hold_range(e, col, lo, hi)]
-        untouched = [e for e in entries if not self._may_hold_range(e, col, lo, hi)]
+        parent, head = self._head()
+        entries = head.get("files", [])
+        touched = [e for e in entries if self._overlaps(e, col, lo, hi)]
+        untouched = [e for e in entries if not self._overlaps(e, col, lo, hi)]
         new = self._write_files(df)
         if touched:
             survivors = self._read_entries(
@@ -946,131 +485,7 @@ class TxTable:
                 "schema": df.schema.json(),
             },
             parent,
-        )
-
-    def delete_where(self, spark: SparkSession, col: str, value) -> int:
-        """Transactional DELETE of every row with ``col = value`` — the
-        right-to-be-forgotten primitive (the storage half of the
-        anonimato_k / l_diversidad / t_cercania release audits): one
-        manifest flip, and only files that MAY hold the value (stats
-        range + Bloom filter both admit it) are rewritten without the
-        matching rows; every other file carries into the new version
-        physically untouched, so the cost is bounded by the subject's
-        file footprint, not the table. NULL never equals — a NULL key
-        row survives any delete_where, per SQL DELETE semantics.
-
-        Honesty about erasure: prior versions still reference the old
-        files (time travel works), so the data is GONE FROM HEAD but
-        not from disk until ``vacuum`` passes the retention window —
-        the retention setting IS the legal deletion horizon, exactly as
-        in Delta. Returns the new version.
-
-        ``value=None`` is refused: a point DELETE of NULL is ill-defined
-        under the stated "NULL never equals" contract (eqNullSafe would
-        silently match — and delete — every NULL-keyed row, and pruning
-        degrades to rewriting all files). Use
-        ``delete_matching("col IS NULL")`` to delete NULL rows on
-        purpose."""
-        if value is None:
-            raise ValueError(
-                "delete_where(value=None) is ill-defined — NULL never "
-                "equals under SQL DELETE semantics; use "
-                "delete_matching(f'{col} IS NULL') to delete NULL rows "
-                "explicitly"
-            )
-        parent = self.version()
-        if parent < 0:
-            raise FileNotFoundError(f"txlog table {self.path!r} has no commits")
-        m = self._manifest(parent)
-        touched = [
-            e
-            for e in m["files"]
-            if self._overlaps(e, col, value, value)
-            and self._bloom_may_contain(e, col, value)
-        ]
-        untouched = [
-            e
-            for e in m["files"]
-            if not (
-                self._overlaps(e, col, value, value)
-                and self._bloom_may_contain(e, col, value)
-            )
-        ]
-        new = []
-        if touched:
-            survivors = self._read_entries(spark, touched, m["schema"]).where(
-                ~F.col(col).eqNullSafe(F.lit(value))
-            )
-            new = self._write_files(survivors)
-        return self._claim(
-            {
-                "files": untouched + new,
-                "op": "delete_where",
-                "schema": m["schema"],
-            },
-            parent,
-        )
-
-    def delete_matching(
-        self,
-        spark: SparkSession,
-        predicate,
-        prune: tuple[str, object, object] | None = None,
-        prune_null: str | None = None,
-    ) -> int:
-        """Full Delta-style DELETE: drop every row where ``predicate``
-        (a Column or SQL string) evaluates TRUE — NULL keeps the row,
-        SQL DELETE semantics — in one manifest flip. ``prune`` is the
-        optional stats hint ``(col, lo, hi)``: files whose recorded
-        min/max provably miss the range carry over physically untouched
-        (the caller asserts the predicate can only be TRUE inside the
-        range — the same contract as Delta's partition-pruned DELETE);
-        ``prune_null`` is its IS-NULL sibling (Delta's nullCount stat):
-        the caller asserts the predicate can only be TRUE where that
-        column IS NULL, so files whose recorded null count is ZERO carry
-        over untouched — the pruning half of the sanctioned
-        ``delete_matching("col IS NULL")`` path delete_where's refusal
-        points at. Files with no recorded null count degrade to touched
-        (correct, unpruned). Without any hint every file is rewritten.
-        ``delete_where`` remains the point form with automatic
-        stats+Bloom pruning; this is its arbitrary-predicate sibling."""
-        parent = self.version()
-        if parent < 0:
-            raise FileNotFoundError(f"txlog table {self.path!r} has no commits")
-        m = self._manifest(parent)
-        cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        if prune is not None and prune_null is not None:
-            raise ValueError("pass prune OR prune_null, not both")
-        if prune is not None:
-            col, lo, hi = prune
-            touched = [e for e in m["files"] if self._may_hold_range(e, col, lo, hi)]
-            untouched = [
-                e for e in m["files"] if not self._may_hold_range(e, col, lo, hi)
-            ]
-        elif prune_null is not None:
-
-            def may_hold_null(entry) -> bool:
-                nulls = entry.get("nulls", {}) if isinstance(entry, dict) else {}
-                n = nulls.get(prune_null)
-                return n is None or n > 0
-
-            touched = [e for e in m["files"] if may_hold_null(e)]
-            untouched = [e for e in m["files"] if not may_hold_null(e)]
-        else:
-            touched, untouched = list(m["files"]), []
-        new = []
-        if touched:
-            survivors = self._read_entries(spark, touched, m["schema"]).where(
-                ~F.coalesce(cond, F.lit(False))
-            )
-            new = self._write_files(survivors)
-        return self._claim(
-            {
-                "files": untouched + new,
-                "op": "delete_matching",
-                "schema": m["schema"],
-            },
-            parent,
+            head,
         )
 
     def replace_partitions(
@@ -1098,9 +513,8 @@ class TxTable:
                     "refresh_predicate (NULLs count as violating) — they "
                     "would duplicate against the preserved slice"
                 )
-        self._enforce(df)
-        parent = self.version()
-        entries = self._manifest(parent)["files"] if parent >= 0 else []
+        parent, head = self._head()
+        entries = head.get("files", [])
         tuples = df.select(*partition_cols).distinct()
         values = tuples.collect()  # touched-partition list: small by K3 contract
 
@@ -1134,135 +548,10 @@ class TxTable:
                 "schema": df.schema.json(),
             },
             parent,
+            head,
         )
 
     # -- maintenance ------------------------------------------------------
-    def optimize_zorder(
-        self,
-        spark: SparkSession,
-        cols: list[str],
-        n_files: int = 16,
-        bits: int = 4,
-    ) -> int:
-        """OPTIMIZE ZORDER BY — rewrite the current snapshot's files
-        along the Morton curve of ``cols`` so every file's min/max
-        stats become a tight rectangle in EVERY listed dimension:
-        `read_where`/`replace_where` pruning then works for all of
-        them, not just the ingest order's leading key (the measured
-        pruning matrix lives in the `zorden_poda` registry query —
-        lexicographic 5/64 vs 33/64 on leading/other key, z-order
-        16/64 vs 12/64).
-
-        Each column is first bucketed into 2^bits quantile tiles
-        (value-distribution-proof, like Delta's range ids). Tile
-        boundaries are EXACT row-rank quantiles from the per-value
-        histogram when the column's distinct cardinality is within
-        ``_Z_DISTINCT_CAP`` (a pure function of the data multiset —
-        deterministic across sessions and layouts; ``approxQuantile``
-        past the cap, deterministic per layout only), broadcast as
-        ≤2^bits literals — and assignment is a
-        map-side comparison sum, sothe maintenance op performs NO
-        global sort of the table (VERDICT r11 flagged the former
-        unpartitioned-ntile form as a one-task sort at scale; tied
-        values now share a tile, which only widens that value's
-        rectangle). The tiles' bits interleave into the curve position,
-        and file assignment is DETERMINISTIC exact z-value bucketing
-        (VERDICT r13 #1): file(row) = z·n_files div 2^(bits·|cols|), a
-        pure function of the row's values — the former
-        ``repartitionByRange`` laid boundaries from a RANDOM sample, so
-        file rectangles (and therefore stats-pruning effectiveness)
-        varied run to run right at tight thresholds. Each bucket routes
-        to its own output partition through an inverse-Murmur3 key (no
-        sampling, no cross-bucket collisions), so OPTIMIZE ZORDER's
-        pruning guarantee is a property of the data, not a
-        distribution. Data is byte-identical (one manifest flip,
-        op='optimize_zorder'); prior versions stay readable; a
-        concurrent commit raises CommitConflict rather than losing
-        either write."""
-        parent = self.version()
-        if parent < 0:
-            raise FileNotFoundError(f"txlog table {self.path!r} has no commits")
-        m = self._manifest(parent)
-        df = self._read_entries(spark, m["files"], m["schema"])
-        nb = 1 << bits
-        aux = []
-        for ci, c in enumerate(cols):
-            bcol = f"__zb{ci}"
-            vals = df.select(F.col(c).cast("double").alias("__q")).where(
-                F.col("__q").isNotNull()
-            )
-            # Tile borders are EXACT row-rank quantiles whenever the
-            # column's distinct cardinality is bounded: the per-value
-            # histogram (one map-side-combined groupBy) collects and the
-            # borders derive by cumulative count — a pure function of
-            # the DATA MULTISET, independent of file layout, splits, and
-            # parallelism (approxQuantile's GK sketch is deterministic
-            # only per physical layout, and repartitionByRange seeds by
-            # session RDD id, so "the same data" can tile differently
-            # across sessions). Realistic z-order dimensions (days,
-            # bucketed ids, categories) sit far under the cap; past it
-            # the approx path still yields a valid monotone tiling,
-            # deterministic per snapshot layout.
-            pares = vals.groupBy("__q").agg(
-                F.count(F.lit(1)).alias("cnt")
-            ).limit(_Z_DISTINCT_CAP + 1).collect()
-            if len(pares) <= _Z_DISTINCT_CAP:
-                pares.sort(key=lambda r: r["__q"])
-                n_col = sum(r["cnt"] for r in pares)
-                objetivos = [
-                    -(-(n_col * i) // nb) for i in range(1, nb)
-                ]
-                bordes, acumulado, ti = [], 0, 0
-                for r in pares:
-                    acumulado += r["cnt"]
-                    while ti < nb - 1 and acumulado >= objetivos[ti]:
-                        bordes.append(float(r["__q"]))
-                        ti += 1
-                bordes = sorted(set(bordes))
-            else:
-                qs = [i / nb for i in range(1, nb)]
-                bordes = sorted(
-                    set(vals.stat.approxQuantile("__q", qs, 1.0 / (4 * nb)))
-                )
-            tile = F.lit(0)
-            for b in bordes:
-                tile = tile + (F.col(c).cast("double") > F.lit(b)).cast("int")
-            df = df.withColumn(bcol, tile)
-            aux.append(bcol)
-        stride = len(cols)
-        terms = [
-            f"shiftleft((shiftright(__zb{ci}, {i}) & 1), {i * stride + ci})"
-            for ci in range(stride)
-            for i in range(bits)
-        ]
-        df = df.withColumn("__z", F.expr(" + ".join(terms)))
-        # exact z-value bucketing: z < 2^(bits·stride), so the bucket is
-        # a pure row-value function with n_files contiguous curve
-        # segments — then an inverse-hash key routes bucket b to output
-        # partition b exactly (hash partitioning is content-based, so
-        # the layout is independent of input splits / parallelism;
-        # repartitionByRange's sampled boundaries were not)
-        z_span = 1 << (bits * stride)
-        bucket = F.expr(f"CAST((__z * {n_files}) DIV {z_span} AS INT)")
-        claves = _inverse_hash_keys(spark, n_files)
-        df = df.withColumn(
-            "__zf",
-            F.element_at(
-                F.array(*[F.lit(k).cast("bigint") for k in claves]),
-                bucket + F.lit(1),
-            ),
-        )
-        laid = (
-            df.repartition(n_files, F.col("__zf"))
-            .sortWithinPartitions("__z")
-            .drop("__z", "__zf", *aux)
-        )
-        files = self._write_files(laid)
-        return self._claim(
-            {"files": files, "op": "optimize_zorder", "schema": m["schema"]},
-            parent,
-        )
-
     def optimize_compact(
         self,
         spark: SparkSession,
@@ -1285,13 +574,12 @@ class TxTable:
         (Delta OPTIMIZE's ZORDER half, one-dimensional) so each output
         file covers a contiguous value range and the per-file min/max
         stats stay TIGHT — without it a coalesce interleaves the small
-        files' rows and a stats-pruned scan (read_where) degrades to
+        files' rows and a stats-pruned scan (read_in) degrades to
         reading every compacted file. The ANN posting table compacts
         with cluster_col='celda' for exactly this reason."""
-        parent = self.version()
+        parent, m = self._head()
         if parent < 0:
             raise FileNotFoundError(f"txlog table {self.path!r} has no commits")
-        m = self._manifest(parent)
 
         sized = [
             (e, os.path.getsize(os.path.join(self.data_dir, self._names([e])[0])))
@@ -1310,97 +598,7 @@ class TxTable:
         return self._claim(
             {"files": big + new, "op": "optimize_compact", "schema": m["schema"]},
             parent,
-        )
-
-    def clone_to(self, dst_path: str, version: int | None = None) -> "TxTable":
-        """ZERO-COPY CLONE (Delta SHALLOW CLONE semantics, hard-link
-        implementation): create a new independent table at ``dst_path``
-        whose v0 is the source's snapshot at ``version`` (default HEAD).
-        Data files HARD-LINK into the clone — no bytes copied, O(files)
-        metadata work — and because data files are immutable on both
-        sides, the clone and the source then diverge freely: writes to
-        either never touch the other, and either side's vacuum only
-        unlinks ITS directory entry (the inode survives until the last
-        table drops it). The classic uses: a dev/test copy of a
-        production mart, or a frozen training-data snapshot that keeps
-        living while the source keeps ingesting."""
-        v = self.version() if version is None else version
-        if v < 0:
-            raise FileNotFoundError(f"txlog table {self.path!r} has no commits")
-        m = self._manifest(v)
-        dst = TxTable(
-            dst_path,
-            stats_cols=self.stats_cols,
-            bloom_cols=self.bloom_cols,
-            bloom_bits=self.bloom_bits,
-            bloom_hashes=self.bloom_hashes,
-        )
-        for name in self._names(m["files"]):
-            src_f = os.path.join(self.data_dir, name)
-            dst_f = os.path.join(dst.data_dir, name)
-            if not os.path.exists(dst_f):
-                os.link(src_f, dst_f)
-        dst._claim(
-            {
-                "files": m["files"],
-                "op": "clone",
-                "schema": m["schema"],
-                "cloned_from": self.path,
-                "cloned_version": v,
-            },
-            -1,
-        )
-        return dst
-
-    def restore(self, version: int) -> int:
-        """Delta-style RESTORE: commit a NEW version whose file set IS
-        the target version's — time travel made durable. Nothing is
-        rewritten and history is preserved (the restore is itself an
-        ordinary commit on top of the current head, so the bad versions
-        remain readable for forensics); readers at HEAD simply see the
-        old snapshot again. Because data files are immutable, this is a
-        manifest flip — O(KB) regardless of table size. Fails loudly if
-        ``vacuum`` already reclaimed any file the target references
-        (the retention window is the undo horizon). The change feed
-        treats a restore as a rewrite: ``changes`` across it raises
-        NonIncrementalHistory, exactly like merge/overwrite."""
-        try:
-            m = self._manifest(version)
-        except FileNotFoundError as exc:
-            # vacuum drops old MANIFESTS too — a vacuumed target version
-            # is the same "past the undo horizon" condition as vacuumed
-            # data files, and must fail with the same documented error.
-            raise ValueError(
-                f"restore: version {version} has no manifest (vacuumed) — "
-                "past the retention undo horizon"
-            ) from exc
-        missing = [
-            n
-            for n in self._names(m["files"])
-            if not os.path.exists(os.path.join(self.data_dir, n))
-        ]
-        if missing:
-            raise ValueError(
-                f"restore: version {version} references vacuumed files "
-                f"{missing[:3]}{'...' if len(missing) > 3 else ''} — "
-                "past the retention undo horizon"
-            )
-        # Delta RESTORE restores METADATA with the data: the target
-        # era's constraint set comes back explicitly (an era with no
-        # constraints restores to none — the explicit {} overrides
-        # _claim's parent carry-forward). The txn fence map is NOT
-        # restored: idempotency markers are monotone facts about what
-        # was ever applied, and reviving older ones would reopen the
-        # double-append window the fence exists to close.
-        return self._claim(
-            {
-                "files": m["files"],
-                "op": "restore",
-                "schema": m["schema"],
-                "restored_from": version,
-                "constraints": m.get("constraints", {}),
-            },
-            self.version(),
+            m,
         )
 
     # -- tags: named refs (Iceberg-style), vacuum GC roots ------------------
@@ -1409,14 +607,13 @@ class TxTable:
 
     def create_tag(self, name: str, version: int | None = None) -> int:
         """Pin a NAMED, immutable ref to a version (Iceberg tag
-        semantics): ``read_tag`` resolves it forever, and ``vacuum``
+        semantics): ``tags()`` resolves it forever, and ``vacuum``
         treats tagged versions as GC ROOTS — their manifest and data
         files survive any retention policy until the tag is deleted.
-        That is the release-pinning contract: a model card that says
-        'trained on corpus@v12' needs v12 readable after the nightly
-        vacuum, not best-effort. Tags are immutable (re-pointing is
-        delete + create, both explicit); duplicate names and unknown
-        versions are refused loudly."""
+        That is the index-pinning contract: a serve pinned to v12 needs
+        v12 readable after the nightly vacuum, not best-effort. Tags are
+        immutable (re-pointing is delete + create, both explicit);
+        duplicate names and unknown versions are refused loudly."""
         if not name.isidentifier():
             raise ValueError(f"tag name must be an identifier: {name!r}")
         v = self.version() if version is None else version
@@ -1448,12 +645,6 @@ class TxTable:
                 out[t["name"]] = t["version"]
         return out
 
-    def read_tag(self, spark: SparkSession, name: str) -> DataFrame:
-        ts = self.tags()
-        if name not in ts:
-            raise ValueError(f"no such tag {name!r} on {self.path!r}")
-        return self.read(spark, version=ts[name])
-
     def delete_tag(self, name: str) -> None:
         try:
             os.unlink(self._tag_path(name))
@@ -1461,353 +652,6 @@ class TxTable:
             raise ValueError(
                 f"no such tag {name!r} on {self.path!r}"
             ) from exc
-
-    # -- write-audit-publish (Iceberg WAP / staged commits) -----------------
-    def _staged_path(self, staging_id: str) -> str:
-        return os.path.join(self.log_dir, f"staged_{staging_id}.json")
-
-    def _staged_manifest(self, staging_id: str) -> dict:
-        try:
-            with open(self._staged_path(staging_id)) as fh:
-                return json.load(fh)
-        except FileNotFoundError as exc:
-            raise ValueError(
-                f"unknown staging id {staging_id!r} on {self.path!r} "
-                "(already published or discarded?)"
-            ) from exc
-
-    def _resolve_staging(self, id_or_name: str) -> str:
-        """Accept a staging id or a stage NAME; names resolve to the one
-        live stage carrying them (uniqueness enforced at stage time)."""
-        if os.path.exists(self._staged_path(id_or_name)):
-            return id_or_name
-        for sid, meta in self.staged().items():
-            if meta.get("name") == id_or_name:
-                return sid
-        return id_or_name  # let _staged_manifest raise the loud unknown
-
-    def _stage_name_marker(self, name: str) -> str:
-        import hashlib
-
-        h = hashlib.sha1(name.encode("utf-8")).hexdigest()[:16]
-        return os.path.join(self.log_dir, f"stagename_{h}.json")
-
-    def _claim_stage_name(self, name: str, sid: str) -> None:
-        """ATOMIC name claim (ADVICE r9): the old uniqueness check was
-        scan-then-write, so two concurrent stagers under one name could
-        both pass and leave two live stages the name resolved between by
-        listdir order. The claim is now a hard-link marker (same atomic
-        idiom as ``_claim``): first link wins, EEXIST is the loud
-        refusal. A marker whose staged manifest is gone is a crash
-        leftover (publish/discard unlink the manifest FIRST, and the
-        marker is only ever linked after its manifest).
-
-        STALE-MARKER RECLAIM (ADVICE r10): reclaim is an atomic
-        ``os.rename`` to a unique tombstone — never a bare unlink. Two
-        racers that both read the same crash leftover would, under
-        unlink, both 'remove' it, and the slower unlink deletes the
-        faster racer's FRESHLY LINKED live marker, letting both claims
-        succeed (the duplicate-name bug this marker exists to prevent).
-        rename removes exactly the inode at the path ONCE: the loser
-        gets FileNotFoundError and retries the link, hitting EEXIST on
-        the winner's fresh marker. Two guards close the residual
-        read→rename window: the winner VERIFIES ownership by re-reading
-        the marker after linking, and a reclaimer that finds its
-        tombstone holds a LIVE claim (the holder linked between the read
-        and the rename) restores it and refuses. Exhausted retries raise
-        a contention error, not the misleading 'already active' (ADVICE
-        r10: repeated benign races — holder vanishing between the link
-        attempt and the marker read — are transient, not a live
-        duplicate)."""
-        marker = self._stage_name_marker(name)
-        tmp = os.path.join(self.log_dir, f"_tmp_{uuid.uuid4().hex[:8]}.json")
-        with open(tmp, "w") as fh:
-            json.dump({"name": name, "sid": sid}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        already = ValueError(
-            f"stage name {name!r} is already active on {self.path!r} "
-            "— publish or discard it first (names are unique among "
-            "live stages)"
-        )
-        try:
-            for _ in range(16):
-                try:
-                    os.link(tmp, marker)
-                except FileExistsError:
-                    pass
-                else:
-                    # verify-after-link: a concurrent stale-reclaim that
-                    # read the OLD marker may have renamed OURS away in
-                    # its read→rename window; if the path no longer
-                    # carries our sid the claim was stolen — retry.
-                    try:
-                        with open(marker) as fh:
-                            if json.load(fh).get("sid") == sid:
-                                return
-                    except (FileNotFoundError, json.JSONDecodeError):
-                        pass
-                    continue
-                try:
-                    with open(marker) as fh:
-                        prev = json.load(fh)
-                except (FileNotFoundError, json.JSONDecodeError):
-                    continue  # holder vanished / mid-race — retry the link
-                if os.path.exists(self._staged_path(prev.get("sid", ""))):
-                    if prev.get("sid") == sid:
-                        # the marker already carries OUR claim: a
-                        # reclaim-then-restore race can re-present our own
-                        # restored marker on the retry path — raising
-                        # 'already active' here would make the caller
-                        # unstage its own valid batch (ADVICE r11).
-                        return
-                    raise already
-                # stale marker from a crashed publish/discard: reclaim by
-                # atomic rename — only one racer wins removal
-                tomb = os.path.join(
-                    self.log_dir, f"_tomb_{uuid.uuid4().hex[:8]}.json"
-                )
-                try:
-                    os.rename(marker, tomb)
-                except FileNotFoundError:
-                    continue  # another reclaimer won — retry the link
-                try:
-                    with open(tomb) as fh:
-                        got = json.load(fh)
-                except (OSError, json.JSONDecodeError):
-                    got = {}
-                if got.get("sid") != prev.get("sid") and os.path.exists(
-                    self._staged_path(got.get("sid", ""))
-                ):
-                    # we renamed a DIFFERENT, live marker (holder claimed
-                    # between our read and our rename) — restore it and
-                    # refuse: the name is genuinely held. The restore
-                    # itself can race a THIRD claimant linking a fresh
-                    # marker (ADVICE r11): blindly unlinking the tombstone
-                    # on FileExistsError would destroy the live holder's
-                    # claim record while the racer's survives — the exact
-                    # duplicate this mechanism exists to prevent. So on
-                    # EEXIST we validate the racer: stale → reclaim it and
-                    # retry the restore; live → hard error, KEEPING the
-                    # tombstone as the holder's durable record.
-                    for _ in range(16):
-                        try:
-                            os.link(tomb, marker)
-                        except FileExistsError:
-                            try:
-                                with open(marker) as fh:
-                                    cur = json.load(fh)
-                            except (FileNotFoundError, json.JSONDecodeError):
-                                continue  # racer vanished — retry restore
-                            if cur.get("sid") == got.get("sid"):
-                                break  # someone already restored the holder
-                            if os.path.exists(
-                                self._staged_path(cur.get("sid", ""))
-                            ):
-                                raise RuntimeError(
-                                    f"stage name {name!r} on {self.path!r}: "
-                                    "two LIVE claims collided during a "
-                                    "stale-marker reclaim (holder sid "
-                                    f"{got.get('sid')!r} preserved in "
-                                    f"{tomb!r}, racer sid "
-                                    f"{cur.get('sid')!r} holds the marker) "
-                                    "— manual reconciliation required"
-                                )
-                            racer_tomb = os.path.join(
-                                self.log_dir,
-                                f"_tomb_{uuid.uuid4().hex[:8]}.json",
-                            )
-                            try:
-                                os.rename(marker, racer_tomb)
-                            except FileNotFoundError:
-                                continue
-                            os.unlink(racer_tomb)
-                            continue
-                        else:
-                            break
-                    else:
-                        raise RuntimeError(
-                            f"stage-name restore for {name!r} on "
-                            f"{self.path!r} lost 16 consecutive races — "
-                            f"holder record preserved in {tomb!r}"
-                        )
-                    os.unlink(tomb)
-                    raise already
-                os.unlink(tomb)
-            raise RuntimeError(
-                f"stage-name claim for {name!r} on {self.path!r} lost "
-                "16 consecutive races (markers vanishing mid-claim) — "
-                "transient contention, retry the stage"
-            )
-        finally:
-            os.unlink(tmp)
-
-    def _release_stage_name(self, manifest: dict) -> None:
-        if manifest.get("name") is not None:
-            try:
-                os.unlink(self._stage_name_marker(manifest["name"]))
-            except FileNotFoundError:
-                pass
-
-    def stage_append(self, df: DataFrame, name: str | None = None) -> str:
-        """WRITE half of write-audit-publish (the Iceberg WAP pattern):
-        the batch's data files land in the data dir and a STAGED manifest
-        records them, but no version flips — readers cannot see the rows,
-        and vacuum's staged-file root set protects them from GC while
-        they await audit. Returns the staging id for ``read_staged`` /
-        ``publish`` / ``discard_staged``.
-
-        NAMED STAGES (Iceberg's multi-branch WAP): pass ``name`` to label
-        the stage; any number of pipelines can stage/audit/publish
-        INDEPENDENTLY on one table — each stage sees head + ITS OWN rows
-        only, publishes in any order, and vacuum protects every live
-        stage's files. Names are unique among ACTIVE stages (a second
-        stage under a live name is refused loudly — two pipelines racing
-        one label is a wiring bug); the name frees on publish/discard.
-        read_staged/publish/discard_staged accept the id or the name.
-
-        Nothing is validated here BY DESIGN: the audit window is where
-        quality gates run (on the would-be state, via read_staged), and
-        publish() re-checks constraints and schema evolution against the
-        head AT PUBLISH TIME — the head may have moved since staging, and
-        append semantics make that legal (disjoint files)."""
-        files = self._write_files(df)
-        sid = uuid.uuid4().hex[:8]
-        payload = {
-            "files": files,
-            "op": "append",
-            "schema": df.schema.json(),
-            "base_version": self.version(),
-            "staged_at": time.time(),
-            "name": name,
-        }
-        tmp = os.path.join(self.log_dir, f"_tmp_{uuid.uuid4().hex[:8]}.json")
-        with open(tmp, "w") as fh:
-            json.dump(payload, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.link(tmp, self._staged_path(sid))
-        os.unlink(tmp)
-        if name is not None:
-            # Claim AFTER the manifest is live so a marker without its
-            # manifest is always a crash leftover (reclaimable), never a
-            # racer mid-stage. Losing the claim unstages this batch.
-            try:
-                self._claim_stage_name(name, sid)
-            except (ValueError, RuntimeError):
-                # lost the name (live holder) OR exhausted contention
-                # retries — either way this batch must not stay staged
-                try:
-                    os.unlink(self._staged_path(sid))
-                except FileNotFoundError:
-                    pass
-                raise
-        return sid
-
-    def staged(self) -> dict[str, dict]:
-        """Staging inventory: id -> {base_version, staged_at, n_files,
-        name} (name None for anonymous stages)."""
-        out: dict[str, dict] = {}
-        for f in os.listdir(self.log_dir):
-            if f.startswith("staged_") and f.endswith(".json"):
-                sid = f[len("staged_"):-5]
-                try:
-                    m = self._staged_manifest(sid)
-                except ValueError:
-                    continue  # concurrent publish/discard unlinked it mid-scan
-                out[sid] = {
-                    "base_version": m["base_version"],
-                    "staged_at": m["staged_at"],
-                    "n_files": len(m["files"]),
-                    "name": m.get("name"),
-                }
-        return out
-
-    def read_staged(self, spark: SparkSession, staging_id: str) -> DataFrame:
-        """AUDIT half of WAP: the WOULD-BE table state if the staged
-        batch published right now — current head's files plus the staged
-        files, under the staged schema (exactly what the published
-        append's manifest would govern). Quality gates, row-count diffs,
-        and constraint dry-runs read this; the real table stays
-        untouched. Accepts the staging id or the stage name."""
-        m = self._staged_manifest(self._resolve_staging(staging_id))
-        parent = self.version()
-        base = self._manifest(parent)["files"] if parent >= 0 else []
-        return self._read_entries(spark, base + m["files"], m["schema"])
-
-    def publish(self, spark: SparkSession, staging_id: str) -> int:
-        """PUBLISH half of WAP: one atomic version flip making the staged
-        batch visible. Validation happens HERE, against the head at
-        publish time — CHECK constraints evaluate over the staged rows
-        (one aggregation pass over only the staged files) and the
-        append-evolution gate (type drift / rename shape) runs against
-        the current schema, because the head may have moved since
-        staging; append semantics make a moved head legal (file sets are
-        disjoint), so a WAP publish never needs the base_version it was
-        staged against. A concurrent commit during publish raises
-        CommitConflict (retry republishes the same staged files — they
-        are still on disk and still staged). On success the staged
-        manifest is consumed; a second publish of the same id raises.
-
-        CRASH-WINDOW FENCE (ADVICE r8): the version flip (_claim) and the
-        staged-manifest unlink are two steps — a crash between them
-        leaves the staged manifest alive after the publish landed, and a
-        naive retry would append the same file entries a SECOND time.
-        Each published manifest therefore records its ``staging_id``
-        (mirroring the txnAppId/txnVersion fence on streaming appends),
-        and publish first scans manifests newer than the staged batch's
-        base_version: if one carries this id, the flip already happened —
-        consume the leftover staged manifest and return that committed
-        version (idempotent) instead of duplicating the rows."""
-        staging_id = self._resolve_staging(staging_id)
-        m = self._staged_manifest(staging_id)
-        parent = self.version()
-        for v in self._versions():
-            if v <= m.get("base_version", -1):
-                continue
-            try:
-                prior = self._manifest(v)
-            except (FileNotFoundError, ValueError, json.JSONDecodeError):
-                continue  # vacuumed / racing writer — not this publish
-            if prior.get("staging_id") == staging_id:
-                try:
-                    os.unlink(self._staged_path(staging_id))
-                except FileNotFoundError:
-                    pass
-                self._release_stage_name(m)
-                return v
-        self._check_append_evolution(
-            parent, StructType.fromJson(json.loads(m["schema"]))
-        )
-        staged_rows = self._read_entries(spark, m["files"], m["schema"])
-        self._enforce(staged_rows)
-        base = self._manifest(parent)["files"] if parent >= 0 else []
-        v = self._claim(
-            {
-                "files": base + m["files"],
-                "op": "append",
-                "schema": m["schema"],
-                "staging_id": staging_id,
-            },
-            parent,
-        )
-        os.unlink(self._staged_path(staging_id))
-        self._release_stage_name(m)
-        return v
-
-    def discard_staged(self, staging_id: str) -> None:
-        """Abandon a staged batch: the manifest goes now; the data files
-        become unreferenced orphans that the next vacuum (past its
-        retention window) collects. Accepts the staging id or name."""
-        sid = self._resolve_staging(staging_id)
-        m = self._staged_manifest(sid)  # raises the loud unknown
-        try:
-            os.unlink(self._staged_path(sid))
-        except FileNotFoundError as exc:
-            raise ValueError(
-                f"unknown staging id {staging_id!r} on {self.path!r}"
-            ) from exc
-        self._release_stage_name(m)
 
     def vacuum(self, keep_versions: int = 1, retention_s: float = 3600.0) -> int:
         """Drop manifests older than the last ``keep_versions`` and every
@@ -1821,65 +665,19 @@ class TxTable:
         manifest pointing at missing files. Pass ``retention_s=0`` only
         when no in-flight writers exist (e.g. tests).
 
-        GC roots beyond the retention window: TAGGED versions (their
-        manifest and files survive until the tag is deleted — the
-        release-pinning contract) and WAP-STAGED batches (their files
-        are referenced by a staged manifest awaiting audit, regardless
-        of age)."""
-        import time as _time
-
+        TAGGED versions are GC roots beyond the retention window: their
+        manifest and files survive until the tag is deleted."""
         vs = self._versions()
         keep = set(vs[-keep_versions:] if keep_versions > 0 else vs)
         keep.update(v for v in self.tags().values() if v in vs)
-        # ADVICE r9: a committed manifest carrying a ``staging_id`` is the
-        # crash-window FENCE for its leftover staged twin — if vacuum drops
-        # the fence while the twin is alive, a publish retry re-appends the
-        # same files. Consume the twin (the publish DID land; the staged
-        # files are referenced by every newer append manifest) BEFORE the
-        # fence manifest can vanish.
-        for v in vs:
-            if v in keep:
-                continue
-            try:
-                man = self._manifest(v)
-            except (FileNotFoundError, ValueError, json.JSONDecodeError):
-                continue
-            sid = man.get("staging_id")
-            if sid and os.path.exists(self._staged_path(sid)):
-                try:
-                    twin = self._staged_manifest(sid)
-                    os.unlink(self._staged_path(sid))
-                    self._release_stage_name(twin)
-                except (ValueError, FileNotFoundError):
-                    pass  # raced with the retrying publisher — its problem now
-        # Stale name markers (crash between staged-manifest unlink and
-        # marker unlink) are reclaimable the moment their manifest is gone.
-        for f in os.listdir(self.log_dir):
-            if f.startswith("stagename_") and f.endswith(".json"):
-                p = os.path.join(self.log_dir, f)
-                try:
-                    with open(p) as fh:
-                        mk = json.load(fh)
-                except (FileNotFoundError, json.JSONDecodeError):
-                    continue
-                if not os.path.exists(self._staged_path(mk.get("sid", ""))):
-                    try:
-                        os.unlink(p)
-                    except FileNotFoundError:
-                        pass
         live: set[str] = set()
         for v in keep:
             live.update(self._names(self._manifest(v)["files"]))
-        for sid in self.staged():
-            try:
-                live.update(self._names(self._staged_manifest(sid)["files"]))
-            except ValueError:
-                continue  # published/discarded between staged() and here
         removed = 0
         for v in vs:
             if v not in keep:
                 os.unlink(os.path.join(self.log_dir, f"v{v}.json"))
-        cutoff = _time.time() - retention_s
+        cutoff = time.time() - retention_s
         for f in os.listdir(self.data_dir):
             if f.endswith(".parquet") and f not in live:
                 p = os.path.join(self.data_dir, f)
@@ -1893,50 +691,6 @@ class TxTable:
         return removed
 
     # -- change feed ------------------------------------------------------
-    def diff(
-        self,
-        spark: SparkSession,
-        v_old: int,
-        v_new: int,
-        key_cols: list[str],
-    ) -> DataFrame:
-        """SNAPSHOT DIFF between two versions — the table-comparison
-        complement to ``changes()``: where the change feed replays the
-        WRITES between versions (and refuses across rewrites), diff
-        compares the READ STATES and therefore works across ANY history
-        — merges, overwrites, restores — because immutable snapshots
-        are always re-readable. One full-outer join on ``key_cols``;
-        per key the row is tagged ``agregada`` (only in new),
-        ``eliminada`` (only in old), ``modificada`` (present in both,
-        any shared non-key column differs, null-safely) or ``igual``.
-        Returns (key cols…, estado); callers aggregate counts. Cost is
-        a join of the two snapshots — the honest price of diffing
-        across a rewrite, paid only when asked."""
-        old = self.read(spark, v_old)
-        new = self.read(spark, v_new)
-        comunes = [
-            c for c in old.columns if c in new.columns and c not in key_cols
-        ]
-        o = old.select(
-            *key_cols, *[F.col(c).alias(f"__o_{c}") for c in comunes]
-        )
-        n = new.select(
-            *key_cols,
-            F.lit(1).alias("__en_new"),
-            *[F.col(c).alias(f"__n_{c}") for c in comunes],
-        )
-        j = o.withColumn("__en_old", F.lit(1)).join(n, key_cols, "full_outer")
-        cambio = F.lit(False)
-        for c in comunes:
-            cambio = cambio | ~F.col(f"__o_{c}").eqNullSafe(F.col(f"__n_{c}"))
-        estado = (
-            F.when(F.col("__en_old").isNull(), "agregada")
-            .when(F.col("__en_new").isNull(), "eliminada")
-            .when(cambio, "modificada")
-            .otherwise("igual")
-        )
-        return j.select(*key_cols, estado.alias("estado"))
-
     def changes(
         self,
         spark: SparkSession,
@@ -1952,19 +706,15 @@ class TxTable:
 
         Contract, stated instead of guessed: versions whose op is
         ``append`` contribute exactly their NEW files (rows = the
-        appended batch); ``optimize_zorder``/``optimize_compact`` are
-        data-preserving rewrites and contribute nothing (their rewritten
-        files are tracked so later appends still diff correctly — no
-        double counting through a compaction); ``add_constraint``/
-        ``drop_constraint`` are manifest-only (file set identical) and
-        likewise contribute nothing — Delta CDF treats metadata-only
-        commits as empty, and a consumer must not lose its feed because
-        an operator tightened a CHECK; any data-REWRITING op
-        (``merge``, ``replace_where``, ``replace_partitions``,
-        ``overwrite``) raises :class:`NonIncrementalHistory` unless its
-        parent file set was empty (a first load is all-inserts whatever
-        its op). Cost: manifest walking is KB-sized metadata; the scan
-        touches only the delta files."""
+        appended batch); ``optimize_compact`` is a data-preserving
+        rewrite and contributes nothing (its rewritten files are tracked
+        so later appends still diff correctly — no double counting
+        through a compaction); any data-REWRITING op (``merge``,
+        ``replace_where``, ``replace_partitions``, ``overwrite``) raises
+        :class:`NonIncrementalHistory` unless its parent file set was
+        empty (a first load is all-inserts whatever its op). Cost:
+        manifest walking is KB-sized metadata; the scan touches only the
+        delta files."""
         until = self.version() if until_version is None else until_version
         if since_version > until:
             raise ValueError(
@@ -1980,12 +730,7 @@ class TxTable:
             schema_json = m["schema"]
             op = m.get("op", "append")
             names_v = self._names(m["files"])
-            if op in (
-                "optimize_zorder",
-                "optimize_compact",
-                "add_constraint",
-                "drop_constraint",
-            ):
+            if op == "optimize_compact":
                 have = set(names_v)
                 continue
             if op != "append" and have:
@@ -2015,45 +760,3 @@ class TxTable:
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
-
-
-def mirror_incremental(
-    spark: SparkSession,
-    src: TxTable,
-    dst: TxTable,
-    transform=None,
-) -> dict:
-    """Maintain ``dst`` as a derived mirror of ``src`` from the CHANGE
-    FEED — the materialized-view refresh loop every downstream mart
-    runs: read only the delta since the last mirrored version, apply
-    ``transform`` (identity by default), commit. The last-mirrored
-    upstream version is recorded as the txn fence
-    ``("mirror:<src>", upstream_version)`` IN dst's manifest, which
-    buys three properties at once: the marker commits ATOMICALLY with
-    the data it describes, it SURVIVES dst maintenance (compaction /
-    other writers — _claim carries the txn map through every manifest),
-    and a crashed-and-rerun refresh is a NO-OP instead of a double
-    append (the streaming jobs' exactly-once discipline, batch-side).
-
-    Upstream rewrites (merge/overwrite/replace) make the feed
-    non-incremental; the mirror then REBUILDS from the snapshot —
-    degradation is loud in the returned ``mode``, never silent schema
-    or row drift. Cost: incremental refreshes scan only the delta
-    files (KB of manifest metadata + the new parquet); the rebuild
-    path scans the snapshot exactly like the first load."""
-    app = f"mirror:{os.path.abspath(src.path)}"
-    last = dst.txn_version(app)
-    cur = src.version()
-    if cur < 0 or cur <= last:
-        return {"mode": "noop", "upstream_version": cur}
-    tf = transform if transform is not None else (lambda df: df)
-    if last < 0:
-        dst.overwrite(tf(src.read(spark, cur)), txn=(app, cur))
-        return {"mode": "initial", "upstream_version": cur}
-    try:
-        delta = src.changes(spark, since_version=last, until_version=cur)
-    except NonIncrementalHistory:
-        dst.overwrite(tf(src.read(spark, cur)), txn=(app, cur))
-        return {"mode": "rebuild", "upstream_version": cur}
-    dst.append(tf(delta.drop("_commit_version")), txn=(app, cur))
-    return {"mode": "incremental", "upstream_version": cur}

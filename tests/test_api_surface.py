@@ -303,3 +303,50 @@ def test_thread_overlap_has_one_home():
                 nombre = dentro[0].name if dentro else "<module>"
                 hogares.add((os.path.relpath(ruta, raiz), nombre))
     assert hogares == {("functions.py", "overlap")}, sorted(hogares)
+
+
+def test_txtable_methods_have_engine_callers():
+    """TxTable carries only the surface the engine calls: every public
+    method is called from an engine module other than txlog.py, or from
+    a TxTable method that is itself reached that way. A method whose
+    only callers are tests is a feature the engine does not use."""
+    import ast
+
+    import etl_python_airflow_bigquery_spark as pkg
+
+    raiz = os.path.dirname(pkg.__file__)
+    txlog = os.path.join(raiz, "operators", "txlog.py")
+
+    def llamadas(nodo) -> set[str]:
+        return {
+            n.func.attr
+            for n in ast.walk(nodo)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+        }
+
+    externas: set[str] = set()
+    for carpeta, _dirs, files in os.walk(raiz):
+        for f in files:
+            ruta = os.path.join(carpeta, f)
+            if f.endswith(".py") and ruta != txlog:
+                externas |= llamadas(ast.parse(open(ruta).read()))
+    clase = next(
+        n for n in ast.parse(open(txlog).read()).body
+        if isinstance(n, ast.ClassDef) and n.name == "TxTable"
+    )
+    metodos = {
+        n.name: n for n in clase.body
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+    alcanzados = {m for m in metodos if m in externas}
+    while True:
+        nuevos = set().union(
+            *(llamadas(metodos[m]) for m in alcanzados)
+        ) & set(metodos)
+        if nuevos <= alcanzados:
+            break
+        alcanzados |= nuevos
+    sin_llamador = sorted(
+        m for m in metodos if not m.startswith("_") and m not in alcanzados
+    )
+    assert sin_llamador == [], sin_llamador

@@ -228,134 +228,3 @@ def test_mart_over_mart_chain_with_cascading_rebuild(spark, tmp_path):
     src.append(_batch(spark, 100, 110))
     assert tick() == ("delta", "delta")
     assert m2.read(spark).collect()[0]["n"] == src.read(spark).count()
-
-
-def test_mirror_incremental_tracks_appends_and_rebuilds(spark, tmp_path):
-    """mirror_incremental: initial load, delta-only refreshes, loud
-    rebuild on upstream rewrite, idempotent re-run, and a marker that
-    survives dst compaction — all through the txn-fence bookkeeping."""
-    from etl_python_airflow_bigquery_spark.operators.txlog import (
-        TxTable,
-        mirror_incremental,
-    )
-
-    def _df(lo, hi, val=1.0):
-        return spark.range(lo, hi).select(
-            F.col("id").alias("k"), F.lit(val).alias("v")
-        )
-
-    src = TxTable(str(tmp_path / "src"))
-    dst = TxTable(str(tmp_path / "dst"))
-    assert mirror_incremental(spark, src, dst)["mode"] == "noop"  # empty src
-
-    src.overwrite(_df(0, 5))
-    assert mirror_incremental(spark, src, dst)["mode"] == "initial"
-    assert dst.read(spark).count() == 5
-    # no upstream movement -> noop; re-run is idempotent
-    assert mirror_incremental(spark, src, dst)["mode"] == "noop"
-
-    src.append(_df(5, 8))
-    src.append(_df(8, 9))
-    r = mirror_incremental(spark, src, dst)
-    assert r == {"mode": "incremental", "upstream_version": 2}
-    assert dst.read(spark).count() == 9
-    assert sorted(r_["k"] for r_ in dst.read(spark).collect()) == list(range(9))
-
-    # dst maintenance must not lose the marker
-    dst.optimize_compact(spark)
-    src.append(_df(9, 10))
-    assert mirror_incremental(spark, src, dst)["mode"] == "incremental"
-    assert dst.read(spark).count() == 10
-
-    # upstream rewrite -> loud rebuild, mirror equals the new snapshot
-    src.replace_where(spark, _df(0, 3, val=9.0), "k", 0, 4)
-    r = mirror_incremental(spark, src, dst)
-    assert r["mode"] == "rebuild"
-    got = {x["k"]: x["v"] for x in dst.read(spark).collect()}
-    want = {x["k"]: x["v"] for x in src.read(spark).collect()}
-    assert got == want and got[0] == 9.0 and 3 not in got
-
-
-def test_mirror_incremental_applies_transform(spark, tmp_path):
-    """The derivation applies on BOTH paths (initial and incremental):
-    the mirror is a projection/filter view, refreshed from deltas."""
-    from etl_python_airflow_bigquery_spark.operators.txlog import (
-        TxTable,
-        mirror_incremental,
-    )
-
-    src = TxTable(str(tmp_path / "src"))
-    dst = TxTable(str(tmp_path / "dst"))
-    base = spark.createDataFrame(
-        [(1, 10.0, "a"), (2, -1.0, "b"), (3, 5.0, "a")],
-        "k bigint, v double, tag string",
-    )
-    src.overwrite(base)
-    tf = lambda df: df.where(F.col("v") > 0).select("k", "tag")  # noqa: E731
-    mirror_incremental(spark, src, dst, transform=tf)
-    assert {r["k"] for r in dst.read(spark).collect()} == {1, 3}
-    assert set(dst.read(spark).columns) == {"k", "tag"}
-    src.append(
-        spark.createDataFrame(
-            [(4, -2.0, "c"), (5, 2.0, "c")], "k bigint, v double, tag string"
-        )
-    )
-    r = mirror_incremental(spark, src, dst, transform=tf)
-    assert r["mode"] == "incremental"
-    assert {x["k"] for x in dst.read(spark).collect()} == {1, 3, 5}
-
-
-def test_mirror_maintains_inverted_index(spark, tmp_path):
-    """The mirror's real job: keep a DERIVED INDEX fresh from the change
-    feed. The transform explodes documents into (token, doc_id)
-    postings; each batch of new docs appends ONLY its own postings, and
-    the maintained index equals a full rebuild bit-for-bit after every
-    refresh — the incremental inverted-index / feature-store pattern."""
-    from etl_python_airflow_bigquery_spark.operators.txlog import (
-        TxTable,
-        mirror_incremental,
-    )
-
-    docs = TxTable(str(tmp_path / "docs"))
-    idx = TxTable(str(tmp_path / "idx"))
-
-    def postings(df):
-        return df.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("token")
-        ).where(F.col("token") != "")
-
-    def full_rebuild():
-        return {
-            (r["token"], r["doc_id"])
-            for r in postings(docs.read(spark)).collect()
-        }
-
-    docs.overwrite(
-        spark.createDataFrame(
-            [(1, "spark join scan"), (2, "join fast")],
-            "doc_id bigint, text string",
-        )
-    )
-    mirror_incremental(spark, docs, idx, transform=postings)
-    assert {
-        (r["token"], r["doc_id"]) for r in idx.read(spark).collect()
-    } == full_rebuild()
-
-    docs.append(
-        spark.createDataFrame([(3, "scan scan slow")], "doc_id bigint, text string")
-    )
-    r = mirror_incremental(spark, docs, idx, transform=postings)
-    assert r["mode"] == "incremental"
-    got = [
-        (r_["token"], r_["doc_id"]) for r_ in idx.read(spark).collect()
-    ]
-    assert len(got) == 8  # duplicates preserved: tf is recoverable
-    assert set(got) == full_rebuild()
-
-    # a doc-level rewrite (delete_where) forces the index to rebuild
-    docs.delete_where(spark, "doc_id", 2)
-    r = mirror_incremental(spark, docs, idx, transform=postings)
-    assert r["mode"] == "rebuild"
-    assert {
-        (r_["token"], r_["doc_id"]) for r_ in idx.read(spark).collect()
-    } == full_rebuild()

@@ -1,10 +1,10 @@
-"""Property evidence for TxTable.merge_into's clause semantics: on
-random target/source tables and a random insert toggle, the one-join
-CASE implementation must equal the obvious row-at-a-time reference
-model (matched-delete wins over matched-update; unlisted columns keep
-target values; unmatched targets survive; unmatched sources insert only
-when asked). The clause interactions are exactly where a join+CASE
-rewrite can drift from MERGE's specified semantics — so they are
+"""Property evidence for TxTable.merge's upsert semantics (the K4 MERGE
+`writes.merge_upsert(tx=True)` commits through): on random target and
+source tables, with and without an existing table, the anti-join +
+union implementation must equal the obvious row-at-a-time reference
+model — the source row wins per key, and unmatched rows on either side
+are kept. Key collisions and the empty-table first load are exactly
+where a join rewrite can drift from upsert semantics — so they are
 executed here, not assumed."""
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ from etl_python_airflow_bigquery_spark.operators.txlog import TxTable
 
 fila = st.tuples(
     st.integers(min_value=0, max_value=9),   # key: small range → collisions
-    st.integers(min_value=-5, max_value=5),  # value: negatives drive deletes
+    st.integers(min_value=-5, max_value=5),
 )
 
 
@@ -31,23 +31,11 @@ def _unique_by_key(rows):
     return out
 
 
-def _reference(target, source, insert_unmatched):
-    """Row-at-a-time MERGE INTO with matched_delete='s.v < 0' and
-    matched_update={'v': 't.v + s.v'}."""
-    src = dict(source)
-    out = {}
-    for k, v in target:
-        if k in src:
-            if src[k] < 0:
-                continue  # matched + delete condition
-            out[k] = v + src[k]  # matched update
-        else:
-            out[k] = v  # unmatched target survives
-    if insert_unmatched:
-        tgt_keys = {k for k, _ in target}
-        for k, sv in source:
-            if k not in tgt_keys:
-                out[k] = sv
+def _reference(target, source):
+    """Row-at-a-time upsert: every source row replaces the target row
+    with its key; unmatched target and source rows are kept."""
+    out = dict(target)
+    out.update(source)
     return out
 
 
@@ -55,24 +43,22 @@ def _reference(target, source, insert_unmatched):
 @given(
     target=st.lists(fila, min_size=0, max_size=8).map(_unique_by_key),
     source=st.lists(fila, min_size=0, max_size=8).map(_unique_by_key),
-    insert_unmatched=st.booleans(),
+    seeded=st.booleans(),
 )
-def test_merge_into_equals_reference(spark_prop, target, source, insert_unmatched):
+def test_merge_upsert_equals_reference(spark_prop, target, source, seeded):
     spark = spark_prop
     d = tempfile.mkdtemp(prefix="merge_prop_")
     try:
         t = TxTable(d + "/t")
-        t.overwrite(spark.createDataFrame(target, "k bigint, v bigint"))
+        if seeded:
+            t.overwrite(spark.createDataFrame(target, "k bigint, v bigint"))
+        else:
+            target = []  # first load: merge into a table with no commits
         src = spark.createDataFrame(source, "k bigint, v bigint")
-        t.merge_into(
-            spark,
-            src,
-            ["k"],
-            matched_update={"v": "t.v + s.v"},
-            matched_delete="s.v < 0",
-            insert_unmatched=insert_unmatched,
-        )
-        got = {r["k"]: r["v"] for r in t.read(spark).collect()}
-        assert got == _reference(target, source, insert_unmatched)
+        t.merge(spark, src, ["k"])
+        rows = t.read(spark).collect()
+        got = {r["k"]: r["v"] for r in rows}
+        assert len(rows) == len(got)  # one row per key
+        assert got == _reference(target, source)
     finally:
         shutil.rmtree(d, ignore_errors=True)

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from etl_python_airflow_bigquery_spark.operators.txlog import (
     CommitConflict,
-    ConstraintViolation,
     TxTable,
 )
 
@@ -50,7 +49,11 @@ def test_concurrent_commit_conflicts_cleanly(spark, tmp_path):
     t2.append(_df(spark, 10, 12))
     files = t._write_files(_df(spark, 20, 22))
     with pytest.raises(CommitConflict):
-        t._claim({"files": files, "op": "append", "schema": "{}"}, expected_parent=0)
+        t._claim(
+            {"files": files, "op": "append", "schema": "{}"},
+            expected_parent=0,
+            parent=t._manifest(0),
+        )
     # loser's data files are orphans — invisible to readers
     assert t.read(spark).count() == 5
     assert {r["k"] for r in t.read(spark).collect()} == {0, 1, 2, 10, 11}
@@ -86,8 +89,9 @@ def test_vacuum_preserves_kept_versions(spark, tmp_path):
 
 
 def test_file_stats_recorded_and_pruned(spark, tmp_path):
-    """stats_cols records per-file min/max from the footers; read_where
-    prunes whole files the range cannot touch while staying exact."""
+    """stats_cols records per-file min/max from the footers; read_in
+    prunes whole files no requested value can be in while staying
+    exact."""
     t = TxTable(str(tmp_path / "t"), stats_cols=["k"])
     # three appends with disjoint key ranges → ≥3 files with known stats
     t.overwrite(_df(spark, 0, 100).coalesce(1))
@@ -97,7 +101,8 @@ def test_file_stats_recorded_and_pruned(spark, tmp_path):
     assert all(e["stats"]["k"] is not None for e in m["files"])
     hits = [e for e in m["files"] if t._overlaps(e, "k", 120, 180)]
     assert len(hits) == 1  # only the middle file overlaps
-    got = t.read_where(spark, "k", 120, 180)
+    got = t.read_in(spark, "k", range(120, 181))
+    assert len(got.inputFiles()) == 1  # the two other files never scanned
     assert got.count() == 61
     assert {r["k"] for r in got.collect()} == set(range(120, 181))
 
@@ -169,7 +174,9 @@ def test_read_uses_manifest_schema_after_drifted_append(spark, tmp_path):
 
 def test_stats_skipped_for_noncomparable_types(spark, tmp_path):
     """date/timestamp stats_cols degrade to no-stats (never skipped)
-    instead of stringified stats that mis-compare against native bounds."""
+    instead of stringified stats that mis-compare against native bounds:
+    a replace_where window on the date column rewrites the file and
+    stays exact."""
     import datetime
 
     t = TxTable(str(tmp_path / "t"), stats_cols=["d"])
@@ -180,10 +187,15 @@ def test_stats_skipped_for_noncomparable_types(spark, tmp_path):
     t.overwrite(df.coalesce(1))
     m = t._manifest(t.version())
     assert all(e["stats"]["d"] is None for e in m["files"])
-    # read_where over the date column stays exact (no file skipped)
-    got = t.read_where(spark, "d", datetime.date(2024, 1, 1),
-                       datetime.date(2024, 3, 1))
-    assert got.count() == 1
+    before = set(t._names(m["files"]))
+    v = t.replace_where(
+        spark,
+        spark.createDataFrame([(3, datetime.date(2024, 2, 1))], "k INT, d DATE"),
+        "d", datetime.date(2024, 1, 1), datetime.date(2024, 3, 1),
+    )
+    # the stats-less file was touched (rewritten), not carried over
+    assert not before & set(t._names(t._manifest(v)["files"]))
+    assert sorted(r["k"] for r in t.read(spark).collect()) == [2, 3]
 
 
 def test_refresh_window_tx_idempotent_with_time_travel(spark, tmp_path):
@@ -343,82 +355,6 @@ def test_streaming_refresh_tx_matches_batch(spark, sf_dir, tmp_path):
     assert t.read(spark, version=v_first).count() == batch.count()
 
 
-def test_optimize_zorder_improves_nonleading_pruning(spark, tmp_path):
-    """OPTIMIZE ZORDER: after rewriting along the (u, d) Morton curve,
-    a point query on the NON-leading dimension prunes most files by
-    manifest stats (the u-clustered ingest layout pruned none), the
-    leading dimension still prunes, and the data is byte-identical
-    across the optimize commit (plus time-travelable)."""
-    t = TxTable(str(tmp_path / "t"), stats_cols=["u", "d"])
-    grid = spark.range(16 * 16 * 4).select(
-        (F.col("id") % 16).alias("u"),
-        (F.expr("id div 16") % 16).alias("d"),
-        F.col("id").alias("v"),
-    )
-    # ingest layout: clustered by u only → every file spans all d values
-    t.overwrite(grid.repartitionByRange(16, "u"))
-
-    def files_read(col, val):
-        m = t._manifest(t.version())
-        return sum(1 for e in m["files"] if t._overlaps(e, col, val, val))
-
-    total_before = len(t._manifest(t.version())["files"])
-    assert files_read("u", 7) <= 2           # leading key prunes
-    assert files_read("d", 3) == total_before  # non-leading reads ALL
-
-    before = t.read(spark)
-    antes = sorted((r["u"], r["d"], r["v"]) for r in before.collect())
-    v_pre = t.version()
-
-    t.optimize_zorder(spark, ["u", "d"], n_files=16, bits=4)
-
-    m = t._manifest(t.version())
-    total_after = len(m["files"])
-    assert m["op"] == "optimize_zorder"
-    # both dimensions now prune: each file is a rectangle on the curve
-    assert files_read("d", 3) <= total_after // 2
-    assert files_read("u", 7) <= total_after // 2
-    # data unchanged, old version still readable
-    despues = sorted((r["u"], r["d"], r["v"]) for r in t.read(spark).collect())
-    assert despues == antes
-    assert t.read(spark, version=v_pre).count() == len(antes)
-
-
-def test_optimize_zorder_layout_is_deterministic(spark, tmp_path):
-    """VERDICT r13 #1, pinned as a PROPERTY: the z-order layout is a
-    pure function of the DATA MULTISET — identical file rectangles
-    (per-file min/max stats) across separately built tables AND across
-    re-optimizations of an already-rewritten table, not just
-    rectangles that happen to clear a pruning threshold. The former
-    sampled range partitioning failed the first; approxQuantile-border
-    tiling failed the second (GK sketches are deterministic only per
-    physical layout, and repartitionByRange seeds by session RDD id).
-    Exact histogram borders + inverse-hash bucket routing pass both."""
-    def rectangles(t):
-        m = t._manifest(t.version())
-        return sorted(
-            tuple(sorted((c, tuple(v)) for c, v in e["stats"].items()))
-            for e in m["files"]
-        )
-
-    def build(name):
-        t = TxTable(str(tmp_path / name), stats_cols=["u", "d"])
-        grid = spark.range(16 * 16 * 4).select(
-            (F.col("id") % 16).alias("u"),
-            (F.expr("id div 16") % 16).alias("d"),
-            F.col("id").alias("v"),
-        )
-        t.overwrite(grid.repartitionByRange(16, "u"))
-        t.optimize_zorder(spark, ["u", "d"], n_files=16, bits=4)
-        return t
-
-    ta, tb = build("ta"), build("tb")
-    primera = rectangles(ta)
-    assert primera == rectangles(tb)  # same data, separate builds
-    ta.optimize_zorder(spark, ["u", "d"], n_files=16, bits=4)
-    assert rectangles(ta) == primera  # re-optimize: layout-independent
-
-
 def test_optimize_compact_merges_small_files(spark, tmp_path):
     """Bin-packing compaction: many micro-batch appends → one compacted
     file plus any already-big files; data identical, old versions
@@ -439,94 +375,6 @@ def test_optimize_compact_merges_small_files(spark, tmp_path):
     assert sorted((r["k"], r["v"]) for r in t.read(spark).collect()) == antes
     assert t.read(spark, version=v_pre).count() == len(antes)
     assert t.optimize_compact(spark) == v  # nothing left to compact
-
-
-def test_bloom_point_lookup_skips_files(spark, tmp_path):
-    """Bloom file skipping: min/max stats cannot prune a point lookup
-    when every file's range contains the key space (interleaved ids) —
-    the per-file Bloom filter can. An absent key reads (almost) no
-    files; a present key reads the one file holding it; results exact."""
-    t = TxTable(str(tmp_path / "t"), stats_cols=["k"], bloom_cols=["k"])
-    # 4 appends with INTERLEAVED ids: file i holds {i, i+4, i+8, ...} —
-    # every file's [min, max] spans nearly the whole id space
-    for i in range(4):
-        ids = list(range(i, 400, 4))
-        t.append(
-            spark.createDataFrame([(k, float(i)) for k in ids], "k INT, v DOUBLE")
-            .coalesce(1)
-        )
-    m = t._manifest(t.version())
-    assert len(m["files"]) == 4
-    assert all(e.get("blooms", {}).get("k") for e in m["files"])
-
-    # stats alone cannot prune the point probe (all ranges overlap)
-    stats_hits = [e for e in m["files"] if t._overlaps(e, "k", 7, 7)]
-    assert len(stats_hits) == 4
-    # bloom prunes to the single true file (false positives allowed: <=1 extra)
-    bloom_hits = [
-        e for e in m["files"]
-        if t._overlaps(e, "k", 7, 7) and t._bloom_may_contain(e, "k", 7)
-    ]
-    assert 1 <= len(bloom_hits) <= 2
-
-    got = t.read_point(spark, "k", 7).collect()
-    assert [(r["k"], r["v"]) for r in got] == [(7, 3.0)]
-    # a key that exists nowhere: bloom proves absence almost everywhere
-    missing_hits = [
-        e for e in m["files"] if t._bloom_may_contain(e, "k", 999_999)
-    ]
-    assert len(missing_hits) <= 1
-    assert t.read_point(spark, "k", 999_999).count() == 0
-
-
-def test_bloom_degrades_for_missing_and_float_cols(spark, tmp_path):
-    """The Bloom index follows the stats contract — degrade, never
-    break: an append lacking the bloom column commits fine with a None
-    bloom (file never skipped), a DOUBLE bloom column builds no bits
-    (canonical-string ambiguity would silently drop rows), and a
-    non-canonical probe value disables skipping instead of mis-pruning."""
-    t = TxTable(str(tmp_path / "t"), bloom_cols=["k", "x"])
-    t.overwrite(
-        spark.createDataFrame([(1, 1.5, "a")], "k INT, x DOUBLE, extra STRING")
-        .coalesce(1)
-    )
-    # schema-drift append WITHOUT the x bloom column must still commit
-    t.append(spark.createDataFrame([(2, "b")], "k INT, extra STRING").coalesce(1))
-    m = t._manifest(t.version())
-    blooms = [e.get("blooms", {}) for e in m["files"]]
-    assert all(b.get("k") for b in blooms)  # int col indexed in every file
-    # DOUBLE col (first file) and missing col (drifted file): both None
-    assert all(b.get("x") is None for b in blooms)
-    # float probe on the int column: _bloomable(False) ⇒ every file read
-    assert all(t._bloom_may_contain(e, "k", 1.0) for e in m["files"])
-    assert t.read_point(spark, "k", 1).count() == 1
-    assert t.read_point(spark, "k", 2).count() == 1
-
-
-def test_replace_where_point_window_bloom_bounded(spark, tmp_path):
-    """A point-window replace_where on a Bloom-indexed key rewrites
-    only the file(s) that can actually hold the key — interleaved ids
-    make every file's min/max overlap, so without the Bloom gate all
-    4 files would rewrite; with it ≥2 carry over physically
-    untouched — and the result is exact."""
-    t = TxTable(str(tmp_path / "t"), stats_cols=["k"], bloom_cols=["k"])
-    for i in range(4):
-        ids = list(range(i, 400, 4))
-        t.append(
-            spark.createDataFrame(
-                [(k, float(i)) for k in ids], "k INT, v DOUBLE"
-            ).coalesce(1)
-        )
-    before = set(t._names(t._manifest(t.version())["files"]))
-    v = t.replace_where(
-        spark, spark.createDataFrame([(7, 99.0)], "k INT, v DOUBLE"), "k", 7, 7
-    )
-    after = set(t._names(t._manifest(v)["files"]))
-    assert len(before & after) >= 2  # bloom-pruned files carried over
-    got = t.read(spark)
-    assert got.count() == 400
-    assert [(r["k"], r["v"]) for r in got.where(F.col("k") == 7).collect()] \
-        == [(7, 99.0)]
 
 
 # -- change feed (incremental consumption) --------------------------------
@@ -585,35 +433,6 @@ def test_append_rejects_type_drift_on_shared_column(spark, tmp_path):
         spark.createDataFrame([(2, 2.0, "x")], "k BIGINT, v DOUBLE, tag STRING")
     )
     assert {r["k"]: r["tag"] for r in t.read(spark).collect()} == {1: None, 2: "x"}
-
-
-def test_restore_flips_head_to_old_snapshot(spark, tmp_path):
-    """RESTORE: a new commit whose file set is the target version's —
-    HEAD reads the old snapshot again, history stays readable, the
-    change feed treats it as a rewrite, and a restore past the vacuum
-    horizon fails loudly."""
-    from etl_python_airflow_bigquery_spark.operators.txlog import (
-        NonIncrementalHistory,
-    )
-
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(_df(spark, 0, 5))          # v0: 5 rows
-    t.append(_df(spark, 5, 8))             # v1: 8 rows
-    t.overwrite(_df(spark, 0, 2, val=9.0)) # v2: the "bad" load, 2 rows
-    v = t.restore(1)
-    assert v == 3
-    assert t.read(spark).count() == 8      # HEAD is v1's snapshot again
-    assert t.read(spark, version=2).count() == 2  # forensics intact
-    # the feed across the restore is non-incremental by contract
-    with pytest.raises(NonIncrementalHistory):
-        t.changes(spark, since_version=1).collect()
-    # vacuum away everything but HEAD, then try restoring the dropped v2:
-    # whether the manifest itself or its files were reclaimed, the
-    # DOCUMENTED error is the undo-horizon ValueError (a raw
-    # FileNotFoundError here would break callers that catch the contract)
-    t.vacuum(keep_versions=1, retention_s=0.0)
-    with pytest.raises(ValueError, match="undo horizon"):
-        t.restore(2)
 
 
 def test_append_refuses_rename_shaped_evolution(spark, tmp_path):
@@ -711,91 +530,6 @@ def test_interleaved_writers_one_commits_one_retries(spark, tmp_path):
     assert got == {10: 9.0, 20: 7.0}, got
 
 
-def test_history_describes_surviving_versions(spark, tmp_path):
-    """DESCRIBE HISTORY parity: one row per surviving manifest, newest
-    first, carrying op names and restore provenance; vacuumed versions
-    show as gaps; no data files are read."""
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(_df(spark, 0, 5))
-    t.append(_df(spark, 5, 8))
-    t.overwrite(_df(spark, 0, 2))
-    t.restore(1)
-    h = t.history(spark).collect()
-    assert [r["version"] for r in h] == [3, 2, 1, 0]
-    assert [r["op"] for r in h] == ["restore", "overwrite", "append", "overwrite"]
-    assert h[0]["restored_from"] == 1 and h[1]["restored_from"] is None
-    assert h[2]["n_files"] > h[3]["n_files"]  # append grew the file set
-    t.vacuum(keep_versions=2, retention_s=0.0)
-    assert [r["version"] for r in t.history(spark).collect()] == [3, 2]
-
-
-def test_diff_compares_snapshots_across_rewrites(spark, tmp_path):
-    """diff() works where changes() refuses: across a MERGE rewrite it
-    compares the two read states key by key — added / removed / changed
-    / equal, null-safely on the value columns."""
-    from etl_python_airflow_bigquery_spark.operators.txlog import (
-        NonIncrementalHistory,
-    )
-
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(
-        spark.createDataFrame(
-            [(1, 1.0), (2, 2.0), (3, None)], "k INT, v DOUBLE"
-        )
-    )
-    t.merge(
-        spark,
-        spark.createDataFrame([(2, 9.0), (3, None), (4, 4.0)], "k INT, v DOUBLE"),
-        key_cols=["k"],
-    )
-    # delete k=1 via replace-style overwrite keeping the rest
-    t.overwrite(
-        spark.createDataFrame(
-            [(2, 9.0), (3, None), (4, 4.0)], "k INT, v DOUBLE"
-        )
-    )
-    # the change feed cannot cross these rewrites…
-    with pytest.raises(NonIncrementalHistory):
-        t.changes(spark, since_version=0).collect()
-    # …diff can:
-    got = {r["k"]: r["estado"] for r in t.diff(spark, 0, 2, ["k"]).collect()}
-    assert got == {
-        1: "eliminada",
-        2: "modificada",
-        3: "igual",  # NULL == NULL under eqNullSafe
-        4: "agregada",
-    }
-
-
-def test_clone_is_zero_copy_and_divergent(spark, tmp_path):
-    """Shallow clone: the clone's v0 is the source snapshot via hard
-    links (same inodes, no bytes copied); afterwards writes and vacuums
-    on either side never affect the other."""
-    src = TxTable(str(tmp_path / "src"))
-    src.overwrite(_df(spark, 0, 5))
-    src.append(_df(spark, 5, 8))
-    dst = src.clone_to(str(tmp_path / "dst"))
-    assert dst.read(spark).count() == 8
-    # zero-copy: every clone file shares its inode with the source
-    m = src._manifest(src.version())
-    for name in src._names(m["files"]):
-        s_ino = os.stat(os.path.join(src.data_dir, name)).st_ino
-        d_ino = os.stat(os.path.join(dst.data_dir, name)).st_ino
-        assert s_ino == d_ino
-    # divergence: each side writes independently
-    src.append(_df(spark, 100, 110))
-    dst.append(_df(spark, 200, 203))
-    assert src.read(spark).count() == 18
-    assert dst.read(spark).count() == 11
-    # the source vacuuming its history never breaks the clone
-    src.overwrite(_df(spark, 0, 1))
-    src.vacuum(keep_versions=1, retention_s=0.0)
-    assert dst.read(spark).count() == 11  # inodes survive via dst's links
-    # clone provenance is recorded
-    m0 = dst._manifest(0)
-    assert m0["op"] == "clone" and m0["cloned_version"] == 1
-
-
 def test_txn_fence_skips_replayed_append(spark, tmp_path):
     """txnAppId/txnVersion idempotency fence (ADVICE r6): an append
     carrying an already-recorded (app_id, version) is a NO-OP — the
@@ -827,11 +561,11 @@ def test_txn_fence_skips_replayed_append(spark, tmp_path):
     assert t.read(spark).count() == 14
 
 
-def test_txn_fence_survives_compaction_and_restore(spark, tmp_path):
-    """The fence must outlive table-maintenance rewrites: compaction and
-    restore() both produce new manifests, and each carries the txn map
-    forward — otherwise a nightly OPTIMIZE would reopen the
-    double-append window for every streaming writer."""
+def test_txn_fence_survives_compaction(spark, tmp_path):
+    """The fence must outlive table-maintenance rewrites: compaction
+    produces a new manifest that carries the txn map forward — otherwise
+    a nightly OPTIMIZE would reopen the double-append window for every
+    streaming writer."""
     t = TxTable(str(tmp_path / "t"))
     t.overwrite(_df(spark, 0, 5), txn=("ing", 0))
     t.append(_df(spark, 5, 8), txn=("ing", 1))
@@ -839,177 +573,13 @@ def test_txn_fence_survives_compaction_and_restore(spark, tmp_path):
     assert t.txn_version("ing") == 1
     assert t.append(_df(spark, 5, 8), txn=("ing", 1)) == t.version()
     assert t.read(spark).count() == 8
-    t.restore(1)
-    assert t.txn_version("ing") == 1
-
-
-def test_check_constraints_gate_every_write_path(spark, tmp_path):
-    """Delta-style CHECK constraints: added against a validated
-    snapshot, enforced on append/overwrite/merge/replace_where (FALSE
-    **or NULL** = violation), and a refused commit flips NOTHING — the
-    version and the readable rows are exactly what they were."""
-    t = TxTable(str(tmp_path / "t"), stats_cols=["k"])
-    t.overwrite(_df(spark, 0, 5))
-    t.add_constraint(spark, "k_no_negativo", "k >= 0")
-    t.add_constraint(spark, "v_positivo", "v > 0")
-    assert set(t.constraints()) == {"k_no_negativo", "v_positivo"}
-
-    # clean writes pass through every path
-    t.append(_df(spark, 5, 8))
-    t.replace_where(spark, _df(spark, 5, 8, val=2.0), "k", 5, 7)
-    t.merge(spark, _df(spark, 7, 9, val=3.0), ["k"])
-    assert t.read(spark).count() == 9
-
-    v = t.version()
-    # violating append: refused, version unchanged
-    bad = spark.createDataFrame([(-1, 1.0)], "k bigint, v double")
-    with pytest.raises(ConstraintViolation, match="k_no_negativo"):
-        t.append(bad)
-    assert t.version() == v and t.read(spark).count() == 9
-    # NULL is a violation (Delta semantics, not ANSI UNKNOWN-passes)
-    nulo = spark.createDataFrame([(10, None)], "k bigint, v double")
-    with pytest.raises(ConstraintViolation, match="v_positivo"):
-        t.merge(spark, nulo, ["k"])
-    # overwrite and replace_where are gated too
-    with pytest.raises(ConstraintViolation):
-        t.overwrite(bad)
-    with pytest.raises(ConstraintViolation):
-        t.replace_where(
-            spark,
-            spark.createDataFrame([(6, -5.0)], "k bigint, v double"),
-            "k", 6, 6,
-        )
-    assert t.version() == v
-
-    # both violations of one batch reported together, with counts
-    feo = spark.createDataFrame(
-        [(-2, 1.0), (-3, 1.0), (1, None)], "k bigint, v double"
-    )
-    with pytest.raises(ConstraintViolation, match="k_no_negativo.*2 rows"):
-        t.append(feo)
-
-    # drop relaxes the gate; unknown drop is loud
-    t.drop_constraint("v_positivo")
-    t.append(nulo)
-    assert t.read(spark).where(F.col("v").isNull()).count() == 1
-    with pytest.raises(ValueError, match="no such constraint"):
-        t.drop_constraint("v_positivo")
-
-
-def test_add_constraint_validates_existing_and_versions(spark, tmp_path):
-    """add_constraint refuses a snapshot that already violates the rule;
-    constraints survive compaction (carry-forward through _claim) and
-    TIME TRAVEL shows each era's own set (restore to a pre-constraint
-    version clears it)."""
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(_df(spark, 0, 5, val=-1.0))
-    with pytest.raises(ConstraintViolation, match="existing rows"):
-        t.add_constraint(spark, "v_positivo", "v > 0")
-    assert t.constraints() == {}
-
-    t.overwrite(_df(spark, 0, 5, val=2.0))  # v1: clean data, no rule yet
-    v_pre = t.version()
-    t.add_constraint(spark, "v_positivo", "v > 0")
-    with pytest.raises(ValueError, match="already exists"):
-        t.add_constraint(spark, "v_positivo", "v > 1")
-    t.append(_df(spark, 5, 7, val=3.0))
-    t.optimize_compact(spark)
-    assert t.constraints() == {"v_positivo": "v > 0"}  # survived rewrite
-    with pytest.raises(ConstraintViolation):
-        t.append(_df(spark, 7, 8, val=-9.0))
-    # restore to the pre-constraint era: the gate of THAT era applies
-    t.restore(v_pre)
-    assert t.constraints() == {}
-    t.append(_df(spark, 7, 8, val=-9.0))  # now legal again
-    assert t.read(spark).count() == 6
-
-
-def test_merge_into_full_clause_semantics(spark, tmp_path):
-    """Delta MERGE INTO clause semantics: matched+delete-cond rows go,
-    matched rows update via expressions over t/s (unlisted columns keep
-    target values), unmatched target rows carry through, unmatched
-    source rows insert — all from ONE full-outer join."""
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(
-        spark.createDataFrame(
-            [(1, 10.0, "keep"), (2, 20.0, "upd"), (3, 30.0, "del"),
-             (4, 40.0, "keep")],
-            "k bigint, v double, tag string",
-        )
-    )
-    src = spark.createDataFrame(
-        [(2, 5.0, "x"), (3, 0.0, "x"), (9, 90.0, "new")],
-        "k bigint, v double, tag string",
-    )
-    t.merge_into(
-        spark,
-        src,
-        ["k"],
-        matched_update={"v": "t.v + s.v"},  # tag keeps target value
-        matched_delete="t.tag = 'del'",
-    )
-    got = {r["k"]: (r["v"], r["tag"]) for r in t.read(spark).collect()}
-    assert got == {
-        1: (10.0, "keep"),   # unmatched target: untouched
-        2: (25.0, "upd"),    # matched: updated, tag preserved
-        4: (40.0, "keep"),
-        9: (90.0, "new"),    # unmatched source: inserted
-    }  # 3 deleted
-
-    # insert_unmatched=False: source-only rows are ignored
-    t.merge_into(
-        spark,
-        spark.createDataFrame([(1, 1.0, "z"), (77, 7.0, "z")],
-                              "k bigint, v double, tag string"),
-        ["k"],
-        matched_update={"tag": "s.tag"},
-        insert_unmatched=False,
-    )
-    got = {r["k"]: r["tag"] for r in t.read(spark).collect()}
-    assert got == {1: "z", 2: "upd", 4: "keep", 9: "new"}
-
-    # duplicate source keys are refused loudly (Delta's rule)
-    dup = spark.createDataFrame(
-        [(1, 1.0, "a"), (1, 2.0, "b")], "k bigint, v double, tag string"
-    )
-    with pytest.raises(ValueError, match="duplicate key"):
-        t.merge_into(spark, dup, ["k"])
-
-
-def test_merge_into_null_keys_and_constraints(spark, tmp_path):
-    """NULL keys match each other (eqNullSafe + existence sentinels, not
-    key-null tests), and CHECK constraints validate the FINAL frame — an
-    UPDATE that breaks a rule is refused with nothing flipped."""
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(
-        spark.createDataFrame([(None, 1.0), (2, 2.0)], "k bigint, v double")
-    )
-    t.merge_into(
-        spark,
-        spark.createDataFrame([(None, 8.0)], "k bigint, v double"),
-        ["k"],
-        matched_update={"v": "s.v"},
-    )
-    got = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    assert got == {None: 8.0, 2: 2.0}  # null-keyed row UPDATED, not duplicated
-
-    t.add_constraint(spark, "v_positivo", "v > 0")
-    v = t.version()
-    with pytest.raises(ConstraintViolation, match="v_positivo"):
-        t.merge_into(
-            spark,
-            spark.createDataFrame([(2, 1.0)], "k bigint, v double"),
-            ["k"],
-            matched_update={"v": "t.v - 99"},
-        )
-    assert t.version() == v and {r["v"] for r in t.read(spark).collect()} == {8.0, 2.0}
 
 
 def test_string_stats_prune_files(spark, tmp_path):
     """min/max stats work for STRING columns too (lexicographic): files
-    whose [min, max] provably misses the probed range are skipped, and
-    read_where stays exact — the categorical-column (lang/source)
-    pruning a curation pipeline leans on."""
+    whose [min, max] provably misses every probed value are skipped, and
+    read_in stays exact — the categorical-column (lang/source) pruning a
+    curation pipeline leans on."""
     t = TxTable(str(tmp_path / "t"), stats_cols=["lang"])
     mk = lambda rows: spark.createDataFrame(rows, "k bigint, lang string")  # noqa: E731
     t.overwrite(mk([(1, "de"), (2, "en")]).coalesce(1))
@@ -1019,141 +589,13 @@ def test_string_stats_prune_files(spark, tmp_path):
     assert all(e["stats"]["lang"] is not None for e in m["files"])
     hits = [e for e in m["files"] if t._overlaps(e, "lang", "es", "fr")]
     assert len(hits) == 1  # only the middle file can hold [es, fr]
-    got = t.read_where(spark, "lang", "es", "fr")
+    got = t.read_in(spark, "lang", ["es", "fr"])
+    assert len(got.inputFiles()) == 1
     assert sorted(r["k"] for r in got.collect()) == [3, 4]
-    # prefix-range probe: everything >= "e" and < "f" (en, es)
-    got2 = t.read_where(spark, "lang", "e", "ezzz")
+    # values spread over two files: the [zh] file is never scanned
+    got2 = t.read_in(spark, "lang", ["en", "es"])
+    assert len(got2.inputFiles()) == 2
     assert sorted(r["k"] for r in got2.collect()) == [2, 3]
-
-
-def test_delete_where_bounded_rewrite_and_forget_flow(spark, tmp_path):
-    """delete_where: matching rows gone from HEAD in one manifest flip;
-    files the stats+Bloom prove clean carry over PHYSICALLY untouched;
-    NULL keys survive (SQL DELETE semantics); time travel still shows
-    the pre-delete state until vacuum passes the retention window — the
-    documented erasure horizon."""
-    t = TxTable(str(tmp_path / "t"), stats_cols=["u"], bloom_cols=["u"])
-    mk = lambda rows: spark.createDataFrame(rows, "u bigint, v string")  # noqa: E731
-    t.overwrite(mk([(1, "a"), (2, "b")]).coalesce(1))
-    t.append(mk([(100, "c"), (101, "d")]).coalesce(1))
-    t.append(mk([(None, "e"), (100, "f")]).coalesce(1))
-    before = set(t._names(t._manifest(t.version())["files"]))
-
-    v = t.delete_where(spark, "u", 100)
-    got = {(r["u"], r["v"]) for r in t.read(spark).collect()}
-    assert got == {(1, "a"), (2, "b"), (101, "d"), (None, "e")}
-    after = set(t._names(t._manifest(v)["files"]))
-    # the [1,2] file provably misses u=100: carried over untouched
-    assert len(before & after) >= 1
-    # time travel: the subject is still visible at the old version...
-    assert {r["u"] for r in t.read(spark, version=v - 1).collect()} >= {100}
-    # ...until vacuum passes retention — then the old manifests/files go
-    t.vacuum(keep_versions=1, retention_s=0)
-    import pytest as _p
-
-    with _p.raises(ValueError, match="undo horizon"):
-        t.restore(v - 1)
-
-    # deleting a value nothing holds: no files rewritten, clean commit
-    names0 = set(t._names(t._manifest(t.version())["files"]))
-    t.delete_where(spark, "u", 999_999)
-    assert set(t._names(t._manifest(t.version())["files"])) == names0
-    # constraints still gate other writes after a delete (smoke)
-    assert t.read(spark).count() == 4
-
-
-def test_read_asof_timestamp_time_travel(spark, tmp_path):
-    """TIMESTAMP AS OF: each commit records its wall-clock instant and
-    read_asof resolves the latest version at or before the probe time;
-    probes before the first commit fail loudly; the version number
-    stays the ordering authority (latest qualifying version wins)."""
-    import time as _time
-
-    t = TxTable(str(tmp_path / "t"))
-    antes = _time.time()
-    t.overwrite(_df(spark, 0, 3))
-    entre = _time.time()
-    _time.sleep(0.05)
-    t.append(_df(spark, 3, 5))
-    despues = _time.time()
-
-    assert t.read_asof(spark, entre).count() == 3   # v0 snapshot
-    assert t.read_asof(spark, despues).count() == 5  # v1 snapshot
-    assert t.read_asof(spark, despues + 3600).count() == 5
-    with pytest.raises(FileNotFoundError, match="committed at"):
-        t.read_asof(spark, antes - 1)
-    # manifests carry the instant, monotone with versions
-    at0 = t._manifest(0)["committed_at"]
-    at1 = t._manifest(1)["committed_at"]
-    assert antes <= at0 <= entre <= at1 <= despues
-
-
-def test_delete_matching_predicate_and_prune_hint(spark, tmp_path):
-    """delete_matching: arbitrary-predicate DELETE in one manifest flip;
-    NULL predicate keeps rows (SQL DELETE); the (col, lo, hi) stats
-    hint carries provably-out-of-range files over physically untouched;
-    no hint = every file rewritten, still correct."""
-    t = TxTable(str(tmp_path / "t"), stats_cols=["k"])
-    mk = lambda rows: spark.createDataFrame(rows, "k bigint, v double")  # noqa: E731
-    t.overwrite(mk([(1, 1.0), (2, -1.0)]).coalesce(1))
-    t.append(mk([(100, -5.0), (101, 5.0)]).coalesce(1))
-    t.append(mk([(200, None), (201, -2.0)]).coalesce(1))
-    before = set(t._names(t._manifest(t.version())["files"]))
-
-    # delete negatives, hinted to k >= 100 (caller asserts the range)
-    v = t.delete_matching(
-        spark, "v < 0 AND k >= 100", prune=("k", 100, 10_000)
-    )
-    got = {(r["k"], r["v"]) for r in t.read(spark).collect()}
-    # NULL v row survives (predicate NULL), out-of-range negatives too
-    assert got == {(1, 1.0), (2, -1.0), (101, 5.0), (200, None)}
-    after = set(t._names(t._manifest(v)["files"]))
-    assert len(before & after) == 1  # the [1,2] file carried untouched
-
-    # unhinted predicate: correct, all files rewritten
-    t.delete_matching(spark, F.col("v") < 0)
-    got = {(r["k"], r["v"]) for r in t.read(spark).collect()}
-    assert got == {(1, 1.0), (101, 5.0), (200, None)}
-    # change feed sees a rewrite, loudly
-    from etl_python_airflow_bigquery_spark.operators.txlog import (
-        NonIncrementalHistory,
-    )
-
-    with pytest.raises(NonIncrementalHistory):
-        t.changes(spark, since_version=0)
-
-
-def test_changes_pass_through_constraint_commits(spark, tmp_path):
-    """ADVICE r7 (medium): add_constraint/drop_constraint are
-    manifest-only — the file set is identical — so the change feed must
-    treat them like optimize_* (data-preserving, zero contributed rows)
-    instead of raising NonIncrementalHistory and forcing every
-    incremental consumer into a full rebuild over a commit that changed
-    no row."""
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(_df(spark, 0, 5))            # v0
-    t.add_constraint(spark, "k_nn", "k >= 0")  # v1 (manifest-only)
-    t.append(_df(spark, 5, 8))               # v2
-    t.drop_constraint("k_nn")                # v3 (manifest-only)
-    t.append(_df(spark, 8, 10))              # v4
-
-    # feed across both constraint commits: exactly the appended rows
-    delta = t.changes(spark, since_version=0)
-    assert delta.count() == 5
-    assert {r["_commit_version"] for r in delta.collect()} == {2, 4}
-    # a window holding ONLY a constraint commit is an empty delta
-    assert t.changes(spark, since_version=2, until_version=3).count() == 0
-    # and the incremental mirror keeps refreshing instead of rebuilding
-    from etl_python_airflow_bigquery_spark.operators.txlog import (
-        mirror_incremental,
-    )
-
-    dst = TxTable(str(tmp_path / "m"))
-    assert mirror_incremental(spark, t, dst)["mode"] == "initial"
-    t.add_constraint(spark, "k_nn2", "k >= 0")
-    t.append(_df(spark, 10, 12))
-    out = mirror_incremental(spark, t, dst)
-    assert out["mode"] == "incremental" and dst.read(spark).count() == 12
 
 
 def test_txn_fence_merge_never_regresses(spark, tmp_path):
@@ -1166,11 +608,12 @@ def test_txn_fence_merge_never_regresses(spark, tmp_path):
     t.append(_df(spark, 3, 5), txn=("app", 7))
     assert t.txn_version("app") == 7
     # simulate the racer: a raw _claim carrying a STALE fence entry
-    files = t._manifest(t.version())["files"]
+    parent, head = t._head()
     t._claim(
-        {"files": files, "op": "append", "schema": t._manifest(1)["schema"],
+        {"files": head["files"], "op": "append", "schema": head["schema"],
          "txn": {"app": 2}},
-        expected_parent=t.version(),
+        expected_parent=parent,
+        parent=head,
     )
     # the fence held at 7 — max-merge, not overwrite
     assert t.txn_version("app") == 7
@@ -1181,45 +624,6 @@ def test_txn_fence_merge_never_regresses(spark, tmp_path):
     # a genuinely newer fence still advances
     t.append(_df(spark, 5, 6), txn=("app", 8))
     assert t.txn_version("app") == 8
-
-
-def test_delete_where_refuses_null_value(spark, tmp_path):
-    """ADVICE r7: delete_where(value=None) contradicts its own 'NULL
-    never equals' contract (eqNullSafe WOULD match every NULL row) — it
-    is refused loudly; delete_matching('col IS NULL') is the explicit
-    path, and NULL rows genuinely survive any point delete."""
-    t = TxTable(str(tmp_path / "t"))
-    df = spark.createDataFrame(
-        [(1, 1.0), (None, 2.0), (None, 3.0)], "k long, v double"
-    )
-    t.overwrite(df)
-    with pytest.raises(ValueError, match="IS NULL"):
-        t.delete_where(spark, "k", None)
-    # nothing flipped
-    assert t.version() == 0 and t.read(spark).count() == 3
-    # point delete of a real key leaves the NULL rows alone
-    t.delete_where(spark, "k", 1)
-    assert {r["v"] for r in t.read(spark).collect()} == {2.0, 3.0}
-    # the sanctioned explicit path
-    t.delete_matching(spark, "k IS NULL")
-    assert t.read(spark).count() == 0
-
-
-def test_merge_into_refuses_dup_source_on_empty_table(spark, tmp_path):
-    """ADVICE r7: the deterministic-merge refusal is about the SOURCE,
-    so it applies on the first load too — a duplicate-keyed source must
-    not insert both rows silently just because the table was empty."""
-    t = TxTable(str(tmp_path / "t"))
-    dup_src = spark.createDataFrame(
-        [(1, 1.0), (1, 2.0), (2, 3.0)], "k long, v double"
-    )
-    with pytest.raises(ValueError, match="duplicate key"):
-        t.merge_into(spark, dup_src, key_cols=["k"])
-    assert t.version() == -1  # nothing committed
-    # a clean source on the empty table still first-loads fine
-    clean = spark.createDataFrame([(1, 1.0), (2, 3.0)], "k long, v double")
-    t.merge_into(spark, clean, key_cols=["k"])
-    assert t.read(spark).count() == 2
 
 
 def test_tags_pin_versions_and_survive_vacuum(spark, tmp_path):
@@ -1233,10 +637,10 @@ def test_tags_pin_versions_and_survive_vacuum(spark, tmp_path):
     t.overwrite(_df(spark, 10, 12))          # v1 rewrites everything
     t.append(_df(spark, 12, 13))             # v2
     assert t.tags() == {"lanzamiento_v1": 0}
-    assert t.read_tag(spark, "lanzamiento_v1").count() == 5
+    assert t.read(spark, version=t.tags()["lanzamiento_v1"]).count() == 5
     # aggressive vacuum: keep only the head — but the tag is a root
     t.vacuum(keep_versions=1, retention_s=0.0)
-    assert t.read_tag(spark, "lanzamiento_v1").count() == 5
+    assert t.read(spark, version=t.tags()["lanzamiento_v1"]).count() == 5
     assert t.read(spark).count() == 3
     # v1 (untagged, not head) is genuinely gone
     with pytest.raises(FileNotFoundError):
@@ -1247,7 +651,7 @@ def test_tags_pin_versions_and_survive_vacuum(spark, tmp_path):
     with pytest.raises(ValueError, match="unknown version"):
         t.create_tag("fantasma", version=99)
     with pytest.raises(ValueError, match="no such tag"):
-        t.read_tag(spark, "nadie")
+        t.delete_tag("nadie")
     # delete releases the root; the next vacuum collects v0
     t.delete_tag("lanzamiento_v1")
     t.vacuum(keep_versions=1, retention_s=0.0)
@@ -1255,134 +659,10 @@ def test_tags_pin_versions_and_survive_vacuum(spark, tmp_path):
         t.read(spark, version=0)
 
 
-def test_wap_stage_audit_publish_flow(spark, tmp_path):
-    """Write-audit-publish: staged rows are INVISIBLE to readers, the
-    audit reads the would-be state, publish is one atomic flip that
-    validates constraints + schema evolution at publish time, and a
-    discarded stage never surfaces."""
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(_df(spark, 0, 5))
-    t.add_constraint(spark, "k_nn", "k >= 0")
-
-    sid = t.stage_append(_df(spark, 5, 8))
-    # invisible until published; audit sees head + staged
-    assert t.read(spark).count() == 5
-    assert t.read_staged(spark, sid).count() == 8
-    assert t.staged()[sid]["n_files"] >= 1
-    v = t.publish(spark, sid)
-    assert v == 2 and t.read(spark).count() == 8
-    # consumed: double publish and re-audit both raise
-    with pytest.raises(ValueError, match="unknown staging id"):
-        t.publish(spark, sid)
-
-    # constraint violations are caught AT PUBLISH, table untouched
-    bad = spark.createDataFrame([(-1, 1.0)], "k long, v double")
-    sid_bad = t.stage_append(bad)
-    with pytest.raises(ConstraintViolation):
-        t.publish(spark, sid_bad)
-    assert t.read(spark).count() == 8 and t.version() == 2
-    t.discard_staged(sid_bad)
-    with pytest.raises(ValueError, match="unknown staging id"):
-        t.discard_staged(sid_bad)
-
-    # discarded files are orphans: vacuum past retention collects them,
-    # while a LIVE staged batch's files are GC roots at any age
-    sid_live = t.stage_append(_df(spark, 100, 102))
-    removed = t.vacuum(keep_versions=1, retention_s=0.0)
-    assert removed >= 1  # the discarded bad batch's file went
-    assert t.publish(spark, sid_live) == 3  # staged files survived vacuum
-    assert t.read(spark).count() == 10
-
-
-def test_wap_publish_against_moved_head(spark, tmp_path):
-    """The head moving between stage and publish is LEGAL for append
-    semantics (disjoint files): publish lands on the new head and the
-    audit's read_staged always reflects the CURRENT would-be state, not
-    the stale base_version."""
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(_df(spark, 0, 3))
-    sid = t.stage_append(_df(spark, 10, 12))
-    assert t.staged()[sid]["base_version"] == 0
-    t.append(_df(spark, 3, 5))  # concurrent writer moves the head
-    assert t.read_staged(spark, sid).count() == 7  # 5 head + 2 staged
-    v = t.publish(spark, sid)
-    assert v == 2
-    got = {r["k"] for r in t.read(spark).collect()}
-    assert got == {0, 1, 2, 3, 4, 10, 11}
-    # schema evolution is checked against the head AT PUBLISH: a staged
-    # batch whose type now clashes is refused
-    t2 = TxTable(str(tmp_path / "t2"))
-    t2.overwrite(_df(spark, 0, 2))
-    sid2 = t2.stage_append(
-        spark.createDataFrame([(1, 1.0)], "k long, v double")
-    )
-    t2.overwrite(
-        spark.createDataFrame([("a", 1.0)], "k string, v double")
-    )
-    with pytest.raises(ValueError, match="type drift"):
-        t2.publish(spark, sid2)
-
-
-def test_null_count_stats_prune_is_null_delete(spark, tmp_path):
-    """nullCount stats (Delta parity): _write_files records per-file
-    NULL counts for stats_cols, and delete_matching(prune_null=col)
-    skips files provably free of NULLs — they carry over physically
-    untouched — while NULL-bearing files rewrite without their NULL
-    rows. Files lacking the stat degrade to touched (correct)."""
-    t = TxTable(str(tmp_path / "t"), stats_cols=["k"])
-    clean = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k long, v double")
-    nully = spark.createDataFrame(
-        [(3, 3.0), (None, 9.0), (None, 8.0)], "k long, v double"
-    )
-    t.overwrite(clean.coalesce(1))
-    t.append(nully.coalesce(1))
-    m = t._manifest(t.version())
-    by_nulls = {e["nulls"]["k"] for e in m["files"]}
-    assert by_nulls == {0, 2}
-    before = set(t._names(m["files"]))
-
-    v = t.delete_matching(spark, "k IS NULL", prune_null="k")
-    after = set(t._names(t._manifest(v)["files"]))
-    # the clean file carried over untouched (same physical name)
-    assert len(before & after) == 1
-    got = {(r["k"], r["v"]) for r in t.read(spark).collect()}
-    assert got == {(1, 1.0), (2, 2.0), (3, 3.0)}
-    # both hints at once is ambiguous — refused
-    with pytest.raises(ValueError, match="not both"):
-        t.delete_matching(spark, "k IS NULL", prune=("k", 0, 1), prune_null="k")
-
-
-def test_wap_publish_crash_window_fence(spark, tmp_path):
-    """ADVICE r8 (medium): a crash between publish's version flip and the
-    staged-manifest unlink leaves the staged manifest alive; the retry
-    path must NOT append the same files twice. The committed manifest
-    records its staging_id, and a re-publish of an already-flipped id is
-    an idempotent no-op returning the committed version."""
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(_df(spark, 0, 5))
-    sid = t.stage_append(_df(spark, 5, 8))
-    staged_path = t._staged_path(sid)
-    with open(staged_path) as fh:
-        staged_payload = fh.read()
-    v = t.publish(spark, sid)
-    assert v == 1 and t.read(spark).count() == 8
-    # simulate the crash window: the flip landed but the unlink didn't
-    with open(staged_path, "w") as fh:
-        fh.write(staged_payload)
-    v2 = t.publish(spark, sid)  # retry after "crash"
-    assert v2 == v  # the already-committed version, not a new flip
-    assert t.version() == v  # no duplicate append happened
-    assert t.read(spark).count() == 8  # rows not doubled
-    # and the leftover staged manifest was consumed by the retry
-    assert not os.path.exists(staged_path)
-    with pytest.raises(ValueError, match="unknown staging id"):
-        t.publish(spark, sid)
-
-
 def test_vacuum_tolerates_vanishing_roots(spark, tmp_path, monkeypatch):
     """ADVICE r8 (low): vacuum's GC-root collection lists then opens
-    tag_/staged_ json files; a concurrent delete_tag/publish between the
-    listing and the open must be skipped, not crash the vacuum."""
+    tag_ json files; a concurrent delete_tag between the listing and the
+    open must be skipped, not crash the vacuum."""
     t = TxTable(str(tmp_path / "t"))
     t.overwrite(_df(spark, 0, 3))
     t.append(_df(spark, 3, 5))
@@ -1393,189 +673,13 @@ def test_vacuum_tolerates_vanishing_roots(spark, tmp_path, monkeypatch):
         out = list(real_listdir(path))
         if os.path.abspath(path) == os.path.abspath(t.log_dir):
             # entries that vanished between listdir and open
-            out += ["tag_fantasma.json", "staged_fantasma.json"]
+            out += ["tag_fantasma.json"]
         return out
 
     monkeypatch.setattr(os, "listdir", phantom_listdir)
     assert t.tags() == {"estable": 1}  # phantom tag skipped
-    assert set(t.staged()) == set()  # phantom staged skipped
     t.vacuum(keep_versions=1, retention_s=0.0)  # must not raise
     assert t.read(spark).count() == 5
-
-
-def test_wap_named_stages_interleave_independently(spark, tmp_path):
-    """Multi-branch WAP (VERDICT r8 #5): two pipelines stage under their
-    own NAMES on one table, each audit sees head + ITS OWN rows only,
-    publish order is free (B then A), vacuum protects both while they
-    are live, and a name is unique among live stages then frees on
-    publish."""
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(_df(spark, 0, 4))  # head: 4 rows
-
-    sid_a = t.stage_append(_df(spark, 10, 13), name="pipeline_a")  # 3 rows
-    sid_b = t.stage_append(_df(spark, 20, 22), name="pipeline_b")  # 2 rows
-    assert t.staged()[sid_a]["name"] == "pipeline_a"
-    assert t.staged()[sid_b]["name"] == "pipeline_b"
-    # a second live stage under an active name is a wiring bug — refused
-    with pytest.raises(ValueError, match="already active"):
-        t.stage_append(_df(spark, 30, 31), name="pipeline_a")
-
-    # isolation: each audit = head + its own rows, by NAME
-    assert {r["k"] for r in t.read_staged(spark, "pipeline_a").collect()} \
-        == {0, 1, 2, 3, 10, 11, 12}
-    assert {r["k"] for r in t.read_staged(spark, "pipeline_b").collect()} \
-        == {0, 1, 2, 3, 20, 21}
-    assert t.read(spark).count() == 4  # table untouched while staged
-
-    # vacuum protects BOTH live stages' files at any age
-    t.vacuum(keep_versions=1, retention_s=0.0)
-
-    # publish B first, then A — order-free; both land
-    vb = t.publish(spark, "pipeline_b")
-    assert {r["k"] for r in t.read(spark).collect()} == {0, 1, 2, 3, 20, 21}
-    va = t.publish(spark, "pipeline_a")
-    assert va == vb + 1
-    assert {r["k"] for r in t.read(spark).collect()} \
-        == {0, 1, 2, 3, 10, 11, 12, 20, 21}
-
-    # names freed on publish: the label is reusable, and the old names
-    # no longer resolve
-    with pytest.raises(ValueError, match="unknown staging id"):
-        t.read_staged(spark, "pipeline_a")
-    sid_a2 = t.stage_append(_df(spark, 40, 41), name="pipeline_a")
-    t.discard_staged("pipeline_a")  # discard by name works too
-    with pytest.raises(ValueError, match="unknown staging id"):
-        t.publish(spark, sid_a2)
-
-
-def test_wap_name_claim_is_atomic_marker(spark, tmp_path):
-    """ADVICE r9: the stage-name uniqueness guarantee is a hard-link
-    marker, not a scan — the marker exists exactly while the stage is
-    live, a crash leftover (marker without manifest) is reclaimed by the
-    next stager, and publish/discard free the name."""
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(_df(spark, 0, 3))
-
-    sid = t.stage_append(_df(spark, 10, 12), name="etiqueta")
-    marker = t._stage_name_marker("etiqueta")
-    assert os.path.exists(marker)
-    with pytest.raises(ValueError, match="already active"):
-        t.stage_append(_df(spark, 20, 21), name="etiqueta")
-    t.publish(spark, sid)
-    assert not os.path.exists(marker)
-
-    # crash leftover: manifest unlinked (publish step 1) but marker
-    # survived (crash before step 2) — next claim reclaims in place
-    sid2 = t.stage_append(_df(spark, 30, 32), name="etiqueta")
-    os.unlink(t._staged_path(sid2))  # simulate the crash window
-    assert os.path.exists(marker)
-    sid3 = t.stage_append(_df(spark, 40, 42), name="etiqueta")
-    assert t.staged()[sid3]["name"] == "etiqueta"
-    t.discard_staged("etiqueta")
-    assert not os.path.exists(marker)
-
-
-def test_wap_name_reclaim_restores_stolen_live_marker(spark, tmp_path):
-    """ADVICE r10: stale-marker reclaim is an atomic rename to a unique
-    tombstone, and a reclaimer whose tombstone turns out to hold a LIVE
-    claim (the racer reclaimed-and-linked between our staleness read and
-    our rename) RESTORES it and refuses — never the old bare unlink,
-    which deleted the racer's fresh marker and let both claims
-    succeed."""
-    import json as _json
-
-    from etl_python_airflow_bigquery_spark.operators import txlog as txmod
-
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(_df(spark, 0, 3))
-
-    # a LIVE stage (the racer's) whose marker will be 'stolen mid-race'
-    sid_live = t.stage_append(_df(spark, 10, 12))
-    marker = t._stage_name_marker("etiqueta")
-    # crash leftover at the name: marker whose manifest is long gone
-    with open(marker, "w") as fh:
-        _json.dump({"name": "etiqueta", "sid": "deadbeef"}, fh)
-
-    real_rename = txmod.os.rename
-    hits = []
-
-    def racing_rename(src, dst, *a, **kw):
-        if src == marker and not hits:
-            hits.append(1)
-            # simulate the racer winning the reclaim AND linking its
-            # fresh live marker inside our read->rename window
-            with open(marker, "w") as fh:
-                _json.dump({"name": "etiqueta", "sid": sid_live}, fh)
-        return real_rename(src, dst, *a, **kw)
-
-    txmod.os.rename = racing_rename
-    try:
-        with pytest.raises(ValueError, match="already active"):
-            t.stage_append(_df(spark, 20, 21), name="etiqueta")
-    finally:
-        txmod.os.rename = real_rename
-    # the racer's live marker survived the steal — restored in place
-    with open(marker) as fh:
-        assert _json.load(fh)["sid"] == sid_live
-    # and no tombstone litter remains
-    assert not [f for f in os.listdir(t.log_dir) if f.startswith("_tomb_")]
-
-
-def test_wap_name_claim_contention_is_not_already_active(spark, tmp_path):
-    """ADVICE r10: exhausting the claim retries on benign races (holder
-    vanishing between the link attempt and the marker read) raises a
-    retryable contention error, not the misleading 'already active' —
-    and the failed stage does not stay staged."""
-    from etl_python_airflow_bigquery_spark.operators import txlog as txmod
-
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(_df(spark, 0, 3))
-    marker = t._stage_name_marker("etiqueta")
-
-    real_link = txmod.os.link
-
-    def always_losing_link(src, dst, *a, **kw):
-        if dst == marker:
-            raise FileExistsError(dst)  # racer always beat us...
-        return real_link(src, dst, *a, **kw)
-
-    txmod.os.link = always_losing_link
-    try:
-        # ...but the marker is never readable (holder vanished): the
-        # benign-race loop must exhaust into a CONTENTION error
-        with pytest.raises(RuntimeError, match="transient contention"):
-            t.stage_append(_df(spark, 20, 21), name="etiqueta")
-    finally:
-        txmod.os.link = real_link
-    assert t.staged() == {}  # the losing batch was unstaged
-
-
-def test_vacuum_consumes_fence_twin_before_dropping_manifest(spark, tmp_path):
-    """ADVICE r9: vacuum must not drop a committed manifest carrying a
-    ``staging_id`` while its leftover staged twin is alive — it consumes
-    the twin first, so a publish retry can never re-append the rows
-    (it now gets the loud already-consumed ValueError instead)."""
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(_df(spark, 0, 5))
-    sid = t.stage_append(_df(spark, 5, 8))
-    staged_path = t._staged_path(sid)
-    with open(staged_path) as fh:
-        staged_payload = fh.read()
-    v_pub = t.publish(spark, sid)
-    # crash window: staged manifest resurrected after the flip landed
-    with open(staged_path, "w") as fh:
-        fh.write(staged_payload)
-    # head moves on; the fence manifest falls outside keep_versions
-    t.append(_df(spark, 100, 101))
-    t.append(_df(spark, 101, 102))
-    assert t.read(spark).count() == 10
-    t.vacuum(keep_versions=1, retention_s=0.0)
-    # the twin was consumed WITH the fence, not orphaned past it
-    assert not os.path.exists(staged_path)
-    with pytest.raises(ValueError, match="unknown staging id"):
-        t.publish(spark, sid)
-    assert t.read(spark).count() == 10  # no duplicated rows, ever
-    assert v_pub not in t._versions()  # the old manifest did get dropped
 
 
 def test_read_in_prunes_files_by_stats(spark, tmp_path):
@@ -1599,119 +703,34 @@ def test_read_in_prunes_files_by_stats(spark, tmp_path):
     assert t.read_in(spark, "c", [15], version=1).count() == 1
 
 
-def test_wap_name_claim_own_sid_is_success(spark, tmp_path):
-    """ADVICE r11: re-presenting a marker that already carries the
-    caller's OWN sid (the reclaim-then-restore race can make a claimant
-    re-read its restored marker) is success, not 'already active' —
-    the old behavior made stage_append unstage its own valid batch."""
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(_df(spark, 0, 3))
-    sid = t.stage_append(_df(spark, 10, 12), name="etiqueta")
-    t._claim_stage_name("etiqueta", sid)  # no raise: it's our claim
-    with pytest.raises(ValueError, match="already active"):
-        t._claim_stage_name("etiqueta", "otro_sid")
-    assert sid in t.staged()  # the valid batch was never unstaged
+def test_fenced_append_reads_its_parent_once(spark, tmp_path, monkeypatch):
+    """One parent snapshot per commit: a fenced append lists the log
+    directory once and parses the parent manifest once — the fence
+    check, the schema-evolution gate and _claim's txn carry-forward all
+    read that one snapshot. A replayed batch costs the same single read
+    and commits nothing."""
+    t = TxTable(str(tmp_path / "t"), stats_cols=["k"])
+    t.overwrite(_df(spark, 0, 5), txn=("app", 0))
+    t.append(_df(spark, 5, 8), txn=("app", 1))
+    parses, listings = [], []
+    real_manifest, real_listdir = t._manifest, os.listdir
 
+    def manifest(v):
+        parses.append(v)
+        return real_manifest(v)
 
-def test_wap_name_restore_race_keeps_holder_record(spark, tmp_path):
-    """ADVICE r11 (medium): if a THIRD claimant links a fresh LIVE
-    marker while we are restoring a stolen live claim from our
-    tombstone, the old path unlinked the tombstone — destroying the
-    original holder's claim record while the racer's survived (two live
-    stages, one name). Now: hard error, tombstone KEPT."""
-    import json as _json
+    def listdir(path):
+        if os.path.abspath(path) == os.path.abspath(t.log_dir):
+            listings.append(path)
+        return real_listdir(path)
 
-    from etl_python_airflow_bigquery_spark.operators import txlog as txmod
-
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(_df(spark, 0, 3))
-
-    sid_live = t.stage_append(_df(spark, 10, 12))    # the stolen holder
-    sid_racer = t.stage_append(_df(spark, 14, 16))   # the third claimant
-    marker = t._stage_name_marker("etiqueta")
-    with open(marker, "w") as fh:  # crash leftover at the name
-        _json.dump({"name": "etiqueta", "sid": "deadbeef"}, fh)
-
-    real_rename = txmod.os.rename
-    real_link = txmod.os.link
-    stole = []
-
-    def racing_rename(src, dst, *a, **kw):
-        if src == marker and not stole:
-            stole.append(1)
-            # holder claims inside our staleness-read -> rename window
-            with open(marker, "w") as fh:
-                _json.dump({"name": "etiqueta", "sid": sid_live}, fh)
-        return real_rename(src, dst, *a, **kw)
-
-    def third_claimant_link(src, dst, *a, **kw):
-        if dst == marker and "_tomb_" in src and not os.path.exists(marker):
-            # the third claimant wins the path just before our restore
-            with open(marker, "w") as fh:
-                _json.dump({"name": "etiqueta", "sid": sid_racer}, fh)
-        return real_link(src, dst, *a, **kw)
-
-    txmod.os.rename = racing_rename
-    txmod.os.link = third_claimant_link
-    try:
-        with pytest.raises(RuntimeError, match="two LIVE claims collided"):
-            t.stage_append(_df(spark, 20, 21), name="etiqueta")
-    finally:
-        txmod.os.rename = real_rename
-        txmod.os.link = real_link
-    # the racer holds the path, but the holder's record SURVIVES in the
-    # tombstone — nothing was silently destroyed
-    with open(marker) as fh:
-        assert _json.load(fh)["sid"] == sid_racer
-    tombs = [f for f in os.listdir(t.log_dir) if f.startswith("_tomb_")]
-    assert len(tombs) == 1
-    with open(os.path.join(t.log_dir, tombs[0])) as fh:
-        assert _json.load(fh)["sid"] == sid_live
-
-
-def test_wap_name_restore_reclaims_stale_racer(spark, tmp_path):
-    """ADVICE r11: the restore path validates an EEXIST racer — a STALE
-    third marker (manifest gone) is reclaimed and the restore retried,
-    so the live holder's claim lands back at the path."""
-    import json as _json
-
-    from etl_python_airflow_bigquery_spark.operators import txlog as txmod
-
-    t = TxTable(str(tmp_path / "t"))
-    t.overwrite(_df(spark, 0, 3))
-
-    sid_live = t.stage_append(_df(spark, 10, 12))
-    marker = t._stage_name_marker("etiqueta")
-    with open(marker, "w") as fh:
-        _json.dump({"name": "etiqueta", "sid": "deadbeef"}, fh)
-
-    real_rename = txmod.os.rename
-    real_link = txmod.os.link
-    stole, blocked = [], []
-
-    def racing_rename(src, dst, *a, **kw):
-        if src == marker and not stole:
-            stole.append(1)
-            with open(marker, "w") as fh:
-                _json.dump({"name": "etiqueta", "sid": sid_live}, fh)
-        return real_rename(src, dst, *a, **kw)
-
-    def stale_racer_link(src, dst, *a, **kw):
-        if (dst == marker and "_tomb_" in src and not blocked
-                and not os.path.exists(marker)):
-            blocked.append(1)
-            with open(marker, "w") as fh:  # stale: no manifest for it
-                _json.dump({"name": "etiqueta", "sid": "feedface"}, fh)
-        return real_link(src, dst, *a, **kw)
-
-    txmod.os.rename = racing_rename
-    txmod.os.link = stale_racer_link
-    try:
-        with pytest.raises(ValueError, match="already active"):
-            t.stage_append(_df(spark, 20, 21), name="etiqueta")
-    finally:
-        txmod.os.rename = real_rename
-        txmod.os.link = real_link
-    with open(marker) as fh:
-        assert _json.load(fh)["sid"] == sid_live  # holder restored
-    assert not [f for f in os.listdir(t.log_dir) if f.startswith("_tomb_")]
+    monkeypatch.setattr(t, "_manifest", manifest)
+    monkeypatch.setattr(os, "listdir", listdir)
+    v = t.append(_df(spark, 8, 10), txn=("app", 2))
+    assert (parses, len(listings)) == ([1], 1)
+    parses.clear()
+    listings.clear()
+    assert t.append(_df(spark, 8, 10), txn=("app", 2)) == v
+    assert (parses, len(listings)) == ([2], 1)
+    monkeypatch.undo()
+    assert t.read(spark).count() == 10 and t.txn_version("app") == 2

@@ -27,7 +27,7 @@ OP_LABELS = {
     "S11": "config source (sources/connectors.py:230)",
     "K1": "partitioned+clustered append (operators/writes.py:33)",
     "K2": "truncate-replace (operators/writes.py:33)",
-    "K3": "delete-window-then-append (operators/writes.py:50, txlog.py:60)",
+    "K3": "delete-window-then-append (operators/writes.py:50, txlog.py TxTable.replace_where/replace_partitions)",
     "K4": "MERGE upsert sink (operators/writes.py:133)",
     "K5": "CTAS (operators/writes.py:293)",
     "K6": "JDBC truncate+chunked append (sinks.py:120)",
