@@ -21,6 +21,7 @@ import shutil
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 16
 
@@ -99,12 +100,18 @@ def refresh_bucketed_mart(
     (pinned by tests/test_writes.py::test_refresh_bucketed_mart)."""
     # Without an aligned input distribution, EVERY writer task holds rows
     # of every (partition, bucket) pair and the writer emits tasks×pairs
-    # small files; clustering the input by the partition column first
-    # bounds the output at pairs files (one task per partition dir,
-    # measured ~1.5× faster locally and the difference grows with task
-    # count). Partition-grain skew lands on one task — acceptable, since
-    # a refresh window is one-to-few partitions by construction.
-    df = df.repartition(partition_col)
+    # small files. Clustering the input on (partition, bucket id) — the
+    # writer's own pmod(hash(bucket_col), n_buckets) — bounds the output
+    # at one file per pair while the pairs spread over the tasks, so one
+    # day's buckets are written in parallel rather than by one task. The
+    # partition count is explicit: AQE coalesces a keys-only repartition
+    # of a small input into ONE writer task, which then writes every
+    # file in turn.
+    df = df.repartition(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        F.col(partition_col),
+        F.pmod(F.hash(bucket_col), F.lit(n_buckets)),
+    )
     if not spark.catalog.tableExists(table):
         wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
         orphan = os.path.join(wh, table.lower())

@@ -22,14 +22,20 @@ lifecycle over the engine's own txlog tables:
   ``propagate_min_labels``).
 * ``ingest_dedup_state`` — the daily face: classify an arriving batch
   against the STORED tables (exact tier: hash equi-probe; near tier:
-  shingle-posting probe + array verify — the same exact prefix-filter
-  answer, reference `dedup_incremental` queries/dedup.py), fold the new
-  edges into the stored labels via ``cc_incremental`` (O(batch+labels),
-  star contraction — provably equal to a full recluster), and APPEND
-  the batch's own hashes/postings/arrays so tomorrow's batch probes
+  one prefix-filtered candidate join of the batch's shingles against
+  the stored postings AND the batch's own, then an array verify — the
+  same exact answer as the reference `dedup_incremental`,
+  queries/dedup.py), fold every verified edge, stored and in-batch,
+  into the stored labels via ``cc_incremental`` (O(batch+labels), star
+  contraction — provably equal to a full recluster), and APPEND the
+  batch's own hashes/postings/arrays so tomorrow's batch probes
   today's docs too. Posting compaction past the shared file gate and
   keep+slack auto-vacuum ride the same policy as the other two index
   families.
+* ``ingest_dedup_state_lotes`` folds k ordered batches in one plan, and
+  ``classify_dedup_state`` classifies read-only against a current or
+  pinned snapshot. All three run the one classification core,
+  ``_clasificacion``: a single batch is its one-lote case.
 
 At 100 TB: the only corpus-scale work happened once, at build; a batch
 touches the posting files its own shingles' ranges admit, the hash
@@ -241,11 +247,12 @@ def ingest_dedup_state(
     same surface (and, on the registered %10 split, the same
     value-hashed answer) as the inline `dedup_incremental` row.
 
-    Delta discipline: the stored tables are read stats-PRUNED to the
-    batch's own hash/shingle/candidate values; the batch's in-batch
-    pairs run the shared exact prefix-filter engine over batch-only
-    postings; the label fold is ``cc_incremental`` — O(batch + labels).
-    Nothing re-tokenizes or re-scans the corpus.
+    A single batch is the one-lote case of ``ingest_dedup_state_lotes``
+    and runs through it: the stored tables are read stats-PRUNED to the
+    batch's own hash/shingle/candidate values, in-batch pairs come out
+    of the same candidate join as stored pairs, and the label fold is
+    ``cc_incremental`` — O(batch + labels). Nothing re-tokenizes or
+    re-scans the corpus.
 
     ``txn=(app_id, batch_id)``: the SAME application-transaction fence
     the other two index families' streaming ingests carry (ADVICE r13 —
@@ -254,22 +261,13 @@ def ingest_dedup_state(
     duplicated ``conjuntos`` rows inflate ``_verify_jaccard``'s na/nb
     while ``array_intersect`` dedups c, permanently false-negativing
     true near-dups). With the fence, each table independently skips an
-    already-applied (app_id, batch_id); and the stored reads below
-    anti-join the batch's OWN doc_ids out, so a full replay returns the
-    first run's classification bit for bit instead of matching the
-    batch against itself."""
-    h_tx, s_tx, a_tx, _ = _tables(path)
-    c = _clasificar(spark, docs_new, h_tx, s_tx, a_tx)
-    # fold every new edge into the stored labels (star contraction)
-    aristas = (
-        c["verificados"].select("doc_a", "doc_b")
-        .unionByName(c["pares_lote"])
-        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    )
-    _commit_fold(
-        spark, path, aristas, c["hashes_n"], c["sh_n"], c["arrays_n"], txn
-    )
-    return c["salida"]
+    already-applied (app_id, batch_id); and the stored reads anti-join
+    the batch's OWN doc_ids out, so a full replay returns the first
+    run's classification bit for bit instead of matching the batch
+    against itself."""
+    return ingest_dedup_state_lotes(
+        spark, docs_new.withColumn("lote", F.lit(1)), path, txn=txn
+    ).drop("lote")
 
 
 def ingest_dedup_state_lotes(
@@ -278,19 +276,18 @@ def ingest_dedup_state_lotes(
     path: str,
     txn: tuple[str, int] | None = None,
 ) -> DataFrame:
-    """MULTI-BATCH fold: ingest k ordered batches in ONE plan — the
-    amortization the serve context gave the hybrid serve, applied to
-    the dedup-state fold (whose ~17 s per-call plan constant dominates
-    realistic batch sizes; VERDICT r13 "missing" #1 follow-through).
-
+    """MULTI-BATCH fold: ingest k ordered batches in ONE plan.
     ``docs_lotes`` carries a ``lote`` column (1..k, the arrival order;
     doc_ids unique across lotes). The call is EQUIVALENT to k
-    sequential ``ingest_dedup_state`` calls in ``lote`` order — same
-    per-batch classification, same final labels, same stored rows —
-    but pays the classification plan, the label fold, and the four
-    table commits ONCE. Returns (lote, doc_id, estado, dup_de).
+    sequential single-batch ingests in ``lote`` order — same per-batch
+    classification, same final labels, same stored rows — but pays the
+    classification plan, the label fold, and the four table commits
+    ONCE. Returns (lote, doc_id, estado, dup_de).
 
-    Why the collapse is exact, tier by tier:
+    Every classification runs through the one core, ``_clasificacion``
+    (the single-batch ingest is lote 1 of it; the read-only
+    ``classify_dedup_state`` is lote 1 against a pinned snapshot).
+    Why the collapse of k batches into one plan is exact, tier by tier:
 
     * **Visibility is a predicate, not a loop.** Sequentially, batch b
       probes stored tables that already contain batches < b. Here the
@@ -300,17 +297,16 @@ def ingest_dedup_state_lotes(
       table versions.
     * **One global prefix order serves every batch.** The one-sided
       prefix filter is exact for J ≥ 0.5 under ANY fixed total order
-      of a doc's shingles (the pigeonhole argument at
-      ``_clasificar``), so ranking by document frequency over the
+      of a doc's shingles (the pigeonhole argument in
+      ``_clasificacion``), so ranking by document frequency over the
       WHOLE probe union — rather than each batch's own pruned view —
       changes candidate counts, never the verified answer.
-    * **Same-lote pairs unify with the cross-lote tier.** Sequential
-      ingest finds in-batch pairs with ``pares_jaccard_prefijo`` and
-      uses them ONLY as fold edges (never for ``estado``). Here the
-      one candidate join also admits ``lote_b == lote_a`` partners
-      (excluding self-matches); the verified same-lote pairs feed the
-      fold, while ``estado``/``dup_de`` only read strictly-earlier
-      partners — bit-for-bit the sequential verdicts.
+    * **Same-lote pairs come out of the same candidate join.** The
+      join also admits ``lote_b == lote_a`` partners (excluding
+      self-matches); the verified same-lote pairs feed the fold as
+      edges and never set ``estado``/``dup_de``, which only read
+      strictly-earlier partners. So a batch's in-batch near-dups share
+      a cluster after the fold while each reads "nuevo".
     * **One fold of all edges = k sequential folds.** Connected
       components are confluent: labels after folding E₁ then E₂ equal
       labels after folding E₁ ∪ E₂ (min-label canonical form), so
@@ -320,20 +316,76 @@ def ingest_dedup_state_lotes(
     application-transaction per call, the single-batch discipline), and
     the stored probes anti-join every lote's doc_ids, so a fenced
     replay reproduces the first run's classification exactly."""
+    h_tx, s_tx, a_tx, _ = _tables(path)
+    c = _clasificacion(spark, docs_lotes, h_tx, s_tx, a_tx)
+    aristas = c["verificados"].select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    )
+    _commit_fold(
+        spark, path, aristas, c["hashes_n"], c["sh_n"], c["arrays_n"], txn
+    )
+    return c["salida"]
+
+
+def classify_dedup_state(
+    spark: SparkSession,
+    docs_new: DataFrame,
+    path: str,
+    pins: dict | None = None,
+) -> DataFrame:
+    """READ-ONLY classification of a batch against the stored state —
+    nothing folds, nothing appends. ``pins`` (the
+    ``pin_dedup_version`` return value: {table: version}) pins the
+    probed snapshot, which is the TIME-TRAVEL CLASSIFICATION AUDIT:
+    "what would YESTERDAY's dedup memory have said about this batch" —
+    run after later ingests folded more batches in, and diffed against
+    the current-snapshot answer to show exactly which verdicts the
+    interleaved ingests changed (the registered
+    ``dedup_clasificacion_pinada`` row).
+
+    The ingest's replay rule holds here too: the stored reads exclude
+    the batch's own doc_ids, so a batch the state already holds
+    classifies each doc against the OTHER stored docs, never against
+    its own stored rows."""
+    h_tx, s_tx, a_tx, _ = _tables(path)
+    return _clasificacion(
+        spark, docs_new.withColumn("lote", F.lit(1)), h_tx, s_tx, a_tx,
+        pins=pins,
+    )["salida"].drop("lote")
+
+
+def _clasificacion(
+    spark: SparkSession,
+    docs_lotes: DataFrame,
+    h_tx: TxTable,
+    s_tx: TxTable,
+    a_tx: TxTable,
+    pins: dict | None = None,
+) -> dict:
+    """The one classification core: ``docs_lotes`` (with its ``lote``
+    column) against the stored hash/posting/array tables, at the
+    current snapshot or at ``pins`` ({table: version}). Returns
+    ``salida`` (lote, doc_id, estado, dup_de), the verified pairs
+    ``verificados`` (doc_a, doc_b, jaccard) — cross-lote, stored and
+    same-lote, every one a fold edge — and the batch frames
+    ``hashes_n``/``sh_n``/``arrays_n`` an ingest appends."""
     from etl_python_airflow_bigquery_spark.queries.dedup import (
         _verify_jaccard_arrays,
     )
 
-    h_tx, s_tx, a_tx, _ = _tables(path)
+    pins = pins or {}
     lote_map = docs_lotes.select("doc_id", "lote")
     hashes_n, sh_n, arrays_n = _frames(docs_lotes)
     hashes_l = hashes_n.join(F.broadcast(lote_map), "doc_id")
     sh_l = sh_n.join(F.broadcast(lote_map), "doc_id")
 
-    # overlap the two independent probe collects (see _clasificar)
+    # the exact-tier hash probe and the near-tier shingle probe each
+    # collect the batch's own value set before pruning the stored read
+    # — two independent driver round-trips that overlap as threads
+    # (guide §2.6; hashes_n and sh_n have disjoint lineages)
     probe_h_raw, probe_s_raw = overlap(
-        lambda: _probe_read(spark, h_tx, "h", hashes_n),
-        lambda: _probe_read(spark, s_tx, "s", sh_n),
+        lambda: _probe_read(spark, h_tx, "h", hashes_n, pins.get("hashes")),
+        lambda: _probe_read(spark, s_tx, "s", sh_n, pins.get("postings")),
     )
 
     # exact tier: stored hashes (lote 0) ⊎ earlier-lote batch hashes
@@ -354,10 +406,18 @@ def ingest_dedup_state_lotes(
         .agg(F.min("viejo").alias("dup_exacto"))
     )
 
-    # near tier: one probe union, one prefix, one candidate join. The
-    # rank order folds the batches' own postings into df — exactness
-    # does not depend on the order (see docstring), and a shingle
-    # absent everywhere still ranks last via the coalesce sentinel.
+    # near tier: one probe union, one prefix, one candidate join.
+    # One-sided prefix filter, EXACT for J ≥ 0.5 by pigeonhole: a
+    # qualifying pair overlaps in ≥ ⌈na/2⌉ shingles, and in ANY fixed
+    # total order of doc_a's na shingles at most ⌈na/2⌉ − 1 of them can
+    # sit past position na//2 + 1 — so at least one overlap shingle is
+    # inside the prefix, and the prefix↔postings join finds the pair.
+    # The order ranks rare shingles first (df over the probe union,
+    # the batches' own postings included); a shingle absent everywhere
+    # still ranks last via the coalesce sentinel. Without this filter
+    # the raw s-join explodes on high-df shingles: 6.7M candidate pairs
+    # for a 1.7k-doc batch on the clone-heavy 10x replica, and the
+    # verify pays 115 s for them.
     probe = (
         _sin_lote(probe_s_raw, docs_lotes)
         .select(F.col("doc_id").alias("doc_b"), "s", F.lit(0).alias("lote_b"))
@@ -373,17 +433,21 @@ def ingest_dedup_state_lotes(
     w_rank = Window.partitionBy("doc_id").orderBy("df", "s")
     w_all = Window.partitionBy("doc_id")
     ranked = (
-        sh_l.join(df_s, "s", "left")
+        sh_n.join(df_s, "s", "left")
         .withColumn("df", F.coalesce(F.col("df"), F.lit(2_000_000_000)))
         .select(
             "doc_id",
             "s",
-            "lote",
             F.row_number().over(w_rank).alias("rn"),
             F.count(F.lit(1)).over(w_all).alias("n"),
         )
     )
-    prefijo = ranked.where(F.col("rn") <= F.floor(F.col("n") / 2) + 1)
+    # the lote attaches after the ranking: with the broadcast lote join
+    # below the df join, whether AQE still shuffles the posting side
+    # depends on which of the two stages finishes first
+    prefijo = ranked.where(
+        F.col("rn") <= F.floor(F.col("n") / 2) + 1
+    ).join(F.broadcast(lote_map), "doc_id")
     cand = (
         prefijo.select(F.col("doc_id").alias("doc_a"), "s", "lote")
         .join(probe, "s")
@@ -400,15 +464,21 @@ def ingest_dedup_state_lotes(
         _probe_read(
             spark, a_tx, "doc_id",
             cand.select(F.col("doc_b").alias("doc_id")),
+            pins.get("conjuntos"),
         ),
         docs_lotes,
     )
-    # arrays verify directly (see _clasificar) — no explode+re-aggregate
+    # both sides are ALREADY (doc_id, arr) — the batch aggregated its
+    # arrays for the append, the stored side IS the conjuntos table —
+    # so verification joins them directly (guide §2.4). Checkpointed:
+    # the verified pairs feed salida's cercano tier, the fold's edges
+    # and the label overwrite's write job, and without it the
+    # probe+verify chain re-executes per consumer.
     verificados = _verify_jaccard_arrays(
         cand, arrays_n.unionByName(arr_viejos)
     ).localCheckpoint(eager=False)
     # estado reads strictly-earlier partners only (stored docs carry no
-    # lote row → coalesce 0); same-lote pairs remain fold edges below
+    # lote row → coalesce 0); same-lote pairs remain fold edges
     cercano = (
         verificados.join(
             F.broadcast(
@@ -450,162 +520,9 @@ def ingest_dedup_state_lotes(
             .alias("dup_de"),
         )
     )
-
-    # one fold, one commit set — the amortization itself
-    aristas = verificados.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    _commit_fold(spark, path, aristas, hashes_n, sh_n, arrays_n, txn)
-    return salida
-
-
-def classify_dedup_state(
-    spark: SparkSession,
-    docs_new: DataFrame,
-    path: str,
-    pins: dict | None = None,
-) -> DataFrame:
-    """READ-ONLY classification of a batch against the stored state —
-    nothing folds, nothing appends. ``pins`` (the
-    ``pin_dedup_version`` return value: {table: version}) pins the
-    probed snapshot, which is the TIME-TRAVEL CLASSIFICATION AUDIT:
-    "what would YESTERDAY's dedup memory have said about this batch" —
-    run after later ingests folded more batches in, and diffed against
-    the current-snapshot answer to show exactly which verdicts the
-    interleaved ingests changed (the registered
-    ``dedup_clasificacion_pinada`` row)."""
-    h_tx, s_tx, a_tx, _ = _tables(path)
-    return _clasificar(spark, docs_new, h_tx, s_tx, a_tx, pins=pins)["salida"]
-
-
-def _clasificar(
-    spark: SparkSession,
-    docs_new: DataFrame,
-    h_tx: TxTable,
-    s_tx: TxTable,
-    a_tx: TxTable,
-    pins: dict | None = None,
-) -> dict:
-    """The classification algebra shared by ``ingest_dedup_state``
-    (current snapshot, then folds) and ``classify_dedup_state``
-    (optionally pinned snapshot, read-only). Returns the output frame
-    plus the intermediates the ingest's fold/appends need."""
-    from etl_python_airflow_bigquery_spark.queries.dedup import (
-        _verify_jaccard_arrays,
-        pares_jaccard_prefijo,
-    )
-
-    vh = (pins or {}).get("hashes")
-    vs = (pins or {}).get("postings")
-    va = (pins or {}).get("conjuntos")
-    hashes_n, sh_n, arrays_n = _frames(docs_new)
-
-    # the exact-tier hash probe and the near-tier shingle probe each
-    # collect the batch's own value set before pruning the stored read
-    # — two independent driver round-trips that overlap as threads
-    # (guide §2.6; hashes_n and sh_n have disjoint lineages)
-    probe_h_raw, probe_s_raw = overlap(
-        lambda: _probe_read(spark, h_tx, "h", hashes_n, vh),
-        lambda: _probe_read(spark, s_tx, "s", sh_n, vs),
-    )
-
-    # exact tier: the batch's hashes probe the stored hash table
-    exacto = (
-        hashes_n.join(
-            _sin_lote(probe_h_raw, docs_new).select(
-                "h", F.col("doc_id").alias("viejo")
-            ),
-            "h",
-        )
-        .groupBy("doc_id")
-        .agg(F.min("viejo").alias("dup_exacto"))
-    )
-
-    # near tier: the batch's PREFIX shingles probe the stored postings.
-    # One-sided prefix filter, EXACT for J ≥ 0.5 by pigeonhole: a
-    # qualifying pair overlaps in ≥ ⌈na/2⌉ shingles, and in ANY fixed
-    # total order of doc_a's na shingles at most ⌈na/2⌉ − 1 of them can
-    # sit past position na//2 + 1 — so at least one overlap shingle is
-    # inside the prefix, and the prefix↔postings join finds the pair.
-    # The order ranks corpus-rare shingles first (df from the probed
-    # postings themselves; shingles absent from the corpus rank LAST —
-    # they match nothing and must not crowd real overlap out of the
-    # prefix slots). Without this filter the raw s-join explodes on
-    # high-df shingles: 6.7M candidate pairs for a 1.7k-doc batch on
-    # the clone-heavy 10x replica, and the verify pays 115 s for them.
-    probe = _sin_lote(probe_s_raw, docs_new).localCheckpoint(eager=False)
-    df_s = probe.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    w_rank = Window.partitionBy("doc_id").orderBy("df", "s")
-    w_all = Window.partitionBy("doc_id")
-    ranked = (
-        sh_n.join(df_s, "s", "left")
-        .withColumn(
-            "df",
-            F.coalesce(F.col("df"), F.lit(2_000_000_000)),
-        )
-        .select(
-            "doc_id",
-            "s",
-            F.row_number().over(w_rank).alias("rn"),
-            F.count(F.lit(1)).over(w_all).alias("n"),
-        )
-    )
-    prefijo = ranked.where(F.col("rn") <= F.floor(F.col("n") / 2) + 1)
-    cand = (
-        prefijo.select(F.col("doc_id").alias("doc_a"), "s")
-        .join(probe.select(F.col("doc_id").alias("doc_b"), "s"), "s")
-        .select("doc_a", "doc_b")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    arr_viejos = _probe_read(
-        spark, a_tx, "doc_id", cand.select(F.col("doc_b").alias("doc_id")),
-        version=va,
-    )
-    # both sides are ALREADY (doc_id, arr) — the batch aggregated its
-    # arrays for the append, the stored side IS the conjuntos table —
-    # so verification joins them directly; the former explode back to
-    # posting rows + re-collect_list cost a full extra shuffle of the
-    # batch+candidate shingle mass per classify (guide §2.4)
-    # checkpoint: the verified pairs feed THREE consumers (salida's
-    # cercano tier, the ingest's fold edges, and the label overwrite's
-    # write job) — without it the probe+verify chain re-executes
-    # per consumer (the fold's etiquetas overwrite alone re-paid ~6 s
-    # at sf0.1, measured r14)
-    verificados = _verify_jaccard_arrays(
-        cand, arrays_n.unionByName(arr_viejos)
-    ).localCheckpoint(eager=False)
-    cercano = verificados.groupBy(F.col("doc_a").alias("doc_id")).agg(
-        F.min("doc_b").alias("dup_cercano")
-    )
-
-    # in-batch near-dups: the shared exact engine over batch postings —
-    # the batch's shingle arrays are already aggregated for the append,
-    # so the verify joins them directly instead of re-collecting the
-    # batch posting mass (the arrays-direct form, guide §2.4)
-    pares_lote = pares_jaccard_prefijo(sh_n, arr=arrays_n).select(
-        "doc_a", "doc_b"
-    )
-
-    salida = (
-        hashes_n.select("doc_id")
-        .join(exacto, "doc_id", "left")
-        .join(cercano, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("dup_exacto").isNotNull(), F.lit("exacto"))
-            .when(F.col("dup_cercano").isNotNull(), F.lit("cercano"))
-            .otherwise(F.lit("nuevo"))
-            .alias("estado"),
-            F.coalesce("dup_exacto", "dup_cercano")
-            .cast("bigint")
-            .alias("dup_de"),
-        )
-    )
     return {
         "salida": salida,
         "verificados": verificados,
-        "pares_lote": pares_lote,
         "hashes_n": hashes_n,
         "sh_n": sh_n,
         "arrays_n": arrays_n,

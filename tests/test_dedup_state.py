@@ -289,6 +289,72 @@ def test_multilote_fenced_replay_is_noop(spark, sf_dir, tmp_path):
     assert [tx.version() for tx in (h_tx, s_tx, a_tx, e_tx)] == vs
 
 
+def test_in_batch_near_dups_share_a_cluster_and_read_nuevo(
+    spark, sf_dir, tmp_path
+):
+    """The in-batch tier: two new docs that are near-duplicates only of
+    each other come out of the same candidate join as stored pairs.
+    The pair is a fold edge, so after the fold they share a cluster_id,
+    and it never sets estado: both read "nuevo" with no dup_de."""
+    docs = load_table(spark, sf_dir, "documents")
+    path = str(tmp_path / "estado")
+    build_dedup_state(spark, docs.where(F.col("doc_id") % 10 != 0), path)
+
+    palabras = [f"qzv{i:03d}" for i in range(40)]
+    textos = [" ".join(palabras), " ".join(palabras[:-1] + ["qzvfin"])]
+    lote = spark.createDataFrame(
+        [
+            (9_500_001 + i, t, "xx", "lote", len(t))
+            for i, t in enumerate(textos)
+        ],
+        docs.schema,
+    )
+    got = sorted(map(tuple, ingest_dedup_state(spark, lote, path).collect()))
+    assert got == [
+        (9_500_001, "nuevo", None),
+        (9_500_002, "nuevo", None),
+    ]
+    etiquetas = {
+        r["doc_id"]: r["cluster_id"]
+        for r in read_dedup_labels(spark, path)
+        .where(F.col("doc_id") >= 9_500_001).collect()
+    }
+    assert set(etiquetas) == {9_500_001, 9_500_002}
+    assert etiquetas[9_500_001] == etiquetas[9_500_002]
+
+
+def test_classify_of_stored_docs_matches_against_the_other_docs(
+    spark, sf_dir, tmp_path
+):
+    """Read-only classify follows the ingest's replay rule: for docs the
+    state already holds, the stored reads exclude the batch's own
+    doc_ids, so each doc classifies against the OTHER stored docs —
+    exactly what a state built without the batch answers — and never
+    against its own stored rows."""
+    from etl_python_airflow_bigquery_spark.operators.dedup_state import (
+        classify_dedup_state,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    lote = docs.where(F.col("doc_id") % 10 == 1)
+    completo = str(tmp_path / "completo")
+    build_dedup_state(spark, docs.where(F.col("doc_id") % 10 != 0), completo)
+    sin_lote = str(tmp_path / "sin_lote")
+    build_dedup_state(
+        spark, docs.where(~(F.col("doc_id") % 10).isin(0, 1)), sin_lote
+    )
+
+    got = sorted(map(tuple, classify_dedup_state(
+        spark, lote, completo
+    ).collect()))
+    want = sorted(map(tuple, classify_dedup_state(
+        spark, lote, sin_lote
+    ).collect()))
+    assert got == want and len(got) == lote.count()
+    assert all(dup_de != doc_id for doc_id, _, dup_de in got)
+    assert any(estado != "nuevo" for _, estado, _ in got)
+
+
 def _job_ids_between_markers(sc, grupo, run):
     """(job ids ``run`` started, job ids of group ``grupo``): ``run`` is
     bracketed by two one-task marker jobs, and job ids are assigned in
@@ -338,7 +404,7 @@ def test_every_state_job_runs_in_the_callers_job_group(
             spark, docs.where(F.col("doc_id") % 10 == 0), path
         ).collect(),
     )
-    assert en_grupo == iniciados and len(iniciados) == 45
+    assert en_grupo == iniciados and len(iniciados) == 39
 
 
 def test_failed_commit_lane_cancels_siblings_and_retry_matches_clean_run(
