@@ -123,18 +123,18 @@ FAMILIES = {
         "build": "etiquetar_por_vecinos",
         "members": ("etiquetar_por_vecinos",),
     },
-    # The ctx-WARM serving family (VERDICT r13 #5): the serving rows
-    # route through the session serve-context cache
-    # (queries/serving._served_ctx — centroid local relations, lexical
-    # corpus constants, cached query terms: the state make_serve_context
-    # hoists for the streaming serve, session-scoped for batch calls).
+    # The WARM serving family (VERDICT r13 #5; the key keeps its old
+    # name so records stay comparable across rounds). What a warm serve
+    # reuses is session-scoped: the stored indexes themselves, the
+    # centroid rows of each IVF index (ann_index._CENT_CACHE, keyed by
+    # centroid-table version) and busqueda_bm25_indexada's derived query
+    # terms; every probe still sizes its own form per call.
     # `build` is a TUPLE — all three indexes (full IVF, labels-subset
-    # IVF, lexical postings) plus their contexts build cold first; each
-    # member's marginal is then what a RESIDENT serving tier pays per
-    # call: index warm AND context warm. busqueda_bm25_indexada is
-    # driver-tier (not bench-gated), so this family is its only timing
-    # row — members are resolved against the REGISTRY, not the gated
-    # set.
+    # IVF, lexical postings) build cold first; each member's marginal is
+    # then what a RESIDENT serving tier pays per call with those caches
+    # warm. busqueda_bm25_indexada is driver-tier (not bench-gated), so
+    # this family is its only timing row — members are resolved against
+    # the REGISTRY, not the gated set.
     "serve_ctx": {
         "build": (
             "busqueda_maxsim_indexada",

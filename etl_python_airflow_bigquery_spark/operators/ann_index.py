@@ -28,6 +28,8 @@ prune untouched cells' files entirely.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -45,11 +47,11 @@ from etl_python_airflow_bigquery_spark.queries.similarity import (
 )
 
 
-# Driver-collect guard for the hybrid serve's anchor-vector local
-# relation (ADVICE r13): the literal-IN path collects |batch|×DIM ints;
-# a checkpoint-loss replay can redeliver every anchor file in one
-# availableNow batch, so past this many anchors the serve switches to
-# the distributed broadcast left-semi form — the same discipline as
+# Driver-collect guard of the probe (``_probe``): a query batch of up to
+# this many vectors collects to the driver and ranks the stored
+# centroids there; a larger one (a checkpoint-loss replay can redeliver
+# every anchor file in one availableNow batch) ranks them in a Spark
+# window instead — the same discipline as
 # dedup_state._PROBE_COLLECT_CAP / lex_index._CONSULTA_COLLECT_CAP.
 _ANCHOR_COLLECT_CAP = 4096
 
@@ -62,14 +64,11 @@ def _tables(path: str) -> tuple[TxTable, TxTable]:
 
 
 def _meta_path(path: str) -> str:
-    import os
-
     return os.path.join(path, "index_meta.json")
 
 
 def _write_meta(path: str, meta: dict) -> None:
     import json
-    import os
     import uuid as _uuid
 
     tmp = os.path.join(path, f"_tmp_meta_{_uuid.uuid4().hex[:8]}.json")
@@ -171,11 +170,33 @@ def build_ivf_index(
     return {"n": n, "k": len(cent), "version": v}
 
 
+# Stored centroid rows per index, keyed by the centroid table's version
+# and that version's uuid-named data files: an in-place rebuild commits
+# a new centroid version, so the next read misses instead of probing the
+# old centroids against the new postings, and the file names tell apart
+# an index deleted and rebuilt at the same version number. Values are
+# k-bounded (≤ K_CAP×DIM ints); queries.serving.clear_session_caches
+# clears them.
+_CENT_CACHE: dict[tuple, dict[int, list[int]]] = {}
+_CENT_CACHE_MAX = 8
+
+
 def _stored_centroids(spark: SparkSession, path: str) -> dict[int, list[int]]:
+    """{celda: sv} of the current centroid version — the one centroid
+    source of the add, calibrate, label and probe paths."""
     cent_tx, _ = _tables(path)
-    return {
-        r["celda"]: list(r["sv"]) for r in cent_tx.read(spark).collect()
-    }
+    v, m = cent_tx._head()
+    key = (os.path.abspath(path), v, tuple(TxTable._names(m.get("files", []))))
+    cent = _CENT_CACHE.get(key)
+    if cent is None:
+        cent = dict(sorted(
+            (int(r["celda"]), [int(x) for x in r["sv"]])
+            for r in cent_tx.read(spark, version=v).collect()
+        ))
+        while len(_CENT_CACHE) >= _CENT_CACHE_MAX:
+            _CENT_CACHE.pop(next(iter(_CENT_CACHE)))
+        _CENT_CACHE[key] = cent
+    return cent
 
 
 # Posting-table file-count gate for the compaction trigger: a streaming
@@ -247,126 +268,95 @@ def add_to_ivf_index(
     return v
 
 
-def search_ivf_index(
+def _resolve_nprobe(path: str, nprobe: int | None) -> int:
+    """Probe width: explicit > the rung ``calibrate_index`` recorded in
+    the index metadata > the engine constant ``_NPROBE``."""
+    if nprobe is not None:
+        return int(nprobe)
+    try:
+        return int(read_index_meta(path).get("nprobe_calibrado", _NPROBE))
+    except FileNotFoundError:
+        return _NPROBE
+
+
+def _probe(
+    spark: SparkSession, queries: DataFrame, path: str, nprobe: int
+) -> tuple[DataFrame, DataFrame, list[int]]:
+    """The ``nprobe`` nearest stored cells of every (query_id, qv) query
+    by integer L2, ties broken by seed_id. Returns (queries, qcells
+    (query_id, celda), celdas: the distinct probed cells).
+
+    The form follows the batch's observed size. Up to
+    ``_ANCHOR_COLLECT_CAP`` queries collect to the driver and rank the
+    centroids there: Python ints are exact and the magnitudes (scaled
+    components² × dim) sit far inside int64, so the order equals the
+    Spark window's long arithmetic, and the serve runs no Spark job
+    before its fused plan beyond the collect. The collected queries and
+    qcells return as broadcast local relations: RDD-backed relations
+    carry unknown stats, and without the hint the planner broadcasts the
+    POSTINGS side of the celda join (a cell is ~n/k vectors) instead
+    (guide §3.1). Past the cap the ranking runs as a Spark window over
+    the broadcast centroids, the only form that serves an over-cap
+    batch."""
+    cent = _stored_centroids(spark, path)
+    filas = queries.limit(_ANCHOR_COLLECT_CAP + 1).collect()
+    if len(filas) <= _ANCHOR_COLLECT_CAP:
+        filas = [(int(r["query_id"]), [int(x) for x in r["qv"]]) for r in filas]
+        pares = [
+            (qid, sid)
+            for qid, qv in filas
+            for _, sid in sorted(
+                (sum((x - y) * (x - y) for x, y in zip(qv, sv)), sid)
+                for sid, sv in cent.items()
+            )[:nprobe]
+        ]
+        return (
+            F.broadcast(
+                local_df(spark, filas, "query_id BIGINT, qv ARRAY<BIGINT>")
+            ),
+            F.broadcast(local_df(spark, pares, "query_id BIGINT, celda BIGINT")),
+            sorted({sid for _, sid in pares}),
+        )
+    cent_df = local_df(
+        spark, list(cent.items()), "seed_id BIGINT, sv ARRAY<BIGINT>"
+    )
+    qdist = queries.crossJoin(F.broadcast(cent_df)).select(
+        "query_id",
+        "seed_id",
+        F.aggregate(
+            F.zip_with(F.col("qv"), F.col("sv"), lambda x, y: (x - y) * (x - y)),
+            F.lit(0).cast("long"),
+            lambda acc, v: acc + v,
+        ).alias("d2"),
+    )
+    wq = Window.partitionBy("query_id").orderBy("d2", "seed_id")
+    qcells = (
+        qdist.withColumn("rn", F.row_number().over(wq))
+        .where(F.col("rn") <= nprobe)
+        .select("query_id", F.col("seed_id").alias("celda"))
+        .localCheckpoint(eager=False)  # consumed by prune AND join
+    )
+    celdas = [r["celda"] for r in qcells.select("celda").distinct().collect()]
+    return queries, qcells, celdas
+
+
+def _rerank(
     spark: SparkSession,
     queries: DataFrame,
+    qcells: DataFrame,
+    celdas: list[int],
     path: str,
-    nprobe: int | None = None,
-    topk: int = _SEARCH_K,
-    version: int | None = None,
-    ctx: dict | None = None,
-    local_rows: list[tuple[int, list[int]]] | None = None,
+    topk: int,
+    version: int | None,
 ) -> DataFrame:
-    """``queries``: (query_id, qv: array<bigint>) — scaled-int vectors
-    (route raw embeddings through ``_int_vectors`` first). Probes the
-    nprobe nearest stored cells per query, exact integer-cosine rerank,
-    top-k. Reads ONLY the index tables; ``version`` pins the POSTING
-    snapshot (time-travel serving — centroids are append-invariant, so
-    the latest centroid table serves every posting version). The
-    posting read is manifest-stats FILE-PRUNED to the probed cells
-    (round 11) — on a compacted, celda-range-clustered table the scan
-    touches ~nprobe/k of the files, not the table.
-
-    ``local_rows``: the SAME (query_id, qv) rows as ``queries`` when
-    the caller already holds them on the driver (the hybrid serve's
-    literal-anchor path collects them anyway). With a serve context
-    this moves the probed-cell computation entirely onto the driver —
-    |batch|×k integer distances against the context's centroid rows,
-    the identical (d2, seed_id) ordering — so the per-batch serve runs
-    ZERO Spark jobs before the fused plan itself (the qcells window
-    job and the probed-cell collect were ~1-2 s/batch of pure
-    job-scheduling overhead at sf0.1; the arithmetic is microseconds).
-
-    ``nprobe=None`` (the default) resolves to the index's CALIBRATED
-    rung when ``calibrate_index`` has recorded one in the metadata,
-    else the engine constant ``_NPROBE`` — so a deployment that ran the
-    calibration once serves at its measured recall target without every
-    call site knowing the number; explicit values always win."""
-    if nprobe is None:
-        if ctx is not None:
-            nprobe = ctx["nprobe"]
-        else:
-            try:
-                nprobe = int(
-                    read_index_meta(path).get("nprobe_calibrado", _NPROBE)
-                )
-            except FileNotFoundError:
-                nprobe = _NPROBE
-    cent_tx, vec_tx = _tables(path)
-    if local_rows is not None:
-        # the caller materialized the batch on the driver, so `queries`
-        # is an RDD-backed local relation (unknown stats → the planner
-        # assumes huge and flips its joins to sort-merge). It is
-        # ≤ the collect cap rows by construction: broadcast it
-        # everywhere it joins (guide §3.1).
-        queries = F.broadcast(queries)
-    if ctx is not None and local_rows is not None:
-        # driver-side probe: exact twin of the Spark window below —
-        # integer d2 against the context's centroid rows, ties broken
-        # by seed_id, nprobe smallest kept. Python ints are exact, and
-        # the magnitudes (scaled components² × dim) sit far inside
-        # int64, so parity with the long arithmetic in codegen holds.
-        pares = []
-        celdas_set: set[int] = set()
-        for qid, qv in local_rows:
-            dists = sorted(
-                (
-                    sum((x - y) * (x - y) for x, y in zip(qv, sv)),
-                    int(sid),
-                )
-                for sid, sv in ctx["cent_rows"]
-            )[: int(nprobe)]
-            for _, sid in dists:
-                pares.append((int(qid), sid))
-                celdas_set.add(sid)
-        # qcells is RDD-backed too: without the hint the planner
-        # broadcasts the POSTINGS side of the celda join (wrong side at
-        # scale — a cell is ~n/k vectors) and keeps qcells, which is
-        # ≤ |batch|×nprobe rows, distributed. Broadcast qcells and keep
-        # the postings scan distributed (guide §3.1).
-        qcells = F.broadcast(
-            local_df(spark, pares, "query_id BIGINT, celda BIGINT")
-        )
-        celdas = sorted(celdas_set)
-    else:
-        if ctx is not None:
-            # stream-static centroids (make_serve_context): a local
-            # relation instead of an index-table scan subtree in every
-            # batch's plan
-            cent_df = _ctx_centroids(spark, ctx)
-        else:
-            cent_df = cent_tx.read(spark).select(
-                F.col("celda").alias("seed_id"), "sv"
-            )
-        qdist = queries.crossJoin(F.broadcast(cent_df)).select(
-            "query_id",
-            "seed_id",
-            F.aggregate(
-                F.zip_with(
-                    F.col("qv"), F.col("sv"), lambda x, y: (x - y) * (x - y)
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ).alias("d2"),
-        )
-        wq = Window.partitionBy("query_id").orderBy("d2", "seed_id")
-        qcells = (
-            qdist.withColumn("rn", F.row_number().over(wq))
-            .where(F.col("rn") <= nprobe)
-            .select("query_id", F.col("seed_id").alias("celda"))
-            .localCheckpoint(eager=False)  # consumed by prune AND join
-        )
-        # FILE PRUNING, ENFORCED (round 11): the probed cell set is
-        # bounded (≤ min(k, queries×nprobe) ids), so collect it and
-        # read ONLY the posting files whose celda stats admit a probed
-        # cell — on a compacted (celda-range-clustered) table the scan
-        # touches ~nprobe/k of the files instead of planning a dynamic
-        # join against the full table. Correctness is unchanged:
-        # read_in keeps the residual IN filter, and un-statted files
-        # are always read.
-        celdas = [
-            r["celda"] for r in qcells.select("celda").distinct().collect()
-        ]
+    """Exact integer-cosine top-k of each query over the postings of its
+    probed cells (``_probe``'s output), at posting ``version``. FILE
+    PRUNING, ENFORCED (round 11): the probed cell set is bounded (≤
+    min(k, queries×nprobe) ids), so the read opens ONLY the posting
+    files whose celda stats admit a probed cell — on a compacted
+    (celda-range-clustered) table ~nprobe/k of the files. read_in keeps
+    the residual IN filter, and un-statted files are always read."""
+    _, vec_tx = _tables(path)
     postings = vec_tx.read_in(spark, "celda", celdas, version=version)
     norma = lambda c: F.aggregate(  # noqa: E731
         F.zip_with(F.col(c), F.col(c), lambda x, y: x * y),
@@ -398,6 +388,37 @@ def search_ivf_index(
     )
 
 
+def search_ivf_index(
+    spark: SparkSession,
+    queries: DataFrame,
+    path: str,
+    nprobe: int | None = None,
+    topk: int = _SEARCH_K,
+    version: int | None = None,
+) -> DataFrame:
+    """``queries``: (query_id, qv: array<bigint>) — scaled-int vectors
+    (route raw embeddings through ``_int_vectors`` first). Probes the
+    nprobe nearest stored cells per query (``_probe`` sizes its form to
+    the batch), exact integer-cosine rerank, top-k. Reads ONLY the index
+    tables; ``version`` pins the POSTING snapshot (time-travel serving —
+    centroids are append-invariant, so the latest centroid table serves
+    every posting version). The posting read is manifest-stats
+    FILE-PRUNED to the probed cells (round 11) — on a compacted,
+    celda-range-clustered table the scan touches ~nprobe/k of the files,
+    not the table.
+
+    ``nprobe=None`` (the default) resolves to the index's CALIBRATED
+    rung when ``calibrate_index`` has recorded one in the metadata,
+    else the engine constant ``_NPROBE`` — so a deployment that ran the
+    calibration once serves at its measured recall target without every
+    call site knowing the number; explicit values always win. The rung
+    is read per call, so a recalibration reaches the next serve."""
+    queries, qcells, celdas = _probe(
+        spark, queries, path, _resolve_nprobe(path, nprobe)
+    )
+    return _rerank(spark, queries, qcells, celdas, path, topk, version)
+
+
 def recall_drift(
     spark: SparkSession,
     queries: DataFrame,
@@ -416,30 +437,13 @@ def recall_drift(
     the SAME tables — no recompute, no refit.
 
     The probe is HOISTED: centroids are append-invariant, so the two
-    searches' probed-cell sets are identical — under the anchor cap the
-    queries collect once and both searches take the driver-side probe
-    (the exact Spark-window twin, r14), replacing two qcells window
-    jobs + two probed-cell collects per monitor call with zero; past
-    the cap both searches keep the distributed probe unchanged."""
-    ctx = None
-    local_rows = None
-    filas = queries.limit(_ANCHOR_COLLECT_CAP + 1).collect()
-    if len(filas) <= _ANCHOR_COLLECT_CAP:
-        local_rows = [
-            (int(r["query_id"]), [int(x) for x in r["qv"]]) for r in filas
-        ]
-        queries = local_df(
-            spark, local_rows, "query_id BIGINT, qv ARRAY<BIGINT>"
-        )
-        ctx = make_serve_context(spark, path)
-    viejo = search_ivf_index(
-        spark, queries, path, topk=topk, version=v_old,
-        ctx=ctx, local_rows=local_rows,
+    searches' probed-cell sets are identical — one ``_probe`` (one query
+    collect under the anchor cap) serves both reranks."""
+    queries, qcells, celdas = _probe(
+        spark, queries, path, _resolve_nprobe(path, None)
     )
-    nuevo = search_ivf_index(
-        spark, queries, path, topk=topk, version=v_new,
-        ctx=ctx, local_rows=local_rows,
-    )
+    viejo = _rerank(spark, queries, qcells, celdas, path, topk, v_old)
+    nuevo = _rerank(spark, queries, qcells, celdas, path, topk, v_new)
     a = viejo.groupBy("query_id").agg(
         F.collect_set("cand_id").alias("top_viejo")
     )
@@ -579,7 +583,6 @@ def busqueda_hibrida_indexada(
     path: str,
     nprobe: int = _NPROBE,
     lex_path: str | None = None,
-    ctx: dict | None = None,
 ) -> DataFrame:
     """The hybrid retrieval query SERVED FROM THE STORED INDEX — the
     production path `busqueda_hibrida`'s docstring promises, executed:
@@ -613,7 +616,7 @@ def busqueda_hibrida_indexada(
         )
 
         lex = hibrida_lexical_top_multi_indexada(
-            spark, sf_dir, lex_path, [_HIB_Q], topk=_BM25_TOP, ctx=ctx
+            spark, sf_dir, lex_path, [_HIB_Q], topk=_BM25_TOP
         ).select("doc_id", "pos_lex")
     else:
         lex = hibrida_lexical_top(spark, sf_dir)
@@ -621,84 +624,10 @@ def busqueda_hibrida_indexada(
     consulta = _int_vectors(emb.where(F.col("vec_id") == _HIB_Q)).select(
         F.col("vec_id").alias("query_id"), F.col("ev").alias("qv")
     )
-    local_rows = None
-    if ctx is not None:
-        # the one anchor vector is driver-bounded (1×DIM ints): collect
-        # it and let search_ivf_index run its driver-side probed-cell
-        # math (the _multi literal-anchor path) — the serve then runs
-        # ZERO Spark jobs before the fused plan itself, where the
-        # distributed form paid a crossJoin+window job plus a probed-cell
-        # collect during plan CONSTRUCTION (guide §5: the driver should
-        # do tiny work, not schedule jobs for it)
-        local_rows = [
-            (int(r["query_id"]), [int(x) for x in r["qv"]])
-            for r in consulta.collect()
-        ]
-        consulta = local_df(
-            spark, local_rows, "query_id BIGINT, qv ARRAY<BIGINT>"
-        )
     vec = search_ivf_index(
-        spark, consulta, path, nprobe=nprobe, topk=_BM25_TOP, ctx=ctx,
-        local_rows=local_rows,
+        spark, consulta, path, nprobe=nprobe, topk=_BM25_TOP
     ).select(F.col("cand_id").alias("doc_id"), F.col("pos").alias("pos_vec"))
     return rrf_fuse_hibrida(lex, vec)
-
-
-def make_serve_context(
-    spark: SparkSession,
-    path: str,
-    lex_path: str | None = None,
-    nprobe: int | None = None,
-) -> dict:
-    """STREAM-STATIC serve state, computed ONCE per serving stream and
-    reused by every micro-batch (VERDICT r12 #1 — the per-batch plan-JIT
-    amortization): the per-batch serve plan should contain only the
-    BATCH-bounded work (the anchors' pruned reads + the probed posting
-    files), never re-derivations of state that cannot change while the
-    stream's index snapshot is fixed. Contents:
-
-    * ``cent_rows`` — the centroid table collected (k-bounded by the
-      corpus-size policy, ≤ K_CAP×DIM ints): each batch rebuilds it as
-      a LOCAL relation, so the probe-cell ranking is a tiny local job
-      instead of a posting-table-adjacent scan subtree in every plan.
-    * ``nprobe`` — resolved once (explicit > calibrated > default).
-    * ``lex_n`` / ``lex_avgdl_mili`` — the lexical corpus constants
-      from the index metadata (one read, not one per batch). Document
-      lengths ride the posting rows, so no corpus-sized lexical state
-      is held.
-
-    The context is advisory: every consumer accepts ``ctx=None`` and
-    falls back to its self-contained form (the batch/one-shot paths)."""
-    ctx: dict = {"path": path, "lex_path": lex_path}
-    if nprobe is None:
-        try:
-            nprobe = int(read_index_meta(path).get("nprobe_calibrado", _NPROBE))
-        except FileNotFoundError:
-            nprobe = _NPROBE
-    ctx["nprobe"] = int(nprobe)
-    cent_tx, _ = _tables(path)
-    ctx["cent_rows"] = [
-        (int(r["celda"]), [int(x) for x in r["sv"]])
-        for r in cent_tx.read(spark).collect()
-    ]
-    if lex_path is not None:
-        from etl_python_airflow_bigquery_spark.operators.lex_index import (
-            lex_meta_current,
-        )
-
-        meta = lex_meta_current(spark, lex_path)
-        ctx["lex_n"] = int(meta["n"])
-        ctx["lex_avgdl_mili"] = int(meta["avgdl_mili"])
-    return ctx
-
-
-def _ctx_centroids(spark: SparkSession, ctx: dict) -> DataFrame:
-    """The context's centroid rows as a LOCAL relation (seed_id, sv) —
-    rebuilt per use from the driver list (k-bounded), so consuming
-    plans carry no index-table scan subtree for the centroids."""
-    return local_df(
-        spark, ctx["cent_rows"], "seed_id BIGINT, sv ARRAY<BIGINT>"
-    )
 
 
 def busqueda_hibrida_indexada_multi(
@@ -709,7 +638,6 @@ def busqueda_hibrida_indexada_multi(
     nprobe: int | None = None,
     corpus=None,
     lex_path: str | None = None,
-    ctx: dict | None = None,
 ) -> DataFrame:
     """``busqueda_hibrida_indexada`` generalized to a QUERY SET — the
     per-batch serve the streaming hybrid job (streaming/jobs.py
@@ -738,51 +666,26 @@ def busqueda_hibrida_indexada_multi(
         )
 
         ids = [r["query_id"] for r in qids.select("query_id").collect()]
-        lex = hibrida_lexical_top_multi_indexada(
-            spark, sf_dir, lex_path, ids, ctx=ctx
-        )
+        lex = hibrida_lexical_top_multi_indexada(spark, sf_dir, lex_path, ids)
     else:
         ids = None
         lex = hibrida_lexical_top_multi(spark, sf_dir, qids, corpus=corpus)
     emb = load_table(spark, sf_dir, "embeddings")
     if ids is not None and len(ids) <= _ANCHOR_COLLECT_CAP:
         # anchors known on the driver: a LITERAL IN predicate reaches
-        # the parquet scan (row-group pruned), and the anchors' int
-        # vectors COLLECT to a local relation (|batch|×DIM ints) — the
-        # fused plan carries no embeddings-scan subtree, and the probe
-        # ranking inside search_ivf_index becomes local×local work.
-        # Capped (ADVICE r13): a checkpoint-loss replay can redeliver
-        # EVERY anchor file in one availableNow batch, and |batch|×DIM
-        # is then unbounded — past the cap the distributed broadcast
-        # left-semi form below serves the batch instead (the same guard
-        # discipline as dedup_state._PROBE_COLLECT_CAP and
-        # lex_index._CONSULTA_COLLECT_CAP).
-        filas = _int_vectors(
-            emb.where(in_literals("vec_id", [int(q) for q in ids]))
-        ).collect()
-        local_rows = [
-            (int(r["vec_id"]), [int(x) for x in r["ev"]]) for r in filas
-        ]
-        consultas = local_df(
-            spark, local_rows, "query_id BIGINT, qv ARRAY<BIGINT>"
-        )
+        # the parquet scan (row-group pruned). Past the cap the literal
+        # list is unbounded, so the broadcast left-semi form serves the
+        # batch instead.
+        anclas = emb.where(in_literals("vec_id", [int(q) for q in ids]))
     else:
-        local_rows = None
-        consultas = _int_vectors(
-            emb.join(
-                F.broadcast(qids), emb["vec_id"] == qids["query_id"],
-                "left_semi",
-            )
-        ).select(F.col("vec_id").alias("query_id"), F.col("ev").alias("qv"))
-    # Probe-width precedence (ADVICE r13): an EXPLICITLY passed nprobe
-    # beats the context's resolved value — ctx is a cache of
-    # stream-static state, not an override channel. Passing nprobe
-    # through unresolved lets search_ivf_index run its canonical
-    # explicit > ctx > calibrated > default ladder.
+        anclas = emb.join(
+            F.broadcast(qids), emb["vec_id"] == qids["query_id"], "left_semi"
+        )
+    consultas = _int_vectors(anclas).select(
+        F.col("vec_id").alias("query_id"), F.col("ev").alias("qv")
+    )
     vec = search_ivf_index(
-        spark, consultas, path,
-        nprobe=nprobe,
-        topk=_BM25_TOP, ctx=ctx, local_rows=local_rows,
+        spark, consultas, path, nprobe=nprobe, topk=_BM25_TOP
     ).select(
         "query_id", F.col("cand_id").alias("doc_id"),
         F.col("pos").alias("pos_vec"),
@@ -795,7 +698,6 @@ def busqueda_maxsim_indexada(
     sf_dir: str,
     path: str,
     nprobe: int = _NPROBE,
-    ctx: dict | None = None,
 ) -> DataFrame:
     """MULTI-VECTOR (ColBERT MaxSim) retrieval SERVED FROM THE STORED
     INDEX — the production path ``puntuacion_maxsim``'s docstring
@@ -855,41 +757,16 @@ def busqueda_maxsim_indexada(
         F.col("embedding").alias("q_emb"),
     ).localCheckpoint(eager=False)
 
-    # stage 1: probe cells per query token against the STORED centroids,
-    # candidates from the stored postings only. With a warm serve
-    # context (VERDICT r13 #5) the centroids come as a LOCAL relation —
-    # no index-table scan subtree in the probe plan.
-    cent_tx, vec_tx = _tables(path)
-    if ctx is not None:
-        cent_df = _ctx_centroids(spark, ctx)
-    else:
-        cent_df = cent_tx.read(spark).select(
-            F.col("celda").alias("seed_id"), "sv"
-        )
+    # stage 1: probe cells per query token against the STORED centroids
+    # (the shared ``_probe``), candidates from the stored postings only,
+    # file-pruned to the probed cells (see search_ivf_index)
+    _, vec_tx = _tables(path)
     q_int = _int_vectors(
         qtoks.select(F.col("q_vec").alias("vec_id"),
                      F.col("q_emb").alias("embedding"))
-    ).select(F.col("vec_id").alias("q_vec"), F.col("ev").alias("qv"))
-    qdist = q_int.crossJoin(F.broadcast(cent_df)).select(
-        "q_vec",
-        "seed_id",
-        F.aggregate(
-            F.zip_with(F.col("qv"), F.col("sv"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("d2"),
-    )
-    wq = Window.partitionBy("q_vec").orderBy("d2", "seed_id")
-    probed = (
-        qdist.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select("q_vec", F.col("seed_id").alias("celda"))
-        .localCheckpoint(eager=False)
-    )
-    # bounded probed-cell set -> manifest-stats file pruning (see
-    # search_ivf_index): candidate generation reads only the posting
-    # files whose celda range is actually probed
-    celdas = [r["celda"] for r in probed.select("celda").distinct().collect()]
+    ).select(F.col("vec_id").alias("query_id"), F.col("ev").alias("qv"))
+    _, qcells, celdas = _probe(spark, q_int, path, nprobe)
+    probed = qcells.withColumnRenamed("query_id", "q_vec")
     postings = vec_tx.read_in(spark, "celda", celdas).select(
         "celda", F.expr(f"vec_id div {_MAXSIM_G}").alias("c_doc")
     )
@@ -944,7 +821,6 @@ def etiquetar_por_vecinos(
     path: str,
     labels_df: DataFrame,
     k: int = 3,
-    ctx: dict | None = None,
 ) -> DataFrame:
     """LABEL PROPAGATION AT INGEST — ``clasificador_knn``'s stored-index
     face: new vectors (vec_id, embedding) take the majority label of
@@ -966,12 +842,7 @@ def etiquetar_por_vecinos(
         _assign_cells_2probe,
     )
 
-    # warm serve context (VERDICT r13 #5): the centroid dict is
-    # stream-static — a resident serving tier reuses it across calls
-    if ctx is not None:
-        cent = {int(c): list(sv) for c, sv in ctx["cent_rows"]}
-    else:
-        cent = _stored_centroids(spark, path)
+    cent = _stored_centroids(spark, path)
     _, vec_tx = _tables(path)
     enteros = _int_vectors(arrivals).localCheckpoint(eager=False)
     probes = (

@@ -317,7 +317,6 @@ def hibrida_lexical_top_multi_indexada(
     path: str,
     qids: list[int],
     topk: int = 10,
-    ctx: dict | None = None,
 ) -> DataFrame:
     """The hybrid's multi-query lexical ranker SERVED FROM THE STORED
     POSTINGS — per arriving anchor, BM25 over its distinct terms with
@@ -328,17 +327,16 @@ def hibrida_lexical_top_multi_indexada(
     happened once, at index build. Output (query_id, doc_id, pos_lex),
     the ranking window partitioned by query_id (WindowGroupLimit).
     Algebra identical to queries.similarity.hibrida_lexical_top_multi
-    (exact index ⇒ row-identical output, test-pinned)."""
+    (exact index ⇒ row-identical output, test-pinned). The corpus
+    constants and the postings come from ONE version, read per call (the
+    ``search_bm25_lex_index`` pinning), so a concurrent ingest can never
+    score new postings with old constants or the reverse."""
     from pyspark.sql import Window
 
     from etl_python_airflow_bigquery_spark.queries.text import bm25_scorer
     from etl_python_airflow_bigquery_spark.tables import load_table
 
-    if ctx is not None and "lex_n" in ctx:
-        n, avgdl_mili = ctx["lex_n"], ctx["lex_avgdl_mili"]
-    else:
-        meta = lex_meta_current(spark, path)
-        n, avgdl_mili = meta["n"], meta["avgdl_mili"]
+    meta = lex_meta_current(spark, path)
 
     docs = load_table(spark, sf_dir, "documents")
     consulta = (
@@ -369,7 +367,9 @@ def hibrida_lexical_top_multi_indexada(
         terms = [
             r["token"] for r in consulta.select("token").distinct().collect()
         ]
-    postings = _postings(path).read_in(spark, "token", terms)
+    postings = _postings(path).read_in(
+        spark, "token", terms, version=meta["version"]
+    )
     # df via a token-partitioned window over the SAME pruned posting
     # rows the scoring consumes (guide §2.4: the old groupBy-df subtree
     # re-read every pruned posting file a second time; posting lists are
@@ -383,7 +383,7 @@ def hibrida_lexical_top_multi_indexada(
     # profiling ever shows it, pre-aggregate df per (token, doc-bucket)
     # and sum, or salt; at current scales the pruned per-term lists are
     # far below task size.
-    idf_q, score = bm25_scorer(n, avgdl_mili)
+    idf_q, score = bm25_scorer(meta["n"], meta["avgdl_mili"])
     scored = (
         postings.withColumn(
             "df", F.count(F.lit(1)).over(Window.partitionBy("token"))

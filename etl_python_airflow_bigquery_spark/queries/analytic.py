@@ -15,6 +15,7 @@ from etl_python_airflow_bigquery_spark.functions import (
     dsum,
     event_day_num,
     event_ts_us,
+    local_df,
 )
 from etl_python_airflow_bigquery_spark.operators.intervals import (
     DAY_TIER_MIN_DAYS,
@@ -2306,9 +2307,7 @@ def grafo_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             for u in range(t + 1, _KCORE_ROUNDS + 1):
                 trace.append((u, n_t, e2_t // 2))
             break
-    return spark.createDataFrame(
-        trace, "ronda BIGINT, nodos BIGINT, aristas BIGINT"
-    )
+    return local_df(spark, trace, "ronda BIGINT, nodos BIGINT, aristas BIGINT")
 
 
 # --------------------------------------------------------------------------

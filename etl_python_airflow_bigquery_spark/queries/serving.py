@@ -93,46 +93,6 @@ def _served_index(
     return path
 
 
-def clear_session_caches() -> None:
-    """Timed harnesses clear this before measuring (the bench honesty
-    invariant) so a serve-path timing always includes its build. The
-    discarded index dirs are reclaimed — same leak as eviction
-    (ADVICE r11)."""
-    while _INDEX_CACHE:
-        _shutil.rmtree(
-            _INDEX_CACHE.pop(next(iter(_INDEX_CACHE))), ignore_errors=True
-        )
-    _SERVE_CTX_CACHE.clear()
-
-
-# ---------------------------------------------------------------------------
-# Session serve-context cache (VERDICT r13 #5 / ROADMAP r14 #3): the
-# stream-static state make_serve_context hoists for the STREAMING serve
-# (centroid local relations, lexical corpus constants, the lazily
-# checkpointed lengths table) is just as static for a RESIDENT BATCH
-# serving tier — one context per (index, lex index) per session, reused
-# across busqueda_maxsim/hibrida/bm25_indexada + etiquetar_por_vecinos
-# calls. Cold calls still pay it (cleared with the index caches — the
-# bench's headline numbers keep their cold contract; the families
-# `serve_ctx` entry pins the ctx-warm walls).
-# ---------------------------------------------------------------------------
-_SERVE_CTX_CACHE: dict[tuple, object] = {}
-
-
-def _served_ctx(spark: SparkSession, index_path: str, lex_path=None) -> dict:
-    key = ("ctx", index_path, lex_path)
-    hit = _SERVE_CTX_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from etl_python_airflow_bigquery_spark.operators.ann_index import (
-        make_serve_context,
-    )
-
-    ctx = make_serve_context(spark, index_path, lex_path=lex_path)
-    _SERVE_CTX_CACHE[key] = ctx
-    return ctx
-
-
 # ---------------------------------------------------------------------------
 # MaxSim served from the stored index, at PRODUCTION nprobe
 # ---------------------------------------------------------------------------
@@ -238,9 +198,7 @@ def busqueda_maxsim_indexada_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = _served_index(spark, sf_dir, "full")
-    return busqueda_maxsim_indexada(
-        spark, sf_dir, path, nprobe=_NPROBE, ctx=_served_ctx(spark, path)
-    )
+    return busqueda_maxsim_indexada(spark, sf_dir, path, nprobe=_NPROBE)
 
 
 # ---------------------------------------------------------------------------
@@ -477,8 +435,7 @@ def busqueda_hibrida_indexada_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path, lex = _served_indexes(spark, sf_dir)
     return busqueda_hibrida_indexada(
-        spark, sf_dir, path, nprobe=_NPROBE, lex_path=lex,
-        ctx=_served_ctx(spark, path, lex_path=lex),
+        spark, sf_dir, path, nprobe=_NPROBE, lex_path=lex
     )
 
 
@@ -589,10 +546,7 @@ def etiquetar_por_vecinos_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     arrivals = emb.where(F.expr(_ARRIVAL_WHERE)).select("vec_id", "embedding")
     labels = emb.where(F.expr(_STORED_WHERE)).select("vec_id", "label")
-    return etiquetar_por_vecinos(
-        spark, arrivals, path, labels, k=_ETIQ_K,
-        ctx=_served_ctx(spark, path),
-    )
+    return etiquetar_por_vecinos(spark, arrivals, path, labels, k=_ETIQ_K)
 
 
 # ---------------------------------------------------------------------------
@@ -636,16 +590,25 @@ def _served_indexes(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     )
 
 
-_clear_vec_caches = clear_session_caches
+# busqueda_bm25_indexada's derived query terms per served lexical index
+# (serve setup, not per-request work: a production deployment derives and
+# caches its query terms once)
+_BM25_TERMS_CACHE: dict[str, list[str]] = {}
 
 
-def clear_session_caches() -> None:  # noqa: F811 — deliberate extension
-    """Vector index cache + lexical index cache, one clear."""
-    _clear_vec_caches()
-    while _LEX_CACHE:
-        _shutil.rmtree(
-            _LEX_CACHE.pop(next(iter(_LEX_CACHE))), ignore_errors=True
-        )
+def clear_session_caches() -> None:
+    """Timed harnesses clear this before measuring (the bench honesty
+    invariant) so a serve-path timing always includes its build: the
+    vector and lexical index caches (their discarded dirs reclaimed —
+    the eviction leak, ADVICE r11), the derived BM25 terms and the
+    stored-centroid cache of ``operators/ann_index``."""
+    from etl_python_airflow_bigquery_spark.operators import ann_index
+
+    for cache in (_INDEX_CACHE, _LEX_CACHE):
+        while cache:
+            _shutil.rmtree(cache.pop(next(iter(cache))), ignore_errors=True)
+    _BM25_TERMS_CACHE.clear()
+    ann_index._CENT_CACHE.clear()
 
 
 def _bm25_indexada_oracle() -> str:
@@ -683,11 +646,9 @@ def busqueda_bm25_indexada(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _served_lex_index(spark, sf_dir)
     # term derivation = busqueda_bm25's (selective above the 5% floor),
-    # computed from the stored postings — serve setup, not per-request
-    # work: a production deployment derives/caches its query terms, so
-    # the derived list joins the session serve-context cache (VERDICT
-    # r13 #5) and a warm serve pays only the terms' posting reads
-    terms = _SERVE_CTX_CACHE.get(("terms", path))
+    # computed from the stored postings once per served index, so a warm
+    # serve pays only the terms' posting reads
+    terms = _BM25_TERMS_CACHE.get(path)
     if terms is None:
         n = lex_meta_current(spark, path)["n"]
         df_t = _postings(path).read(spark).groupBy("token").agg(
@@ -700,7 +661,7 @@ def busqueda_bm25_indexada(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(_BM25_TERMS)
             .collect()
         ]
-        _SERVE_CTX_CACHE[("terms", path)] = terms
+        _BM25_TERMS_CACHE[path] = terms
     return search_bm25_lex_index(spark, terms, path, topk=_BM25_TOP)
 
 

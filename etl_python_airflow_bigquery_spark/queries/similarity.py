@@ -16,7 +16,7 @@ import os as _os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_python_airflow_bigquery_spark.functions import ranked_topk
+from etl_python_airflow_bigquery_spark.functions import local_df, ranked_topk
 from etl_python_airflow_bigquery_spark.queries import register
 from etl_python_airflow_bigquery_spark.tables import load_table, rebalance
 
@@ -1681,9 +1681,7 @@ def seleccion_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out_rows: list[tuple[int, int, int]] = []
     if not seed:
-        return spark.createDataFrame(
-            [], "pos bigint, vec_id bigint, d2_sel bigint"
-        )
+        return local_df(spark, [], "pos bigint, vec_id bigint, d2_sel bigint")
     sel_id, sel_ev = seed[0]["vec_id"], list(seed[0]["ev"])
     out_rows.append((1, sel_id, 0))
 
@@ -1711,9 +1709,7 @@ def seleccion_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             rest = rest.where(F.col("vec_id") != sel_id).withColumn(
                 "dm", F.least(F.col("dm"), d2_lit(sel_ev))
             )
-    return spark.createDataFrame(
-        out_rows, "pos bigint, vec_id bigint, d2_sel bigint"
-    )
+    return local_df(spark, out_rows, "pos bigint, vec_id bigint, d2_sel bigint")
 
 
 # --------------------------------------------------------------------------
@@ -5007,7 +5003,7 @@ def dimension_truncada(spark: SparkSession, sf_dir: str) -> DataFrame:
     consultas = enteros.where(F.col("vec_id") % qmod == 0).select(
         F.col("vec_id").alias("query_id"), F.col("ev").alias("qv")
     )
-    dims = spark.createDataFrame([(d,) for d in (*_TRUNC_DIMS, DIM)], "d INT")
+    dims = local_df(spark, [(d,) for d in (*_TRUNC_DIMS, DIM)], "d INT")
     scored = (
         consultas.crossJoin(
             enteros.select(F.col("vec_id").alias("cand_id"), F.col("ev").alias("cv"))

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_python_airflow_bigquery_spark.dims import values_dim
-from etl_python_airflow_bigquery_spark.functions import ranked_topk
+from etl_python_airflow_bigquery_spark.functions import local_df, ranked_topk
 from etl_python_airflow_bigquery_spark.queries import register
 from etl_python_airflow_bigquery_spark.tables import load_table
 
@@ -1281,9 +1281,7 @@ def bpe_fusiones(spark: SparkSession, sf_dir: str) -> DataFrame:
             s = s.replace(chr(u), expanded[u - 1])
         expanded.append(s)
         out.append((t, s, c))
-    return spark.createDataFrame(
-        out, "ronda INT, par STRING, ocurrencias BIGINT"
-    )
+    return local_df(spark, out, "ronda INT, par STRING, ocurrencias BIGINT")
 
 
 # --------------------------------------------------------------------------
@@ -1911,7 +1909,7 @@ def evaluacion_recuperacion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0),
         ).cast("bigint").alias("rr_milli")
     )
-    ks = spark.createDataFrame([(k,) for k in _EVAL_KS], "k BIGINT")
+    ks = local_df(spark, [(k,) for k in _EVAL_KS], "k BIGINT")
     solape = (
         ks.join(
             F.broadcast(pares),
@@ -4345,7 +4343,7 @@ def longitud_contexto(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("toks")
         .agg(F.count(F.lit(1)).cast("bigint").alias("nd"))
     )
-    lens = spark.createDataFrame([(l,) for l in _CONTEXT_LENS], "max_len INT")
+    lens = local_df(spark, [(l,) for l in _CONTEXT_LENS], "max_len INT")
     return (
         lens.join(F.broadcast(hist), F.lit(True), "left")
         .groupBy("max_len")

@@ -667,22 +667,6 @@ def run_hybrid_serve(
         hibrida_corpus_stats,
     )
 
-    from etl_python_airflow_bigquery_spark.operators.ann_index import (
-        make_serve_context,
-    )
-
-    # STREAM-STATIC serve context (VERDICT r12 #1): centroids and the
-    # lexical corpus constants compute ONCE here;
-    # each micro-batch's plan then contains only batch-bounded work
-    # (anchor-pruned reads + probed posting files) — the per-batch JIT
-    # pays for a far smaller plan with no corpus-table subtrees.
-    # nprobe passes through UNRESOLVED (ADVICE r13): None lets
-    # make_serve_context's explicit > calibrated > default ladder run,
-    # so a calibrate_index'd index streams at its measured rung instead
-    # of the hardcoded engine constant.
-    ctx = make_serve_context(
-        spark, index_path, lex_path=lex_path, nprobe=nprobe
-    )
     sink = TxTable(out_path)
     # SRC-keyed fence: survives checkpoint LOSS (wipe + redeliver is a
     # fenced no-op) at the cost of a constraint — the landing dir must
@@ -708,9 +692,12 @@ def run_hybrid_serve(
         if batch_df.isEmpty():
             return
         qids = batch_df.select("query_id").distinct()
+        # nprobe passes through UNRESOLVED (ADVICE r13): the serve
+        # resolves explicit > calibrated > default per batch, so a
+        # calibrate_index run mid-stream reaches the next batch
         out = busqueda_hibrida_indexada_multi(
-            spark, sf_dir, index_path, qids, corpus=corpus,
-            lex_path=lex_path, ctx=ctx,
+            spark, sf_dir, index_path, qids, nprobe=nprobe, corpus=corpus,
+            lex_path=lex_path,
         )
         sink.append(out, txn=(app_id, batch_id))
         _maintain_sink(spark, sink)

@@ -1120,71 +1120,72 @@ def test_calibrate_index_survives_missing_meta(spark, sf_dir, tmp_path):
     assert 0 <= meta["recall_mili_calibrado"] <= 1000
 
 
-def test_serve_context_parity_both_legs(spark, sf_dir, tmp_path):
-    """make_serve_context (VERDICT r12 #1): the stream-static serve
-    context is an OPTIMIZATION, never a semantics change — the hybrid
-    multi serve with ctx equals the self-contained form row for row,
-    with and without a stored lexical index, and search_ivf_index with
-    ctx equals the plain serve."""
-    from etl_python_airflow_bigquery_spark.operators.ann_index import (
-        busqueda_hibrida_indexada_multi,
-        make_serve_context,
-        search_ivf_index,
-    )
-    from etl_python_airflow_bigquery_spark.operators.lex_index import (
-        build_lex_index,
-    )
-    from etl_python_airflow_bigquery_spark.tables import load_table
+def test_serve_caps_parity_both_sides(spark, sf_dir, tmp_path, monkeypatch):
+    """Both sides of every serve cap give the same rows. With
+    ``_ANCHOR_COLLECT_CAP = 0`` every probe ranks the centroids in the
+    Spark window and the hybrid reads its anchors by left-semi join; with
+    ``_CONSULTA_COLLECT_CAP = 0`` the lexical anchor terms stay
+    distributed. Each serve then equals its default (under-cap) run row
+    for row."""
+    from etl_python_airflow_bigquery_spark.operators import ann_index as ai
+    from etl_python_airflow_bigquery_spark.operators import lex_index as li
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "idx")
     build_ivf_index(spark, emb, path)
     lex = str(tmp_path / "lex")
-    build_lex_index(spark, load_table(spark, sf_dir, "documents"), lex)
-
-    qids_l = [0, 7, 19]
-    qids = spark.createDataFrame([(q,) for q in qids_l], "query_id BIGINT")
-
-    # hybrid serve, stored-lex leg: ctx vs no ctx
-    ctx = make_serve_context(spark, path, lex_path=lex)
-    a = sorted(map(tuple, busqueda_hibrida_indexada_multi(
-        spark, sf_dir, path, qids, lex_path=lex
-    ).collect()))
-    b = sorted(map(tuple, busqueda_hibrida_indexada_multi(
-        spark, sf_dir, path, qids, lex_path=lex, ctx=ctx
-    ).collect()))
-    assert a == b and a
-
-    # hybrid serve, inline-corpus leg: ctx (dense side only) vs no ctx
-    ctx2 = make_serve_context(spark, path)
-    c = sorted(map(tuple, busqueda_hibrida_indexada_multi(
-        spark, sf_dir, path, qids
-    ).collect()))
-    d = sorted(map(tuple, busqueda_hibrida_indexada_multi(
-        spark, sf_dir, path, qids, ctx=ctx2
-    ).collect()))
-    assert c == d and c
-
-    # raw dense serve: ctx centroids/nprobe vs table-read centroids
+    li.build_lex_index(spark, load_table(spark, sf_dir, "documents"), lex)
+    qids = spark.createDataFrame([(0,), (7,), (19,)], "query_id BIGINT")
     consultas = _queries_from(spark, emb)
-    e = sorted(map(tuple, search_ivf_index(spark, consultas, path).collect()))
-    f = sorted(map(tuple, search_ivf_index(
-        spark, consultas, path, ctx=ctx
-    ).collect()))
-    assert e == f and e
+
+    def hibrida_lex():
+        return ai.busqueda_hibrida_indexada_multi(
+            spark, sf_dir, path, qids, lex_path=lex
+        )
+
+    serves = {
+        "search": lambda: search_ivf_index(spark, consultas, path),
+        "drift": lambda: ai.recall_drift(spark, consultas, path, v_old=0),
+        "hybrid": lambda: ai.busqueda_hibrida_indexada_multi(
+            spark, sf_dir, path, qids
+        ),
+        "hybrid_lex": hibrida_lex,
+        "maxsim": lambda: ai.busqueda_maxsim_indexada(spark, sf_dir, path),
+    }
+
+    def rows(fn):
+        return sorted(map(tuple, fn().collect()))
+
+    base = {name: rows(fn) for name, fn in serves.items()}
+    assert all(base.values())
+    with monkeypatch.context() as m:
+        m.setattr(ai, "_ANCHOR_COLLECT_CAP", 0)
+        assert {name: rows(fn) for name, fn in serves.items()} == base
+    with monkeypatch.context() as m:
+        m.setattr(li, "_CONSULTA_COLLECT_CAP", 0)
+        assert rows(hibrida_lex) == base["hybrid_lex"]
 
 
-def test_explicit_nprobe_beats_ctx(spark, sf_dir, tmp_path):
-    """ADVICE r13: an explicitly passed nprobe must win over the serve
-    context's resolved value — a caller passing both used to silently
-    get the (possibly stale) ctx rung. With a 1-probe ctx, an explicit
-    full-width nprobe must reproduce the full-probe serve."""
+def _record_calibrated_rung(path: str, rung: int) -> None:
     from etl_python_airflow_bigquery_spark.operators.ann_index import (
-        busqueda_hibrida_indexada_multi,
-        make_serve_context,
+        _write_meta,
         read_index_meta,
     )
-    from etl_python_airflow_bigquery_spark.tables import load_table
+
+    meta = read_index_meta(path)
+    meta["nprobe_calibrado"] = rung
+    _write_meta(path, meta)
+
+
+def test_explicit_nprobe_beats_calibrated_rung(spark, sf_dir, tmp_path):
+    """ADVICE r13: an explicitly passed nprobe wins over the rung
+    ``calibrate_index`` recorded. With ``nprobe_calibrado = 1`` in the
+    metadata, an explicit full-width nprobe reproduces the full-probe
+    serve, and a serve with no nprobe runs at the recorded rung."""
+    from etl_python_airflow_bigquery_spark.operators.ann_index import (
+        busqueda_hibrida_indexada_multi,
+        read_index_meta,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "idx")
@@ -1192,51 +1193,90 @@ def test_explicit_nprobe_beats_ctx(spark, sf_dir, tmp_path):
     k = int(read_index_meta(path)["k"])
     qids = spark.createDataFrame([(0,), (7,)], "query_id BIGINT")
 
-    ctx = make_serve_context(spark, path, nprobe=1)
-    assert ctx["nprobe"] == 1
-    full = sorted(map(tuple, busqueda_hibrida_indexada_multi(
-        spark, sf_dir, path, qids, nprobe=k
-    ).collect()))
-    con_ctx = sorted(map(tuple, busqueda_hibrida_indexada_multi(
-        spark, sf_dir, path, qids, nprobe=k, ctx=ctx
-    ).collect()))
-    assert con_ctx == full and full
-    if k > 1:
-        # and with NO explicit value the ctx rung applies (1-probe serve
-        # genuinely differs from the full probe on this corpus, or the
-        # precedence test would be vacuous)
-        solo_ctx = sorted(map(tuple, busqueda_hibrida_indexada_multi(
-            spark, sf_dir, path, qids, ctx=ctx
+    def serve(**kw):
+        return sorted(map(tuple, busqueda_hibrida_indexada_multi(
+            spark, sf_dir, path, qids, **kw
         ).collect()))
-        assert solo_ctx != full or k == 1
+
+    full, uno = serve(nprobe=k), serve(nprobe=1)
+    _record_calibrated_rung(path, 1)
+    assert serve(nprobe=k) == full and full
+    assert serve() == uno
+    # the 1-probe serve genuinely differs from the full probe on this
+    # corpus, or the precedence check would be vacuous
+    assert uno != full or k == 1
 
 
 def test_hybrid_serve_passes_nprobe_through_unresolved(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, sf_dir, tmp_path
 ):
     """ADVICE r13: run_hybrid_serve must NOT pre-resolve nprobe=None to
-    the engine default — None has to reach make_serve_context so a
-    calibrate_index'd index streams at its measured rung."""
-    from etl_python_airflow_bigquery_spark.operators import ann_index as ai
+    the engine default — on an index with a calibrated rung the stream
+    serves at that rung, row-identical to the one-shot
+    busqueda_hibrida_indexada_multi at the rung (and unlike the serve at
+    the engine default)."""
+    import os
+
+    from etl_python_airflow_bigquery_spark.operators.ann_index import (
+        _NPROBE,
+        busqueda_hibrida_indexada_multi,
+    )
+    from etl_python_airflow_bigquery_spark.operators.txlog import TxTable
     from etl_python_airflow_bigquery_spark.streaming.jobs import (
         run_hybrid_serve,
     )
 
-    visto: list = []
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "idx")
+    build_ivf_index(spark, emb, path)
+    _record_calibrated_rung(path, 1)
+    qids_l = [0, 7, 19]
+    qids = spark.createDataFrame([(q,) for q in qids_l], "query_id BIGINT")
 
-    def _captura(spark_, path_, lex_path=None, nprobe="MISSING", **kw):
-        visto.append(nprobe)
-        raise RuntimeError("stop-after-capture")
+    def serve(nprobe):
+        return sorted(map(tuple, busqueda_hibrida_indexada_multi(
+            spark, sf_dir, path, qids, nprobe=nprobe
+        ).collect()))
 
-    monkeypatch.setattr(ai, "make_serve_context", _captura)
-    try:
-        run_hybrid_serve(
-            spark, str(tmp_path / "src"), sf_dir, str(tmp_path / "idx"),
-            str(tmp_path / "out"), str(tmp_path / "ck"),
-        )
-    except RuntimeError as e:
-        assert "stop-after-capture" in str(e)
-    assert visto == [None]
+    src = str(tmp_path / "stream")
+    os.makedirs(src)
+    qids.coalesce(1).write.parquet(src + "/f1.parquet")
+    out = str(tmp_path / "servido")
+    run_hybrid_serve(spark, src, sf_dir, path, out, str(tmp_path / "ck"))
+    want = serve(1)
+    assert sorted(map(tuple, TxTable(out).read(spark).collect())) == want
+    assert want and want != serve(_NPROBE)
+
+
+def test_centroid_cache_misses_after_inplace_rebuild(spark, sf_dir, tmp_path):
+    """The centroid cache is keyed by the centroid table's version: after
+    an in-place build_ivf_index over another corpus, a serve on the warm
+    cache equals a serve with cleared caches. A path-keyed cache would
+    probe the old centroids against the new postings."""
+    from etl_python_airflow_bigquery_spark.operators.ann_index import (
+        _stored_centroids,
+        read_index_meta,
+    )
+    from etl_python_airflow_bigquery_spark.queries import serving
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "idx")
+    build_ivf_index(spark, emb.where(F.col("vec_id") < 200), path)
+    consultas = _queries_from(spark, emb)
+
+    def serve():
+        return sorted(map(tuple, search_ivf_index(
+            spark, consultas, path, nprobe=2
+        ).collect()))
+
+    antes = serve()  # warms the cache on the first build's centroids
+    k_antes = len(_stored_centroids(spark, path))
+    build_ivf_index(spark, emb, path)
+    assert len(_stored_centroids(spark, path)) == read_index_meta(path)["k"]
+    assert read_index_meta(path)["k"] != k_antes
+    warm = serve()
+    serving.clear_session_caches()
+    assert warm == serve() and warm != antes
 
 
 def test_calibrate_index_auto_extends_ladder_to_target(

@@ -161,6 +161,36 @@ def test_indexed_hybrid_lexical_equals_brute_multi(spark, sf_dir, tmp_path):
     assert served == brute and served
 
 
+def test_lex_serve_after_ingest_matches_cleared_caches(spark, sf_dir, tmp_path):
+    """A hybrid lexical serve after add_to_lex_index scores the postings
+    with the corpus constants of the SAME version, read per call: it
+    equals a serve with cleared session caches and a serve from an index
+    built over every document at once (the index is exact)."""
+    from etl_python_airflow_bigquery_spark.operators.lex_index import (
+        hibrida_lexical_top_multi_indexada,
+    )
+    from etl_python_airflow_bigquery_spark.queries import serving
+
+    docs = load_table(spark, sf_dir, "documents")
+    path = str(tmp_path / "lex")
+    build_lex_index(spark, docs.where(F.col("doc_id") % 10 != 0), path)
+    qids_l = [1, 7, 19]
+
+    def serve(p):
+        return sorted(map(tuple, hibrida_lexical_top_multi_indexada(
+            spark, sf_dir, p, qids_l
+        ).collect()))
+
+    antes = serve(path)
+    add_to_lex_index(spark, docs.where(F.col("doc_id") % 10 == 0), path)
+    despues = serve(path)
+    serving.clear_session_caches()
+    assert serve(path) == despues and despues != antes
+    full = str(tmp_path / "full")
+    build_lex_index(spark, docs, full)
+    assert serve(full) == despues
+
+
 def test_lex_auto_vacuum_soak_bounded_files_and_pinned_reader(
     spark, sf_dir, tmp_path, monkeypatch
 ):
