@@ -30,6 +30,9 @@ from etl_python_airflow_bigquery_spark.queries import REGISTRY  # noqa: E402
 from etl_python_airflow_bigquery_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# the sf of SF_DIR's default: only a run at it rewrites the committed
+# BENCH_LAST.json; any other sf writes BENCH_LAST_sf<sf>.json beside it
+_RECORD_SF = 0.1
 
 # Fixed-membership subtotal for ROUND-OVER-ROUND comparability: the bench
 # set grows as operators land (11→13→17→21+ across rounds), so total_wall
@@ -78,8 +81,8 @@ FAMILIES = {
     # collection + probe projection per dataset serves all six 2-probe
     # consumers in a session. Round 11 renamed the members: the 2-probe
     # forms were PROMOTED to the production names (dedup_semantico /
-    # grafo_knn_mutuo / agrupacion_densidad — formerly *_jerarquico*,
-    # which remain registered aliases), so this family's timing line
+    # grafo_knn_mutuo / agrupacion_densidad — formerly *_jerarquico*;
+    # the alias registrations are gone), so this family's timing line
     # continues the r9/r10 *_jerarquico* series under the new names.
     "hier_probes": {
         "build": "dedup_semantico",
@@ -635,8 +638,12 @@ def main() -> int:
     # parsed:null — the round's official record lost core_wall). The
     # stdout line keeps the contract fields (metric/value/unit/queries/
     # core_wall/sf); spread + families + mart_build live in the file.
+    full_name = (
+        "BENCH_LAST.json" if out["sf"] == _RECORD_SF
+        else f"BENCH_LAST_sf{out['sf']:g}.json"
+    )
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "BENCH_LAST.json")
+                             full_name)
     try:
         with open(full_path, "w") as fh:
             json.dump(out, fh)
@@ -646,7 +653,7 @@ def main() -> int:
     lean = {k: out[k] for k in
             ("metric", "value", "unit", "core_wall", "queries", "sf")}
     lean["noise_index"] = noise_index
-    lean["full"] = "BENCH_LAST.json"
+    lean["full"] = full_name
     line = json.dumps(lean)
     if len(line) > 1900:  # tail-capture guard: drop per-query detail last
         lean["queries"] = {n: timings[n] for n in CORE_12 if n in timings}

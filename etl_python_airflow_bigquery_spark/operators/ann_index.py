@@ -577,59 +577,6 @@ def calibrate_index(
     return int(elegido)
 
 
-def busqueda_hibrida_indexada(
-    spark: SparkSession,
-    sf_dir: str,
-    path: str,
-    nprobe: int = _NPROBE,
-    lex_path: str | None = None,
-) -> DataFrame:
-    """The hybrid retrieval query SERVED FROM THE STORED INDEX — the
-    production path `busqueda_hibrida`'s docstring promises, executed:
-    the lexical ranker is the shared BM25 frame (one definition, both
-    paths), the dense ranker probes the persisted IVF tables instead of
-    scanning the corpus, and the fusion algebra is the shared
-    `rrf_fuse_hibrida` so the two paths can never drift. With
-    ``nprobe`` ≥ the stored cell count the probe covers every posting
-    and the fused output matches the brute registry query row for row
-    (pinned by test; the one theoretical divergence is a dense-top-10
-    near-tie under the index's coarser per-element quantization); at
-    production nprobe it reads nprobe/k of the posting table
-    (file-pruned on ``celda`` stats) and trades that recall for scan
-    cost like any served ANN system."""
-    from etl_python_airflow_bigquery_spark.queries.similarity import (
-        _HIB_Q,
-    )
-    from etl_python_airflow_bigquery_spark.queries.similarity import (
-        hibrida_lexical_top,
-        rrf_fuse_hibrida,
-    )
-    from etl_python_airflow_bigquery_spark.queries.text import _BM25_TOP
-    from etl_python_airflow_bigquery_spark.tables import load_table
-
-    if lex_path is not None:
-        # BOTH legs served from stored indexes: the lexical ranking
-        # reads only the anchor's terms' posting files (lex_index is
-        # exact, so the output is row-identical to the brute frame)
-        from etl_python_airflow_bigquery_spark.operators.lex_index import (
-            hibrida_lexical_top_multi_indexada,
-        )
-
-        lex = hibrida_lexical_top_multi_indexada(
-            spark, sf_dir, lex_path, [_HIB_Q], topk=_BM25_TOP
-        ).select("doc_id", "pos_lex")
-    else:
-        lex = hibrida_lexical_top(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    consulta = _int_vectors(emb.where(F.col("vec_id") == _HIB_Q)).select(
-        F.col("vec_id").alias("query_id"), F.col("ev").alias("qv")
-    )
-    vec = search_ivf_index(
-        spark, consulta, path, nprobe=nprobe, topk=_BM25_TOP
-    ).select(F.col("cand_id").alias("doc_id"), F.col("pos").alias("pos_vec"))
-    return rrf_fuse_hibrida(lex, vec)
-
-
 def busqueda_hibrida_indexada_multi(
     spark: SparkSession,
     sf_dir: str,
@@ -639,18 +586,24 @@ def busqueda_hibrida_indexada_multi(
     corpus=None,
     lex_path: str | None = None,
 ) -> DataFrame:
-    """``busqueda_hibrida_indexada`` generalized to a QUERY SET — the
-    per-batch serve the streaming hybrid job (streaming/jobs.py
-    ``run_hybrid_serve``) runs inside foreachBatch: ``qids`` (query_id)
-    are arriving more-like-this anchors, the lexical ranker is the
-    shared multi-query BM25 frame, the dense ranker probes the stored
-    IVF tables (``search_ivf_index`` is multi-query native, file-pruned
-    to the probed cells), and the fusion is the shared
-    ``rrf_fuse_hibrida_multi``. Output: (query_id, doc_id, rrf_micro,
-    pos_fusion, pos_lex, pos_vec), ≤ top-k rows per query. A query's
-    result depends only on itself and the STORED corpus/index — never
-    on batch-mates — which is what makes the streaming drain equal the
-    one-shot batch call exactly."""
+    """The hybrid retrieval query SERVED FROM THE STORED INDEX, for a
+    QUERY SET — the one stored-index hybrid serve: the registry row
+    ``busqueda_hibrida_indexada`` runs it as a one-query batch, the
+    streaming hybrid job (streaming/jobs.py ``run_hybrid_serve``) inside
+    foreachBatch. ``qids`` (query_id) are more-like-this anchors, the
+    lexical ranker is the shared multi-query BM25 frame (or, with
+    ``lex_path``, the same algebra served from the stored postings), the
+    dense ranker probes the stored IVF tables (``search_ivf_index`` is
+    multi-query native, file-pruned to the probed cells), and the fusion
+    is the shared ``rrf_fuse_hibrida_multi``. With ``nprobe`` ≥ the
+    stored cell count the probe covers every posting and the output
+    matches the brute ``busqueda_hibrida`` row for row (pinned by test;
+    the one theoretical divergence is a dense-top-10 near-tie under the
+    index's coarser per-element quantization). Output: (query_id,
+    doc_id, rrf_micro, pos_fusion, pos_lex, pos_vec), ≤ top-k rows per
+    query. A query's result depends only on itself and the STORED
+    corpus/index — never on batch-mates — which is what makes the
+    streaming drain equal the one-shot batch call exactly."""
     from etl_python_airflow_bigquery_spark.queries.similarity import (
         hibrida_lexical_top_multi,
         rrf_fuse_hibrida_multi,

@@ -316,7 +316,6 @@ def hibrida_lexical_top_multi_indexada(
     sf_dir: str,
     path: str,
     qids: list[int],
-    topk: int = 10,
 ) -> DataFrame:
     """The hybrid's multi-query lexical ranker SERVED FROM THE STORED
     POSTINGS — per arriving anchor, BM25 over its distinct terms with
@@ -325,7 +324,8 @@ def hibrida_lexical_top_multi_indexada(
     lookup and (b) the UNION of their terms' posting files (read_in
     stats pruning). No per-batch tf/dl rebuild: the corpus-scale work
     happened once, at index build. Output (query_id, doc_id, pos_lex),
-    the ranking window partitioned by query_id (WindowGroupLimit).
+    top-{10} per query, the ranking window partitioned by query_id
+    (WindowGroupLimit).
     Algebra identical to queries.similarity.hibrida_lexical_top_multi
     (exact index ⇒ row-identical output, test-pinned). The corpus
     constants and the postings come from ONE version, read per call (the
@@ -333,7 +333,10 @@ def hibrida_lexical_top_multi_indexada(
     score new postings with old constants or the reverse."""
     from pyspark.sql import Window
 
-    from etl_python_airflow_bigquery_spark.queries.text import bm25_scorer
+    from etl_python_airflow_bigquery_spark.queries.text import (
+        _BM25_TOP,
+        bm25_scorer,
+    )
     from etl_python_airflow_bigquery_spark.tables import load_table
 
     meta = lex_meta_current(spark, path)
@@ -397,7 +400,7 @@ def hibrida_lexical_top_multi_indexada(
     w_lex = Window.partitionBy("query_id").orderBy(F.desc("score"), "doc_id")
     return (
         scored.withColumn("pos_lex", F.row_number().over(w_lex))
-        .where(F.col("pos_lex") <= topk)
+        .where(F.col("pos_lex") <= _BM25_TOP)
         .select("query_id", "doc_id", "pos_lex")
     )
 

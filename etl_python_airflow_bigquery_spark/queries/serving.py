@@ -37,6 +37,8 @@ from etl_python_airflow_bigquery_spark.queries.similarity import (
     _MAXSIM_Q,
     _NPROBE,
     _emb,
+    _hibrida_ancla,
+    _hibrida_ancla_sql,
     _kmeans_ctes,
     _path_signature,
     _scaled_dot_sql,
@@ -356,87 +358,83 @@ def deriva_recall_indexada(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _hibrida_indexada_oracle() -> str:
-    """Build+serve replay for the hybrid: the shared BM25 lexical chain
-    (one definition with the brute oracle — `_hibrida_lex_ctes`), a
-    dense side that probes the {np} nearest STORED cells and reranks
-    only their postings by integer cosine over the stored int vectors
-    (exactly `search_ivf_index`'s algebra — NOT the brute query's
-    raw-embedding scaled dot: the index quantizes per element, and the
-    oracle must mirror what serving actually computes), and the shared
-    RRF fusion tail."""
-    from etl_python_airflow_bigquery_spark.queries.similarity import (
-        DIM,
-        _HIB_Q,
-        _hibrida_fusion_sql,
-        _hibrida_lex_ctes,
-    )
+def _hibrida_ivf_vec_sql() -> str:
+    """The stored-index hybrid's dense side as CTEs over
+    ``consultas(query_id)``, ending in ``vec (query_id, doc_id,
+    pos_vec)``: build replay, then each query probes its _NPROBE nearest
+    STORED cells and reranks only their postings by integer cosine over
+    the stored int vectors (exactly `search_ivf_index`'s algebra — NOT
+    the brute query's raw-embedding scaled dot: the index quantizes per
+    element, and the oracle must mirror what serving actually computes).
+    Shared by the batch and streaming stored-index hybrid oracles."""
+    from etl_python_airflow_bigquery_spark.queries.similarity import DIM
     from etl_python_airflow_bigquery_spark.queries.text import _BM25_TOP
 
     dot = lambda a, b: _INT_DOT_SQL.format(dim=DIM, a=a, b=b)  # noqa: E731
-    return (
-        "WITH "
-        + ",\n".join(_kmeans_ctes(_IT))
-        + ",\n"
-        + _hibrida_lex_ctes()
-        + f""",
-q_int AS (SELECT ev AS qv FROM enteros WHERE vec_id = {_HIB_Q}),
+    return ",\n".join(_kmeans_ctes(_IT)) + f""",
+q_int AS (
+    SELECT c.query_id, e.ev AS qv
+    FROM consultas c JOIN enteros e ON e.vec_id = c.query_id
+),
 qd AS (
-    SELECT c.seed_id, {_D2_SQL.format(a="q.qv", b="c.sv")} AS d2
+    SELECT q.query_id, c.seed_id,
+           {_D2_SQL.format(a="q.qv", b="c.sv")} AS d2
     FROM q_int q CROSS JOIN cent{_IT} c
 ),
 probed AS (
-    SELECT seed_id AS celda FROM (
-        SELECT seed_id,
-               row_number() OVER (ORDER BY d2, seed_id) AS rn
+    SELECT query_id, seed_id AS celda FROM (
+        SELECT query_id, seed_id,
+               row_number() OVER (
+                   PARTITION BY query_id ORDER BY d2, seed_id) AS rn
         FROM qd) WHERE rn <= {_NPROBE}
 ),
 nvec AS (SELECT vec_id, {dot("ev", "ev")} AS nn FROM enteros),
 vec AS (
-    SELECT vec_id AS doc_id, pos_vec FROM (
-        SELECT a.vec_id,
+    SELECT query_id, vec_id AS doc_id, pos_vec FROM (
+        SELECT p.query_id, a.vec_id,
                row_number() OVER (
+                   PARTITION BY p.query_id
                    ORDER BY CAST({dot("q.qv", "e.ev")} AS DOUBLE)
                             / sqrt(CAST(nq.nn AS DOUBLE)
                                    * CAST(nc.nn AS DOUBLE)) DESC,
                             a.vec_id) AS pos_vec
         FROM asig{_IT + 1} a
         JOIN probed p ON p.celda = a.celda
+        JOIN q_int q ON q.query_id = p.query_id
         JOIN enteros e ON e.vec_id = a.vec_id
-        CROSS JOIN q_int q
-        JOIN nvec nq ON nq.vec_id = {_HIB_Q}
+        JOIN nvec nq ON nq.vec_id = p.query_id
         JOIN nvec nc ON nc.vec_id = a.vec_id
-        WHERE a.vec_id != {_HIB_Q}
+        WHERE a.vec_id != p.query_id
     ) WHERE pos_vec <= {_BM25_TOP}
-),
-"""
-        + _hibrida_fusion_sql()
-    )
+)"""
 
 
-@register("busqueda_hibrida_indexada", oracle=_hibrida_indexada_oracle(),
+@register("busqueda_hibrida_indexada",
+          oracle=_hibrida_ancla_sql(_hibrida_ivf_vec_sql()),
           ops=("NN2", "O7"), driver=True, bench=True)
 def busqueda_hibrida_indexada_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HYBRID lexical+dense retrieval SERVED FROM THE STORED INDEX at
-    production nprobe — the registered face of
-    ``operators/ann_index.busqueda_hibrida_indexada``. The lexical
-    ranker is the shared BM25 frame, the dense ranker probes the
-    persisted IVF tables instead of scanning the corpus (reads
-    nprobe/k of the postings, file-pruned on celda stats), and the
-    fusion is the shared ``rrf_fuse_hibrida`` — one algebra for the
-    brute and served paths. The oracle replays build+serve at the SAME
-    nprobe, ranking the probed postings by the index's integer-vector
-    cosine (the serving path's arithmetic, not the brute raw-embedding
-    dot), so this row value-checks the SELECTIVE probe itself — not
-    just the full-probe degenerate case the module test pins."""
+    production nprobe — the one anchor ``_HIB_Q`` served as a one-query
+    batch of ``operators/ann_index.busqueda_hibrida_indexada_multi``,
+    query_id dropped. The lexical ranker reads the stored postings, the
+    dense ranker probes the persisted IVF tables instead of scanning the
+    corpus (reads nprobe/k of the postings, file-pruned on celda stats),
+    and the fusion is the shared ``rrf_fuse_hibrida_multi`` — one
+    algebra for the brute, served and streaming paths. The oracle
+    replays build+serve at the SAME nprobe, ranking the probed postings
+    by the index's integer-vector cosine (the serving path's arithmetic,
+    not the brute raw-embedding dot), so this row value-checks the
+    SELECTIVE probe itself — not just the full-probe degenerate case the
+    module test pins."""
     from etl_python_airflow_bigquery_spark.operators.ann_index import (
-        busqueda_hibrida_indexada,
+        busqueda_hibrida_indexada_multi,
     )
 
     path, lex = _served_indexes(spark, sf_dir)
-    return busqueda_hibrida_indexada(
-        spark, sf_dir, path, nprobe=_NPROBE, lex_path=lex
-    )
+    return busqueda_hibrida_indexada_multi(
+        spark, sf_dir, path, _hibrida_ancla(spark), nprobe=_NPROBE,
+        lex_path=lex,
+    ).drop("query_id")
 
 
 # ---------------------------------------------------------------------------

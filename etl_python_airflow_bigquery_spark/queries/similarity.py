@@ -16,7 +16,7 @@ import os as _os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_python_airflow_bigquery_spark.functions import local_df, ranked_topk
+from etl_python_airflow_bigquery_spark.functions import local_df
 from etl_python_airflow_bigquery_spark.queries import register
 from etl_python_airflow_bigquery_spark.tables import load_table, rebalance
 
@@ -492,208 +492,6 @@ _HIB_RRF_K = 60
 _HIB_SCALE = 1_000_000
 
 
-def _hibrida_lex_ctes() -> str:
-    """The hybrid's LEXICAL ranker as a reusable CTE chain ending in
-    ``lex`` (doc_id, pos_lex) — shared by the brute oracle and the
-    stored-index serving oracle (queries/serving.py) so the BM25
-    algebra can never drift between them."""
-    from etl_python_airflow_bigquery_spark.queries.text import (
-        _BM25_B,
-        _BM25_K1,
-        _BM25_TOP,
-        _floor_log2_sql,
-    )
-
-    return f"""tok AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-),
-tf AS (
-    SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf
-    FROM tok WHERE token != '' GROUP BY 1, 2
-),
-dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-stats AS (
-    SELECT (SELECT count(*) FROM documents) AS n,
-           (SELECT sum(dl) * 1000 // count(*) FROM dl) AS avgdl_mili
-),
-consulta AS (SELECT DISTINCT token FROM tf WHERE doc_id = {_HIB_Q}),
-df AS (
-    SELECT t.token, count(*) AS df FROM tf t
-    JOIN consulta q ON q.token = t.token GROUP BY 1
-),
-pesos AS (
-    SELECT d.token,
-           {_floor_log2_sql("greatest(1, (s.n * 1000) // (d.df * 1000 + 500))")}
-               AS idf_q
-    FROM df d, stats s
-),
-lex AS (
-    SELECT doc_id, pos_lex FROM (
-        SELECT t.doc_id,
-               row_number() OVER (
-                   ORDER BY sum(
-                       ((t.tf * {_BM25_K1 + 1000} * 1000)
-                        // (t.tf * 1000
-                            + ({_BM25_K1} * (1000 - {_BM25_B}
-                               + (({_BM25_B} * d.dl * 1000)
-                                  // s.avgdl_mili))) // 1000))
-                       * w.idf_q
-                   ) DESC, t.doc_id) AS pos_lex
-        FROM tf t
-        JOIN pesos w USING (token)
-        JOIN dl d USING (doc_id)
-        CROSS JOIN stats s
-        WHERE t.doc_id != {_HIB_Q}
-        GROUP BY t.doc_id
-    ) WHERE pos_lex <= {_BM25_TOP}
-)"""
-
-
-def _hibrida_fusion_sql() -> str:
-    """The RRF fusion CTE + final projection over ``lex`` and ``vec`` —
-    the SQL mirror of ``rrf_fuse_hibrida``, shared by both hybrid
-    oracles."""
-    from etl_python_airflow_bigquery_spark.queries.text import _BM25_TOP
-
-    return f"""fusion AS (
-    SELECT COALESCE(l.doc_id, v.doc_id) AS doc_id,
-           COALESCE({_HIB_SCALE} // ({_HIB_RRF_K} + l.pos_lex), 0)
-           + COALESCE({_HIB_SCALE} // ({_HIB_RRF_K} + v.pos_vec), 0) AS rrf,
-           l.pos_lex, v.pos_vec
-    FROM lex l FULL OUTER JOIN vec v ON v.doc_id = l.doc_id
-)
-SELECT doc_id, rrf_micro, pos_fusion, pos_lex, pos_vec FROM (
-    SELECT doc_id, CAST(rrf AS BIGINT) AS rrf_micro,
-           CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS BIGINT)
-               AS pos_fusion,
-           CAST(pos_lex AS BIGINT) AS pos_lex,
-           CAST(pos_vec AS BIGINT) AS pos_vec
-    FROM fusion
-) WHERE pos_fusion <= {_BM25_TOP}"""
-
-
-def _hibrida_oracle() -> str:
-    from etl_python_airflow_bigquery_spark.queries.text import _BM25_TOP
-
-    return (
-        "WITH "
-        + _hibrida_lex_ctes()
-        + ",\n"
-        + _NORMS_SQL.strip()
-        + f""",
-q_emb AS (SELECT embedding FROM embeddings WHERE vec_id = {_HIB_Q}),
-vec AS (
-    SELECT vec_id AS doc_id, pos_vec FROM (
-        SELECT c.vec_id,
-               row_number() OVER (
-                   ORDER BY CAST({_scaled_dot_sql("q.embedding", "c.embedding")}
-                                 AS DOUBLE)
-                            / sqrt(CAST(nq.nn AS DOUBLE)
-                                   * CAST(nc.nn AS DOUBLE)) DESC,
-                            c.vec_id) AS pos_vec
-        FROM embeddings c
-        CROSS JOIN q_emb q
-        JOIN norms nq ON nq.vec_id = {_HIB_Q}
-        JOIN norms nc ON nc.vec_id = c.vec_id
-        WHERE c.vec_id != {_HIB_Q}
-    ) WHERE pos_vec <= {_BM25_TOP}
-),
-"""
-        + _hibrida_fusion_sql()
-    )
-
-
-def hibrida_lexical_top(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The hybrid's LEXICAL ranker as a reusable frame: BM25 over the
-    query document's distinct terms, top-{10} as (doc_id, pos_lex).
-    Consumed by busqueda_hibrida (brute dense side) and by
-    operators/ann_index.busqueda_hibrida_indexada (stored-IVF dense
-    side) — one lexical definition, two serving paths. Corpus stats
-    come from the shared ``hibrida_corpus_stats`` (one tf/dl/n/avgdl
-    definition with the multi-query and streaming forms)."""
-    from etl_python_airflow_bigquery_spark.queries.text import (
-        _BM25_TOP,
-        bm25_scorer,
-    )
-
-    tf, dl, n, avgdl_mili = hibrida_corpus_stats(spark, sf_dir)
-    consulta = (
-        tf.where(F.col("doc_id") == _HIB_Q).select("token").distinct()
-    )
-    df_t = tf.join(F.broadcast(consulta), "token").groupBy("token").agg(
-        F.count(F.lit(1)).alias("df")
-    )
-    idf_q, score = bm25_scorer(n, avgdl_mili)
-    pesos = df_t.select("token", idf_q)
-    scored = (
-        tf.where(F.col("doc_id") != _HIB_Q)
-        .join(F.broadcast(pesos), "token")
-        .join(dl, "doc_id")
-        .groupBy("doc_id")
-        .agg(score.alias("score"))
-    )
-    # top-k via TakeOrderedAndProject, never a single-task full sort of
-    # the candidate set (for common query terms ≈ the corpus) — the
-    # position column ranks only the ≤k survivors (VERDICT r11).
-    return ranked_topk(
-        scored, _BM25_TOP, [F.desc("score"), F.col("doc_id")], "pos_lex"
-    ).select("doc_id", "pos_lex")
-
-
-def rrf_fuse_hibrida(lex: DataFrame, vec: DataFrame) -> DataFrame:
-    """RRF-fuse (doc_id, pos_lex) × (doc_id, pos_vec) into the hybrid's
-    output shape — shared by both serving paths so the fusion algebra
-    can never drift between them.
-
-    PRECONDITION (ADVICE r14): each input side must carry a doc_id at
-    most once — both callers produce top-k rankings via row_number, so
-    this holds by construction. The union+max rewrite below is exact
-    ONLY under that key-uniqueness; a non-deduplicated side would get
-    its positions silently merged via max where the old full-outer join
-    would have surfaced duplicate rows."""
-    from etl_python_airflow_bigquery_spark.queries.text import _BM25_TOP
-
-    # full-outer-by-key as ONE aggregation instead of a join: each side
-    # carries a doc at most once (top-k per ranker), so union + max per
-    # doc reproduces the outer join's (pos_lex, pos_vec) rows exactly —
-    # and the k-bounded sides stop paying a SortMergeJoin (2 Exchanges +
-    # 2 Sorts → 1 Exchange with partial aggregation, guide §2.4)
-    unidos = lex.select(
-        "doc_id", "pos_lex", F.lit(None).cast("bigint").alias("pos_vec")
-    ).unionByName(
-        vec.select(
-            "doc_id", F.lit(None).cast("bigint").alias("pos_lex"), "pos_vec"
-        )
-    )
-    fusion = unidos.groupBy("doc_id").agg(
-        F.max("pos_lex").alias("pos_lex"), F.max("pos_vec").alias("pos_vec")
-    ).select(
-        "doc_id",
-        (
-            F.coalesce(
-                F.expr(f"{_HIB_SCALE} div ({_HIB_RRF_K} + pos_lex)"), F.lit(0)
-            )
-            + F.coalesce(
-                F.expr(f"{_HIB_SCALE} div ({_HIB_RRF_K} + pos_vec)"), F.lit(0)
-            )
-        ).alias("rrf"),
-        "pos_lex",
-        "pos_vec",
-    )
-    w_f = Window.orderBy(F.desc("rrf"), "doc_id")
-    return (
-        fusion.withColumn("pos_fusion", F.row_number().over(w_f))
-        .where(F.col("pos_fusion") <= _BM25_TOP)
-        .select(
-            "doc_id",
-            F.col("rrf").cast("bigint").alias("rrf_micro"),
-            F.col("pos_fusion").cast("bigint").alias("pos_fusion"),
-            F.col("pos_lex").cast("bigint").alias("pos_lex"),
-            F.col("pos_vec").cast("bigint").alias("pos_vec"),
-        )
-    )
-
-
 def hibrida_corpus_stats(spark: SparkSession, sf_dir: str):
     """The lexical corpus statistics the hybrid ranker serves from —
     (tf, dl, n, avgdl_mili). Factored out so a STREAMING serve computes
@@ -719,13 +517,13 @@ def hibrida_corpus_stats(spark: SparkSession, sf_dir: str):
 def hibrida_lexical_top_multi(
     spark: SparkSession, sf_dir: str, qids: DataFrame, corpus=None
 ) -> DataFrame:
-    """The hybrid's lexical ranker GENERALIZED TO A QUERY SET —
-    (query_id, doc_id, pos_lex): per arriving query document, BM25 over
-    its distinct terms, top-{10} per query. Same constants and integer
-    algebra as ``hibrida_lexical_top`` (the single-anchor form keeps
-    its TakeOrdered plan); here the ranking window partitions by
-    query_id, so per-group state is top-k-bounded and Spark pushes a
-    WindowGroupLimit — scale-safe at any query-batch size. ``qids`` is
+    """The hybrid's lexical ranker over a QUERY SET — (query_id,
+    doc_id, pos_lex): per query document, BM25 over its distinct terms
+    (the integer ladder of ``queries.text.bm25_scorer``), top-{10} per
+    query. The ranking window partitions by query_id, so Spark pushes a
+    WindowGroupLimit below the Exchange: each partition ships at most
+    top-k rows per query, at any batch size — one query included, which
+    is how ``busqueda_hibrida`` serves its single anchor. ``qids`` is
     batch-sized (the arrivals), always broadcast. ``corpus``: a
     precomputed ``hibrida_corpus_stats`` tuple — pass it when serving
     many batches so the corpus scan happens once."""
@@ -737,11 +535,12 @@ def hibrida_lexical_top_multi(
     tf, dl, n, avgdl_mili = (
         corpus if corpus is not None else hibrida_corpus_stats(spark, sf_dir)
     )
-    consulta = (
-        tf.join(F.broadcast(qids), tf["doc_id"] == qids["query_id"])
-        .select("query_id", "token")
-        .distinct()
-    )
+    # a left-semi join pushes below tf's aggregate and token explode, so
+    # only the query documents are tokenized for their term sets; tf is
+    # (doc_id, token)-unique, so no distinct is needed
+    consulta = tf.join(
+        F.broadcast(qids), tf["doc_id"] == qids["query_id"], "left_semi"
+    ).select(F.col("doc_id").alias("query_id"), "token")
     df_t = (
         tf.join(F.broadcast(consulta.select("token").distinct()), "token")
         .groupBy("token")
@@ -750,7 +549,9 @@ def hibrida_lexical_top_multi(
     idf_q, score = bm25_scorer(n, avgdl_mili)
     pesos = df_t.select("token", idf_q)
     scored = (
-        tf.join(F.broadcast(consulta.join(pesos, "token")), "token")
+        tf.join(
+            F.broadcast(consulta.join(F.broadcast(pesos), "token")), "token"
+        )
         .where(F.col("doc_id") != F.col("query_id"))
         .join(dl, "doc_id")
         .groupBy("query_id", "doc_id")
@@ -765,16 +566,25 @@ def hibrida_lexical_top_multi(
 
 
 def rrf_fuse_hibrida_multi(lex: DataFrame, vec: DataFrame) -> DataFrame:
-    """``rrf_fuse_hibrida`` keyed by query: fuse (query_id, doc_id,
-    pos_lex) × (query_id, doc_id, pos_vec), ranking within each query —
-    the fusion input is ≤ 2·top-k rows PER QUERY, and the window
-    partitions by query_id, so the stage is bounded at any arrival
-    rate. Same PRECONDITION as ``rrf_fuse_hibrida``: each side must be
-    (query_id, doc_id)-unique (both callers rank with row_number)."""
+    """RRF-fuse (query_id, doc_id, pos_lex) × (query_id, doc_id,
+    pos_vec) into the hybrid's output shape, ranking within each query —
+    the one fusion of every hybrid serve. The fusion input is ≤ 2·top-k
+    rows PER QUERY and the window partitions by query_id, so the stage
+    is bounded at any arrival rate.
+
+    PRECONDITION (ADVICE r14): each side must be (query_id,
+    doc_id)-unique — every caller ranks with row_number, so this holds
+    by construction. The union+max rewrite below is exact ONLY under
+    that key-uniqueness; a non-deduplicated side would get its
+    positions silently merged via max where a full-outer join would
+    have surfaced duplicate rows."""
     from etl_python_airflow_bigquery_spark.queries.text import _BM25_TOP
 
-    # same union+aggregate outer-join rewrite as rrf_fuse_hibrida (one
-    # definition per key grain): ≤ 2·top-k rows per query, one Exchange
+    # full-outer-by-key as ONE aggregation instead of a join: each side
+    # carries a key at most once, so union + max per key reproduces the
+    # outer join's (pos_lex, pos_vec) rows exactly — and the k-bounded
+    # sides stop paying a SortMergeJoin (2 Exchanges + 2 Sorts → 1
+    # Exchange with partial aggregation, guide §2.4)
     unidos = lex.select(
         "query_id", "doc_id", "pos_lex",
         F.lit(None).cast("bigint").alias("pos_vec"),
@@ -816,11 +626,10 @@ def rrf_fuse_hibrida_multi(lex: DataFrame, vec: DataFrame) -> DataFrame:
 
 
 def _hibrida_lex_ctes_multi() -> str:
-    """``_hibrida_lex_ctes`` keyed by query_id — expects a preceding
-    ``consultas(query_id)`` CTE naming the arriving query documents;
-    ends in ``lex (query_id, doc_id, pos_lex)``. Shared by the
-    streaming hybrid serve's oracle so the multi-query BM25 algebra has
-    exactly one SQL definition."""
+    """The hybrid's LEXICAL ranker as a CTE chain keyed by query_id —
+    expects a preceding ``consultas(query_id)`` CTE naming the query
+    documents; ends in ``lex (query_id, doc_id, pos_lex)``. The one SQL
+    definition of the hybrid's BM25 algebra (``_hibrida_sql``)."""
     from etl_python_airflow_bigquery_spark.queries.text import (
         _BM25_B,
         _BM25_K1,
@@ -878,7 +687,7 @@ lex AS (
 
 
 def _hibrida_fusion_sql_multi() -> str:
-    """``_hibrida_fusion_sql`` keyed by query_id — the SQL mirror of
+    """The RRF fusion CTE + final projection — the SQL mirror of
     ``rrf_fuse_hibrida_multi`` over ``lex``/``vec`` CTEs that carry
     (query_id, doc_id, pos_*)."""
     from etl_python_airflow_bigquery_spark.queries.text import _BM25_TOP
@@ -903,6 +712,63 @@ SELECT query_id, doc_id, rrf_micro, pos_fusion, pos_lex, pos_vec FROM (
 ) WHERE pos_fusion <= {_BM25_TOP}"""
 
 
+def _hibrida_ancla(spark: SparkSession) -> DataFrame:
+    """The registry rows' one anchor ``_HIB_Q`` as a one-query batch. A
+    SQL literal row plans as a LocalTableScan, so collecting or
+    broadcasting it runs no job; a pickled one-row frame pays a
+    Python-worker task per use (~0.36 s per collect, 4 cores)."""
+    return spark.sql(f"SELECT CAST({_HIB_Q} AS BIGINT) AS query_id")
+
+
+def _hibrida_sql(consultas: str, vec: str) -> str:
+    """The query-keyed hybrid as one DuckDB statement: ``consultas``
+    CTEs ending in ``consultas(query_id)``, the shared BM25 chain,
+    ``vec`` CTEs ending in ``vec (query_id, doc_id, pos_vec)`` and the
+    shared RRF tail — every hybrid oracle, brute, stored-index and
+    streaming, is this statement with its own dense side."""
+    return (
+        "WITH " + consultas + ",\n" + _hibrida_lex_ctes_multi() + ",\n"
+        + vec + ",\n" + _hibrida_fusion_sql_multi()
+    )
+
+
+def _hibrida_ancla_sql(vec: str) -> str:
+    """``_hibrida_sql`` for the registry rows' one anchor ``_HIB_Q``,
+    query_id dropped as the Spark side drops it."""
+    return (
+        "SELECT doc_id, rrf_micro, pos_fusion, pos_lex, pos_vec FROM (\n"
+        + _hibrida_sql(f"consultas AS (SELECT {_HIB_Q} AS query_id)", vec)
+        + "\n)"
+    )
+
+
+def _hibrida_oracle() -> str:
+    from etl_python_airflow_bigquery_spark.queries.text import _BM25_TOP
+
+    return _hibrida_ancla_sql(
+        _NORMS_SQL.strip()
+        + f""",
+vec AS (
+    SELECT query_id, doc_id, pos_vec FROM (
+        SELECT q.query_id, c.vec_id AS doc_id,
+               row_number() OVER (
+                   PARTITION BY q.query_id
+                   ORDER BY CAST({_scaled_dot_sql("qe.embedding", "c.embedding")}
+                                 AS DOUBLE)
+                            / sqrt(CAST(nq.nn AS DOUBLE)
+                                   * CAST(nc.nn AS DOUBLE)) DESC,
+                            c.vec_id) AS pos_vec
+        FROM consultas q
+        JOIN embeddings qe ON qe.vec_id = q.query_id
+        JOIN norms nq ON nq.vec_id = q.query_id
+        CROSS JOIN embeddings c
+        JOIN norms nc ON nc.vec_id = c.vec_id
+        WHERE c.vec_id != q.query_id
+    ) WHERE pos_vec <= {_BM25_TOP}
+)"""
+    )
+
+
 @register("busqueda_hibrida", oracle=_hibrida_oracle(),
           ops=("NN1", "O7", "J11"), bench=True)
 def busqueda_hibrida(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -920,47 +786,54 @@ def busqueda_hibrida(spark: SparkSession, sf_dir: str) -> DataFrame:
     rare terms the embedding smooths away, dense catches paraphrases
     sharing no tokens, which is the entire argument for hybrid.
 
-    Scale shape: the lexical side is one posting join over the query
-    terms' lists; the dense side is one broadcast-query scan (map-side
-    integer dots); both truncate to top-10 BEFORE the fusion join, so
-    fusion is O(top-k) at any corpus size. At production scale the
-    dense scan drops to the stored IVF index and the lexical side to
-    the persisted postings mirror — both already built in this repo
-    (operators/ann_index.busqueda_hibrida_indexada IS that dense path,
-    full-probe-equal to this query by test)."""
+    The anchor is served as a one-query batch of the query-keyed path
+    (``hibrida_lexical_top_multi`` + ``rrf_fuse_hibrida_multi``), and
+    query_id is dropped from the output. Scale shape: the lexical side
+    is one posting join over the query terms' lists; the dense side is
+    one broadcast-query scan (map-side integer dots); both rank in
+    query-partitioned windows whose WindowGroupLimit bounds each
+    partition to top-10 rows BEFORE any Exchange, so fusion is O(top-k)
+    at any corpus size. At production scale the dense scan drops to the
+    stored IVF index and the lexical side to the persisted postings —
+    ``operators/ann_index.busqueda_hibrida_indexada_multi``,
+    full-probe-equal to this query by test."""
     from etl_python_airflow_bigquery_spark.queries.text import _BM25_TOP
 
-    lex = hibrida_lexical_top(spark, sf_dir)
+    qids = _hibrida_ancla(spark)
+    lex = hibrida_lexical_top_multi(spark, sf_dir, qids)
     emb = _emb(spark, sf_dir)
     norms = _norms(spark, sf_dir)
-    q = emb.where(F.col("vec_id") == _HIB_Q).select(
-        F.col("embedding").alias("q_emb")
+    q = emb.join(
+        F.broadcast(qids), emb["vec_id"] == qids["query_id"], "left_semi"
+    ).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        scaled_dot(F.col("embedding"), F.col("embedding")).alias("nq"),
     )
-    fila_nq = norms.where(F.col("vec_id") == _HIB_Q).select("nn").first()
-    # empty corpus (or missing anchor): the dense side is empty anyway —
-    # any nonzero norm keeps the expression well-typed
-    nq = int(fila_nq["nn"]) if fila_nq is not None else 1
     puntuado = (
-        emb.where(F.col("vec_id") != _HIB_Q)
-        .crossJoin(F.broadcast(q))
+        emb.crossJoin(F.broadcast(q))
+        .where(F.col("vec_id") != F.col("query_id"))
         .select(
+            "query_id",
             F.col("vec_id").alias("doc_id"),
             scaled_dot(F.col("q_emb"), F.col("embedding")).alias("dot"),
+            "nq",
         )
         .join(
             F.broadcast(norms.select(F.col("vec_id").alias("doc_id"), "nn")),
             "doc_id",
         )
         .withColumn(
-            "cos", cosine_from_ints(F.col("dot"), F.lit(nq), F.col("nn"))
+            "cos", cosine_from_ints(F.col("dot"), F.col("nq"), F.col("nn"))
         )
     )
-    # dense leg top-k via TakeOrderedAndProject over the corpus-grain
-    # scored frame — same fix as the lexical leg (VERDICT r11)
-    vec = ranked_topk(
-        puntuado, _BM25_TOP, [F.desc("cos"), F.col("doc_id")], "pos_vec"
-    ).select("doc_id", "pos_vec")
-    return rrf_fuse_hibrida(lex, vec)
+    w_vec = Window.partitionBy("query_id").orderBy(F.desc("cos"), "doc_id")
+    vec = (
+        puntuado.withColumn("pos_vec", F.row_number().over(w_vec))
+        .where(F.col("pos_vec") <= _BM25_TOP)
+        .select("query_id", "doc_id", "pos_vec")
+    )
+    return rrf_fuse_hibrida_multi(lex, vec).drop("query_id")
 
 
 # --------------------------------------------------------------------------
@@ -5386,12 +5259,10 @@ GROUP BY 1"""
 
 @register("dedup_semantico", oracle=_SEMDEDUP_H_ORACLE,
           ops=("DD5", "NN2"), bench=True, driver=True)
-@register("dedup_semantico_jerarquico", oracle=_SEMDEDUP_H_ORACLE,
-          ops=("DD5", "NN2"), driver=False)
 def dedup_semantico(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE production SemDeDup (promoted round 11, VERDICT r10 #1 —
-    ``dedup_semantico_jerarquico`` remains a back-compat alias; the old
-    flat form is the pytest-tier ``dedup_semantico_plano`` baseline).
+    """THE production SemDeDup (promoted round 11, VERDICT r10 #1; the
+    old flat form is the pytest-tier ``dedup_semantico_plano``
+    baseline).
 
     SemDeDup over the HIERARCHICAL index with a 2-leaf probe — the
     scale form of the flat K_CAP=64 baseline (SCALING.md's K_CAP item): pair
@@ -5510,12 +5381,9 @@ GROUP BY 1, mx.m"""
 
 @register("grafo_knn_mutuo", oracle=_KNN_H_ORACLE,
           ops=("NN2", "O7", "A1"), bench=True, driver=False)
-@register("grafo_knn_mutuo_jerarquico", oracle=_KNN_H_ORACLE,
-          ops=("NN2", "O7", "A1"), driver=False)
 def grafo_knn_mutuo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE production mutual-kNN graph (promoted round 11, VERDICT r10
-    #1 — ``grafo_knn_mutuo_jerarquico`` remains a back-compat alias; the
-    old flat form is the pytest-tier ``grafo_knn_mutuo_plano``
+    #1; the old flat form is the pytest-tier ``grafo_knn_mutuo_plano``
     baseline).
 
     Mutual-kNN graph over the HIERARCHICAL 2-probe index — the scale
@@ -5592,12 +5460,9 @@ GROUP BY 1"""
 
 @register("agrupacion_densidad", oracle=_DENSIDAD_H_ORACLE,
           ops=("NN2", "DD4", "A1"), bench=True, driver=False)
-@register("agrupacion_densidad_jerarquica", oracle=_DENSIDAD_H_ORACLE,
-          ops=("NN2", "DD4", "A1"), driver=False)
 def agrupacion_densidad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE production density clustering (promoted round 11, VERDICT
-    r10 #1 — ``agrupacion_densidad_jerarquica`` remains a back-compat
-    alias; the old flat form is the pytest-tier
+    r10 #1; the old flat form is the pytest-tier
     ``agrupacion_densidad_plana`` baseline).
 
     Density clustering over the HIERARCHICAL 2-probe mutual-kNN graph
@@ -5942,7 +5807,7 @@ def clasificador_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagate labels from a seed set — per-label accuracy exposes the
     classes whose neighborhoods are polluted (where etiquetado_debil's
     votes need a higher threshold). Candidates, distances, and
-    tie-breaks are exactly grafo_knn_mutuo_jerarquico's; the vote adds
+    tie-breaks are exactly grafo_knn_mutuo's; the vote adds
     one (src, label) aggregate and one src-sized argmax window."""
     knn, _prim = _knn_probe_edges(spark, sf_dir)
     emb = _emb(spark, sf_dir)

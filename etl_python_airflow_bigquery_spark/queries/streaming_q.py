@@ -893,78 +893,26 @@ _HIB_STREAM_QUERIES = 3  # deterministic arrival set: ~3 anchors at any sf
 
 def _hibrida_stream_oracle() -> str:
     """Build+serve replay for the STREAMING hybrid: the deterministic
-    arrival set (doc_id % (n_docs // {q}) == 0), the shared multi-query
-    BM25 lexical chain, a dense side probing the replayed index build's
-    nearest cells PER QUERY (search_ivf_index's algebra, partitioned by
-    query), and the shared multi-query RRF fusion tail. One SQL
-    definition with the batch serving oracle's pieces — the algebra
-    cannot drift between the batch and streaming faces."""
+    arrival set (doc_id % (n_docs // {q}) == 0) over the same
+    query-keyed statement and stored-index dense side as the batch
+    ``busqueda_hibrida_indexada`` oracle — the algebra cannot drift
+    between the batch and streaming faces."""
     from etl_python_airflow_bigquery_spark.queries.serving import (
-        _INT_DOT_SQL,
-        _IT,
+        _hibrida_ivf_vec_sql,
     )
     from etl_python_airflow_bigquery_spark.queries.similarity import (
-        DIM,
-        _D2_SQL,
-        _NPROBE,
-        _hibrida_fusion_sql_multi,
-        _hibrida_lex_ctes_multi,
-        _kmeans_ctes,
+        _hibrida_sql,
     )
-    from etl_python_airflow_bigquery_spark.queries.text import _BM25_TOP
 
-    dot = lambda a, b: _INT_DOT_SQL.format(dim=DIM, a=a, b=b)  # noqa: E731
-    return (
-        "WITH "
-        + ",\n".join(_kmeans_ctes(_IT))
-        + f""",
-qmodq AS (
+    return _hibrida_sql(
+        f"""qmodq AS (
     SELECT greatest(1, count(*) // {_HIB_STREAM_QUERIES}) AS m
     FROM documents
 ),
 consultas AS (
     SELECT doc_id AS query_id FROM documents, qmodq WHERE doc_id % m = 0
-),
-"""
-        + _hibrida_lex_ctes_multi()
-        + f""",
-q_int AS (
-    SELECT c.query_id, e.ev AS qv
-    FROM consultas c JOIN enteros e ON e.vec_id = c.query_id
-),
-qd AS (
-    SELECT q.query_id, c.seed_id,
-           {_D2_SQL.format(a="q.qv", b="c.sv")} AS d2
-    FROM q_int q CROSS JOIN cent{_IT} c
-),
-probed AS (
-    SELECT query_id, seed_id AS celda FROM (
-        SELECT query_id, seed_id,
-               row_number() OVER (
-                   PARTITION BY query_id ORDER BY d2, seed_id) AS rn
-        FROM qd) WHERE rn <= {_NPROBE}
-),
-nvec AS (SELECT vec_id, {dot("ev", "ev")} AS nn FROM enteros),
-vec AS (
-    SELECT query_id, vec_id AS doc_id, pos_vec FROM (
-        SELECT p.query_id, a.vec_id,
-               row_number() OVER (
-                   PARTITION BY p.query_id
-                   ORDER BY CAST({dot("q.qv", "e.ev")} AS DOUBLE)
-                            / sqrt(CAST(nq.nn AS DOUBLE)
-                                   * CAST(nc.nn AS DOUBLE)) DESC,
-                            a.vec_id) AS pos_vec
-        FROM asig{_IT + 1} a
-        JOIN probed p ON p.celda = a.celda
-        JOIN q_int q ON q.query_id = p.query_id
-        JOIN enteros e ON e.vec_id = a.vec_id
-        JOIN nvec nq ON nq.vec_id = p.query_id
-        JOIN nvec nc ON nc.vec_id = a.vec_id
-        WHERE a.vec_id != p.query_id
-    ) WHERE pos_vec <= {_BM25_TOP}
-),
-"""
-        + _hibrida_fusion_sql_multi()
+)""",
+        _hibrida_ivf_vec_sql(),
     )
 
 

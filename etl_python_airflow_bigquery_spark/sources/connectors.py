@@ -4,7 +4,7 @@ The reference pulls from a metrics REST API (JSON + CSV-export), GA
 report APIs, a holidays API, Postgres, and local CSV/Excel, always
 landing in a driver-side frame before the heavy work. The engine keeps
 the same split: a THIN driver-side fetch (HTTP/JDBC — never on the hot
-path), then ``spark.createDataFrame`` / ``spark.read`` with an EXPLICIT
+path), then ``functions.local_df`` / ``spark.read`` with an EXPLICIT
 schema so Catalyst sees typed columns from row one (§1.3: explicit
 schemas on every source read; inference is an extra scan at scale).
 
@@ -20,6 +20,8 @@ import time
 from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+from etl_python_airflow_bigquery_spark.functions import local_df
 
 US_PER_HOUR = 3_600_000_000
 
@@ -78,7 +80,7 @@ def rest_metrics_source(
     for w_start, w_end in windows:
         spec = dict(query_spec, date_start_us=w_start, date_end_us=w_end)
         rows.extend(with_retry(lambda s=spec: fetcher(s), retries=retries))
-    return spark.createDataFrame(rows, schema=schema)  # type: ignore[arg-type]
+    return local_df(spark, rows, schema)
 
 
 def csv_export_source(
@@ -143,7 +145,7 @@ def ga_source(
 ) -> DataFrame:
     """S6: GA4/Firebase batch reports → typed DataFrame."""
     rows = [r for rep in reports for r in ga_report_rows(rep)]
-    return spark.createDataFrame(rows, schema=schema)  # type: ignore[arg-type]
+    return local_df(spark, rows, schema)
 
 
 def ga3_report_rows(report: dict) -> Iterator[dict]:
@@ -171,7 +173,7 @@ def ga3_source(
     """S5: GA3 batch reports → typed DataFrame (column names keep the
     ``ga:`` prefix — quote them with backticks in the DDL schema)."""
     rows = [r for rep in reports for r in ga3_report_rows(rep)]
-    return spark.createDataFrame(rows, schema=schema)  # type: ignore[arg-type]
+    return local_df(spark, rows, schema)
 
 
 def ga3_batch_tables(
@@ -192,7 +194,7 @@ def ga3_batch_tables(
         rows = list(ga3_report_rows(report))
         if not rows:
             continue
-        df = spark.createDataFrame(rows, schema=schemas[key])  # type: ignore[arg-type]
+        df = local_df(spark, rows, schemas[key])
         if drop_unknown_col is not None and drop_unknown_col in (
             f.name for f in df.schema.fields
         ):
@@ -272,7 +274,8 @@ def feriados_source(
     from pyspark.sql import functions as F
 
     payload = with_retry(fetcher, retries=retries)
-    feriados = spark.createDataFrame(
+    feriados = local_df(
+        spark,
         feriados_rows(payload),
         "fecha STRING, feriado BOOLEAN, irrenunciable BOOLEAN, descripcion STRING",
     )

@@ -641,8 +641,9 @@ def run_hybrid_serve(
     nprobe: int | None = None,
     lex_path: str | None = None,
 ) -> None:
-    """STREAMING HYBRID SERVE — ``busqueda_hibrida_indexada``'s
-    production face, completing the stored-index streaming quartet
+    """STREAMING HYBRID SERVE — ``busqueda_hibrida_indexada_multi``
+    per micro-batch (the registry row ``busqueda_hibrida_indexada`` is
+    its one-query batch), completing the stored-index streaming quartet
     (index growth, semantic-dedup gate, weak labels, HYBRID RETRIEVAL):
     more-like-this query anchors arrive as landed files (rows carrying
     ``query_id``), and each micro-batch RRF-fuses the shared multi-query
@@ -749,7 +750,6 @@ def run_semdedup_ingest(
     )
 
     _, vec_tx = _tables(index_path)
-    cent = _stored_centroids(spark, index_path)
     # SRC-keyed fence (see run_hybrid_serve): checkpoint-loss recovery
     # is test-pinned here, and the gate is additionally idempotent at
     # the DATA level — a replayed arrival is dropped as a duplicate of
@@ -766,6 +766,10 @@ def run_semdedup_ingest(
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        # per batch (a cached, version-keyed read): an in-place
+        # build_ivf_index rebuild mid-stream reaches the next batch, so
+        # arrivals are never assigned to old cells against new postings
+        cent = _stored_centroids(spark, index_path)
         enteros = _int_vectors(batch_df)
         asig = (
             _assign_cells(enteros, cent, keep_ev=True)

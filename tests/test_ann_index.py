@@ -259,10 +259,10 @@ def test_recall_drift_across_versions(spark, sf_dir, tmp_path):
 
 
 def test_indexed_hybrid_matches_brute_at_full_probe(spark, sf_dir, tmp_path):
-    """busqueda_hibrida_indexada IS the registry query's promised
-    production path: same shared lexical frame, same shared fusion
-    algebra, dense side served from the stored IVF tables. At full
-    probe (nprobe >= cells) the posting coverage equals the brute scan
+    """The stored-index hybrid, one anchor served as a one-query batch,
+    IS the registry query's promised production path: same shared
+    lexical frame, same shared fusion algebra, dense side served from
+    the stored IVF tables. At full probe (nprobe >= cells) the posting coverage equals the brute scan
     and the fused output matches row for row. (The index stores
     per-element 1e6-floored ints while the brute path floors per-term
     at 1e12 — a near-tie in the dense top-10 could in principle order
@@ -272,24 +272,27 @@ def test_indexed_hybrid_matches_brute_at_full_probe(spark, sf_dir, tmp_path):
     is checked for high fused-set recall rather than exact order."""
     from etl_python_airflow_bigquery_spark.operators.ann_index import (
         build_ivf_index,
-        busqueda_hibrida_indexada,
+        busqueda_hibrida_indexada_multi,
     )
     from etl_python_airflow_bigquery_spark.queries.similarity import (
+        _HIB_Q,
         busqueda_hibrida,
     )
     from etl_python_airflow_bigquery_spark.tables import load_table
 
     path = str(tmp_path / "idx")
     build_ivf_index(spark, load_table(spark, sf_dir, "embeddings"), path)
+    uno = spark.createDataFrame([(_HIB_Q,)], "query_id BIGINT")
+
+    def served(**kw):
+        return busqueda_hibrida_indexada_multi(
+            spark, sf_dir, path, uno, **kw
+        ).drop("query_id")
+
     brute = sorted(tuple(r) for r in busqueda_hibrida(spark, sf_dir).collect())
-    full = sorted(
-        tuple(r)
-        for r in busqueda_hibrida_indexada(
-            spark, sf_dir, path, nprobe=10_000
-        ).collect()
-    )
+    full = sorted(tuple(r) for r in served(nprobe=10_000).collect())
     assert full == brute
-    dflt = busqueda_hibrida_indexada(spark, sf_dir, path).collect()
+    dflt = served().collect()
     brute_docs = {r[0] for r in brute}
     assert len({r["doc_id"] for r in dflt} & brute_docs) >= 7
     # lexical provenance is the SAME frame on both paths
@@ -354,6 +357,77 @@ def test_streaming_semdedup_gate(spark, sf_dir, tmp_path):
     run_semdedup_ingest(spark, src, path, str(tmp_path / "ck"), tau=0.9)
     assert vec_tx.version() == v0 + 1
     assert vec_tx.read(spark).count() == n0 + 1
+
+
+def test_semdedup_gate_reads_rebuilt_centroids(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """An in-place build_ivf_index rebuild between two micro-batches of
+    one run_semdedup_ingest reaches the second batch: its appended cells
+    are the assignment against the REBUILT centroids, not the ones the
+    stream started with."""
+    import os
+
+    from etl_python_airflow_bigquery_spark.operators.ann_index import (
+        _stored_centroids,
+    )
+    from etl_python_airflow_bigquery_spark.operators.txlog import TxTable
+    from etl_python_airflow_bigquery_spark.queries.similarity import (
+        _assign_cells,
+    )
+    from etl_python_airflow_bigquery_spark.streaming import jobs
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "idx")
+    build_ivf_index(spark, emb.where(F.col("vec_id") % 2 == 0), path)
+    viejos = _stored_centroids(spark, path)
+
+    # arrivals: vectors neither build indexes, re-keyed; corpus max
+    # pairwise cos ~0.47 < tau, so every arrival is admitted
+    src = str(tmp_path / "stream")
+    os.makedirs(src)
+    for i, resto in ((1, 1), (2, 5)):
+        emb.where(F.col("vec_id") % 6 == resto).select(
+            (F.col("vec_id") + 8_000_000 * i).alias("vec_id"),
+            "embedding",
+            "label",
+        ).coalesce(1).write.parquet(f"{src}/f{i}.parquet")
+
+    drain = jobs._drain_landed
+
+    def drain_rebuilding(spark_, src_dir, checkpoint, fn):
+        def fn_rebuilding(batch_df, batch_id):
+            fn(batch_df, batch_id)
+            if batch_id == 0:  # rebuild in place on a different subset
+                build_ivf_index(
+                    spark, emb.where(F.col("vec_id") % 3 == 0), path
+                )
+
+        drain(spark_, src_dir, checkpoint, fn_rebuilding)
+
+    monkeypatch.setattr(jobs, "_drain_landed", drain_rebuilding)
+    jobs.run_semdedup_ingest(spark, src, path, str(tmp_path / "ck"), tau=0.9)
+
+    nuevos = _stored_centroids(spark, path)
+    lote2 = _int_vectors(
+        spark.read.parquet(f"{src}/f2.parquet")
+    ).localCheckpoint(eager=True)
+    want = {
+        r["vec_id"]: r["celda"]
+        for r in _assign_cells(lote2, nuevos).collect()
+    }
+    stale = {
+        r["vec_id"]: r["celda"]
+        for r in _assign_cells(lote2, viejos).collect()
+    }
+    assert want and want != stale  # the rebuild moved the cells
+    got = {
+        r["vec_id"]: r["celda"]
+        for r in TxTable(f"{path}/vectores").read(spark)
+        .where(F.col("vec_id") >= 16_000_000)
+        .collect()
+    }
+    assert got == want
 
 
 def test_assign_2probe_matches_numpy_top2(spark, sf_dir):
@@ -964,12 +1038,10 @@ def test_streaming_hybrid_serve_matches_batch(spark, sf_dir, tmp_path):
     row for row (a query's fused ranking depends only on the query and
     the STORED corpus/index, never on batch-mates), the served table
     lands one manifest flip per batch, and replaying the drained stream
-    is a no-op (txn fence + checkpoint). The single-anchor batch serve
-    is also the multi form's degenerate case (one algebra, two faces)."""
+    is a no-op (txn fence + checkpoint)."""
     import os
 
     from etl_python_airflow_bigquery_spark.operators.ann_index import (
-        busqueda_hibrida_indexada,
         busqueda_hibrida_indexada_multi,
     )
     from etl_python_airflow_bigquery_spark.operators.txlog import TxTable
@@ -989,20 +1061,6 @@ def test_streaming_hybrid_serve_matches_batch(spark, sf_dir, tmp_path):
         ).collect())
     )
     assert want
-
-    # the single-anchor serve is the degenerate case of the multi form
-    uno = spark.createDataFrame([(0,)], "query_id BIGINT")
-    multi0 = sorted(
-        (r["doc_id"], r["pos_fusion"], r["pos_lex"], r["pos_vec"])
-        for r in busqueda_hibrida_indexada_multi(
-            spark, sf_dir, path, uno
-        ).collect()
-    )
-    solo = sorted(
-        (r["doc_id"], r["pos_fusion"], r["pos_lex"], r["pos_vec"])
-        for r in busqueda_hibrida_indexada(spark, sf_dir, path).collect()
-    )
-    assert multi0 == solo
 
     # stream the anchors in two files -> two micro-batches
     src = str(tmp_path / "stream")

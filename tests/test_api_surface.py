@@ -227,23 +227,15 @@ def test_every_survey2_op_has_a_coverage_row():
     assert absent == [], f"SURVEY §2 tags missing from COVERAGE.md: {absent}"
 
 
-def test_bm25_expressions_have_one_spark_side_home():
-    """The integer BM25 tf-saturation and idf expressions are built in
-    exactly one Spark-side function (queries.text.bm25_scorer), shared
-    by the brute queries and the stored-index serves. Spark SQL writes
-    integer division as ``div``; the DuckDB oracles (``//``) keep their
-    own copy as the independent check and are not matched here."""
+def _spark_side_homes(rx) -> set[tuple[str, str]]:
+    """(module path, innermost enclosing function) of every match of
+    ``rx`` in the engine package's source."""
     import ast
-    import re
 
     import etl_python_airflow_bigquery_spark as pkg
 
-    firmas = {
-        "tf saturation": re.compile(r"div \(tf \* 1000 \+"),
-        "idf ladder": re.compile(r"div \(df \* 1000 \+ 500\)"),
-    }
     raiz = os.path.dirname(pkg.__file__)
-    hogares = {k: set() for k in firmas}
+    hogares = set()
     for carpeta, _dirs, files in os.walk(raiz):
         for f in files:
             if not f.endswith(".py"):
@@ -254,20 +246,61 @@ def test_bm25_expressions_have_one_spark_side_home():
                 n for n in ast.walk(ast.parse(src))
                 if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
             ]
-            for k, rx in firmas.items():
-                for m in rx.finditer(src):
-                    linea = src.count("\n", 0, m.start()) + 1
-                    dentro = [
-                        fn for fn in funcs
-                        if fn.lineno <= linea <= fn.end_lineno
-                    ]
-                    nombre = (
-                        min(dentro, key=lambda fn: fn.end_lineno - fn.lineno).name
-                        if dentro else "<module>"
-                    )
-                    hogares[k].add((os.path.relpath(ruta, raiz), nombre))
-    for k, donde in hogares.items():
+            for m in rx.finditer(src):
+                linea = src.count("\n", 0, m.start()) + 1
+                dentro = [
+                    fn for fn in funcs
+                    if fn.lineno <= linea <= fn.end_lineno
+                ]
+                nombre = (
+                    min(dentro, key=lambda fn: fn.end_lineno - fn.lineno).name
+                    if dentro else "<module>"
+                )
+                hogares.add((os.path.relpath(ruta, raiz), nombre))
+    return hogares
+
+
+def test_bm25_expressions_have_one_spark_side_home():
+    """The integer BM25 tf-saturation and idf expressions are built in
+    exactly one Spark-side function (queries.text.bm25_scorer), shared
+    by the brute queries and the stored-index serves. Spark SQL writes
+    integer division as ``div``; the DuckDB oracles (``//``) keep their
+    own copy as the independent check and are not matched here."""
+    import re
+
+    firmas = {
+        "tf saturation": re.compile(r"div \(tf \* 1000 \+"),
+        "idf ladder": re.compile(r"div \(df \* 1000 \+ 500\)"),
+    }
+    for k, rx in firmas.items():
+        donde = _spark_side_homes(rx)
         assert donde == {("queries/text.py", "bm25_scorer")}, (k, sorted(donde))
+
+
+def test_rrf_fusion_has_one_spark_side_home():
+    """The hybrid's integer RRF term is built in exactly one Spark-side
+    function (queries.similarity.rrf_fuse_hibrida_multi): the brute,
+    stored-index and streaming hybrid serves all fuse through it. The
+    DuckDB oracles (``//``) are not matched."""
+    import re
+
+    donde = _spark_side_homes(
+        re.compile(r"div \((?:\{_HIB_RRF_K\}|\d+) \+ pos_")
+    )
+    assert donde == {("queries/similarity.py", "rrf_fuse_hibrida_multi")}, \
+        sorted(donde)
+
+
+def test_every_registry_fn_has_one_name():
+    """No function is registered under two names: an alias row re-runs
+    the same plan against the same oracle and checks nothing new."""
+    from etl_python_airflow_bigquery_spark.queries import REGISTRY
+
+    nombres: dict[int, list[str]] = {}
+    for name, q in REGISTRY.items():
+        nombres.setdefault(id(q.fn), []).append(name)
+    dobles = sorted(sorted(v) for v in nombres.values() if len(v) > 1)
+    assert not dobles, dobles
 
 
 def test_thread_overlap_has_one_home():

@@ -144,10 +144,7 @@ SMOKE = [
     "streaming_cuotas_fuentes",
     "tiempo_entre_eventos",
     # round-9 hierarchical 2-probe family
-    "dedup_semantico_jerarquico",
     "streaming_reglas_ventana",
-    "grafo_knn_mutuo_jerarquico",
-    "agrupacion_densidad_jerarquica",
     "proveedores_morosos",
     "stock_excedente",
     "clientes_sin_contacto",

@@ -649,9 +649,6 @@ def test_round8_ops_no_cartesian(spark, sf_dir, name):
 @pytest.mark.parametrize(
     "name",
     [
-        "dedup_semantico_jerarquico",
-        "grafo_knn_mutuo_jerarquico",
-        "agrupacion_densidad_jerarquica",
         "cobertura_sondas",
         "streaming_reglas_ventana",
         "proveedores_morosos",
@@ -715,10 +712,34 @@ def test_topk_windows_are_bounded(spark, sf_dir, name):
     input. Residual Window operators are allowed only ABOVE a
     TakeOrdered/limit (they rank the ≤k survivors): in the printed
     plan tree a Window's subtree prints after it, so every Window
-    occurrence must be followed by a TakeOrderedAndProject below it."""
+    occurrence must be followed by a TakeOrderedAndProject below it.
+
+    The hybrid rows serve their anchor as a one-query batch of the
+    query-keyed path instead: every ranking Window must have a
+    ``WindowGroupLimit … Partial`` in its subtree, so each partition
+    ships at most k rows per query before any merge — the same bound
+    TakeOrderedAndProject gives."""
     plan = plan_of(spark, sf_dir, name)
-    assert "TakeOrderedAndProject" in plan
     lines = plan.splitlines()
+    if name in ("busqueda_hibrida", "busqueda_hibrida_indexada"):
+        def col(line):
+            return len(line) - len(line.lstrip(" :+-*"))
+
+        ranks = [i for i, l in enumerate(lines) if "Window [row_number()" in l]
+        assert ranks, plan
+        for i in ranks:
+            sub = []
+            for line in lines[i + 1:]:
+                if col(line) <= col(lines[i]):
+                    break
+                sub.append(line)
+            assert any(
+                "WindowGroupLimit" in l and l.rstrip().endswith(", Partial")
+                for l in sub
+            ), f"{name}: ranking Window at plan line {i} has no partial " \
+                f"group limit below it:\n{lines[i]}"
+        return
+    assert "TakeOrderedAndProject" in plan
     for i, line in enumerate(lines):
         if "Window [" not in line:
             continue

@@ -46,7 +46,7 @@ def test_sf1_dedup_semantico_plano_conservation_and_bounds(spark, n_vectors):
 
 
 def test_sf1_dedup_semantico_jerarquico_conservation(spark, n_vectors):
-    rows = REGISTRY["dedup_semantico_jerarquico"].fn(spark, SF1).collect()
+    rows = REGISTRY["dedup_semantico"].fn(spark, SF1).collect()
     assert sum(r["vecs"] for r in rows) == n_vectors  # leaves partition n
     assert len(rows) > 64  # the point of the hierarchy: leaves > K_CAP
     for r in rows:
@@ -91,7 +91,7 @@ def test_sf1_knn_mutuo_jerarquico_bounds(spark):
         _KNN_GRAFO_K,
     )
 
-    rows = REGISTRY["grafo_knn_mutuo_jerarquico"].fn(spark, SF1).collect()
+    rows = REGISTRY["grafo_knn_mutuo"].fn(spark, SF1).collect()
     assert len(rows) > 64  # leaf census, past the flat cap
     for r in rows:
         assert 0 < r["aristas_knn"] <= _KNN_GRAFO_K * r["miembros"]
@@ -122,7 +122,7 @@ def test_sf1_densidad_jerarquica_bounds(spark):
     The cross-leaf rescue property is pinned on the organic corpus at
     sf0.01 (test_similarity_recall.py::
     test_two_probe_rescues_cross_leaf_clusters)."""
-    rows = REGISTRY["agrupacion_densidad_jerarquica"].fn(spark, SF1).collect()
+    rows = REGISTRY["agrupacion_densidad"].fn(spark, SF1).collect()
     assert rows
     for r in rows:
         assert r["miembros"] >= 2

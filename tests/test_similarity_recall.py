@@ -275,7 +275,7 @@ def test_two_probe_rescues_cross_leaf_clusters(spark):
     """Density clustering over the 2-probe graph must produce clusters
     whose members span MULTIPLE primary leaves — exactly the clusters
     single-cell blocking would have split."""
-    rows = REGISTRY["agrupacion_densidad_jerarquica"].fn(spark, SF_DIR).collect()
+    rows = REGISTRY["agrupacion_densidad"].fn(spark, SF_DIR).collect()
     assert rows and any(r["hoja_min"] != r["hoja_max"] for r in rows)
 
 
@@ -339,14 +339,12 @@ def test_rrf_fuse_union_form_equals_full_outer(spark):
     """Round-14 optimization pin: the union+max-per-key RRF fuse must
     equal the full-outer-join form it replaced — overlapping docs get
     both positions, one-sided docs keep a NULL partner rank, and the
-    fused ranking (rrf desc, doc_id) is identical. Checked for both the
-    single-anchor and the query-keyed multi fuse."""
+    fused ranking (rrf desc, doc_id) is identical per query."""
     from pyspark.sql import functions as F
 
     from etl_python_airflow_bigquery_spark.queries.similarity import (
         _HIB_RRF_K,
         _HIB_SCALE,
-        rrf_fuse_hibrida,
         rrf_fuse_hibrida_multi,
     )
 
@@ -392,19 +390,3 @@ def test_rrf_fuse_union_form_equals_full_outer(spark):
         )
         for pos, (d2, v2) in enumerate(orden, start=1):
             assert v2[3] == pos, (q, d2, v2)
-
-    # single-anchor: key doc_id only
-    got1 = {
-        r["doc_id"]: (r["rrf_micro"], r["pos_lex"], r["pos_vec"])
-        for r in rrf_fuse_hibrida(
-            lex.where("query_id = 1").drop("query_id"),
-            vec.where("query_id = 1").drop("query_id"),
-        ).collect()
-    }
-    ref1 = _reference(
-        lex.where("query_id = 1").collect(),
-        vec.where("query_id = 1").collect(),
-        ("doc_id",),
-    )
-    for d, rrf, pl, pv in ref1:
-        assert got1[d] == (rrf, pl, pv), (d, got1[d])

@@ -14,17 +14,17 @@ from etl_python_airflow_bigquery_spark.queries import REGISTRY
 # tags parsed out of SURVEY.md §2, so a new §2 row cannot silently lack a
 # COVERAGE.md line (VERDICT r8 #7).
 OP_LABELS = {
-    "S1": "REST JSON metrics source (sources/connectors.py:63)",
-    "S2": "CSV-over-HTTP export source (sources/connectors.py:84)",
-    "S3": "chunked 12H ingestion (sources/connectors.py:49)",
+    "S1": "REST JSON metrics source (sources/connectors.py:65)",
+    "S2": "CSV-over-HTTP export source (sources/connectors.py:86)",
+    "S3": "chunked 12H ingestion (sources/connectors.py:51)",
     "S4": "warehouse SQL pull (tables.py:86)",
     "S5": "GA3 (Universal Analytics) report source",
     "S6": "GA4/Firebase report source",
-    "S7": "holidays API source (sources/connectors.py:236)",
-    "S8": "Postgres/JDBC source (sources/connectors.py:98)",
+    "S7": "holidays API source (sources/connectors.py:238)",
+    "S8": "Postgres/JDBC source (sources/connectors.py:100)",
     "S9": "local CSV source (tables.py:34)",
     "S10": "MaxMind mmdb lookup (operators/enrich.py:150)",
-    "S11": "config source (sources/connectors.py:230)",
+    "S11": "config source (sources/connectors.py:232)",
     "K1": "partitioned+clustered append (operators/writes.py:33)",
     "K2": "truncate-replace (operators/writes.py:33)",
     "K3": "delete-window-then-append (operators/writes.py:50, txlog.py TxTable.replace_where/replace_partitions)",
@@ -65,7 +65,7 @@ OP_LABELS = {
     "G1": "DAG fan-out/fan-in (orchestration.py:43)",
     "G2": "cross-job trigger with wait (orchestration.py:43)",
     "G3": "success/failure flags — RunManifest (orchestration.py:30)",
-    "G4": "retries with backoff (sources/connectors.py:29)",
+    "G4": "retries with backoff (sources/connectors.py:31)",
     "G5": "holiday-gated execution (orchestration.py:43)",
     "G6": "parametric job matrix (orchestration.py:96)",
     "ST1": "streaming tumbling windows + watermark",
